@@ -716,7 +716,7 @@ def _banding_vs_brute_diffs(docs, k: int = 3, max_reps: int = _BRUTE_REPS_BOUND)
             "hamming",
             F.bit_count(F.col("l._sig").bitwiseXOR(F.col("r._sig"))).cast("int"),
         )
-        .filter(F.col("hamming") <= 3)
+        .filter(F.col("hamming") <= k)
         .select(
             F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"), "hamming"
         )

@@ -13,6 +13,7 @@ from functools import lru_cache
 from pyspark.sql import functions as F
 
 from ..operators import similarity as SIM
+from ..sources import parallelize
 from ..tables import load
 from . import query
 from .oracle_util import grams_expr
@@ -1921,26 +1922,12 @@ def ann_cosine_topk_batch(spark, sf_dir):
     from pyspark.sql import Window as W
 
     emb = load(spark, sf_dir, "embeddings")
-    # pure-JVM bounded query table (createDataFrame would boot Python
-    # workers for 4 rows — the write_pq_codes _meta discipline)
     qdf = F.broadcast(
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(qid).cast("bigint").alias("query_id"),
-                            F.array(
-                                *[F.lit(float(x)) for x in q]
-                            ).alias("qv"),
-                        )
-                        for qid, q in enumerate(_query_vecs())
-                    ]
-                )
-            ).alias("_q")
+        parallelize(
+            spark,
+            [(qid, [float(x) for x in q]) for qid, q in enumerate(_query_vecs())],
+            "query_id bigint not null, qv array<double> not null",
         )
-        .select("_q.query_id", "_q.qv")
     )
     scored = emb.join(qdf).select(
         "query_id",

@@ -1436,8 +1436,15 @@ def simhash64_hamming_pairs(
     its brute arm; tools/ab_simhash_lossless.py fingerprint-asserts
     the shared form identical). The frame must be the same-config
     derivation — a drifted reps table would silently change the pair
-    set."""
+    set, so its schema is checked: exactly {_id, _sig} with _sig
+    bigint, else ValueError."""
     if shared_reps is not None:
+        types = dict(shared_reps.dtypes)
+        if set(types) != {"_id", "_sig"} or types["_sig"] != "bigint":
+            raise ValueError(
+                "shared_reps must have exactly the columns {_id, _sig} with "
+                f"_sig bigint; got {shared_reps.dtypes}"
+            )
         reps = shared_reps
     else:
         sigs = simhash64(df, id_col, text_col).select(

@@ -20,6 +20,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import parallelize
 from ._iterloop import (
     adjacency_cache,
     chunked_adjacency,
@@ -1264,20 +1265,9 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         prev_nodes, prev_edges = n_nodes, n_edges
     e.unpersist()
     deg.unpersist()
-    return spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("bigint").alias("round"),
-                        F.lit(nn).cast("bigint").alias("n_nodes"),
-                        F.lit(ne).cast("bigint").alias("n_edges"),
-                    )
-                    for r, nn, ne in out
-                ]
-            )
-        ).alias("_r")
-    ).select("_r.round", "_r.n_nodes", "_r.n_edges")
+    return parallelize(
+        spark, out, "round bigint not null, n_nodes bigint not null, n_edges bigint not null"
+    )
 
 
 def kcore_numbers(

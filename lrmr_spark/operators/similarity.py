@@ -20,6 +20,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import parallelize
 from ._meta_io import read_meta_row, write_meta_row
 
 __all__ = [
@@ -1689,22 +1690,9 @@ def perceptron_train(
         out_rows.append((it, int(row["m"]), sum(abs(wi) for wi in w)))
 
     base.unpersist()  # the result below is literal — release the working set
-    # bounded result table built JVM-side (no createDataFrame: one
-    # explode over literal structs keeps the Python worker out of it)
-    return spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(it).cast("bigint").alias("iter"),
-                        F.lit(m).cast("bigint").alias("n_mistakes"),
-                        F.lit(l1).cast("bigint").alias("w_l1"),
-                    )
-                    for it, m, l1 in out_rows
-                ]
-            )
-        ).alias("_r")
-    ).select("_r.iter", "_r.n_mistakes", "_r.w_l1")
+    return parallelize(
+        spark, out_rows, "iter bigint not null, n_mistakes bigint not null, w_l1 bigint not null"
+    )
 
 
 def delete_ivfpq_index(spark, path: str, ids: list[int]) -> int:

@@ -18,6 +18,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import parallelize
 from ._meta_io import (
     TornMetaError,
     overwrite_parquet_swap,
@@ -730,9 +731,7 @@ def match_winnowing_index(
     if meta.get("empty", False):
         base_t = meta.get("id_type", "bigint")
         new_t = df.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"new_id {new_t}, base_id {base_t}, n_shared bigint"
-        )
+        return parallelize(spark, [], f"new_id {new_t}, base_id {base_t}, n_shared bigint")
     k, w, max_df = int(meta["k"]), int(meta["w"]), int(meta["max_df"])
     batch = winnowing_postings(df, id_col, text_col, k, w).select(
         F.col("_id").alias("new_id"), "fp"

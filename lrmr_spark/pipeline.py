@@ -33,6 +33,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import sources
 from .job import JobHandle, Result, start_background
 
 __all__ = ["Pipeline"]
@@ -73,7 +74,7 @@ class Pipeline:
 
         Mirror of ``lrmr.Parallelize`` (/root/reference/lrmr.go:12-14,
         input feeder /root/reference/input.go:24-31)."""
-        return cls(spark.createDataFrame(data, schema=schema))
+        return cls(sources.parallelize(spark, data, schema))
 
     @classmethod
     def from_local_file(cls, spark: SparkSession, path: str) -> "Pipeline":
@@ -84,13 +85,7 @@ class Pipeline:
         (/root/reference/input.go:11-22); a downstream flat_map parses.
         At scale, prefer :meth:`read` — Spark's file sources split,
         prune, and push down natively."""
-        import os
-
-        paths = []
-        for root, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                paths.append((os.path.join(root, f),))
-        return cls(spark.createDataFrame(paths, schema="value string"))
+        return cls(sources.local_file_paths(spark, path))
 
     @classmethod
     def read(cls, spark: SparkSession, fmt: str, path: str, **options: Any) -> "Pipeline":

@@ -20,11 +20,36 @@ gated behind try-imports and raise a clear error in this container.
 
 from __future__ import annotations
 
+import decimal
 import os
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
 from typing import Any
 
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DayTimeIntervalType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    NullType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _create_converter,
+    _make_type_verifier,
+)
 
 __all__ = [
     "parallelize",
@@ -45,8 +70,130 @@ __all__ = [
 
 
 def parallelize(spark: SparkSession, data: Iterable[Any], schema: Any = None) -> DataFrame:
-    """Mirror of lrmr.Parallelize (/root/reference/lrmr.go:12-14)."""
-    return spark.createDataFrame(data, schema=schema)
+    """Mirror of lrmr.Parallelize (reference lrmr.go:12-14).
+
+    Driver-side rows → DataFrame: the engine's one in-memory source.
+
+    Takes the schema forms ``spark.createDataFrame`` takes (DDL string,
+    ``StructType``, atomic ``DataType``, ``None`` or a list of names),
+    runs its row verifier where it does, and converts rows with its
+    converters — so values, types and errors are the same. The rows
+    then land as an Arrow table instead of a Python RDD: below
+    ``spark.sql.execution.arrow.localRelationThreshold`` the frame is a
+    ``LocalRelation``, projections and filters fold into it, and an
+    action runs as a ``LocalTableScan`` with no Spark job and no Python
+    worker; above it the table ships as a JVM-side Arrow RDD, still
+    with no Python worker. Schemas holding a type Arrow cannot carry
+    (UDT, variant, intervals other than day-time) or a decimal below
+    the top level keep ``createDataFrame``'s row path. A pandas
+    DataFrame, ndarray, ``pyarrow.Table``, RDD or DataFrame goes to
+    ``createDataFrame`` unchanged."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if _taken_whole(data):
+        return spark.createDataFrame(data, schema)
+    rows = data if isinstance(data, list) else list(data)
+    struct, rows = _resolve_rows(spark, rows, schema)
+    if not all(_arrow_carries(f.dataType) for f in struct.fields):
+        return spark.createDataFrame(rows, schema=struct, verifySchema=False)
+    arrow_schema = to_arrow_schema(struct)
+    internal = [struct.toInternal(r) for r in rows]
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(_fit(col, f.dataType), type=af.type)
+            for col, f, af in zip(columns, struct.fields, arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
+
+
+def _taken_whole(data: Any) -> bool:
+    """Inputs ``createDataFrame`` reads as a whole, not as an iterable
+    of rows."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.core.rdd import RDD
+
+    return isinstance(data, (pd.DataFrame, np.ndarray, pa.Table, RDD, DataFrame))
+
+
+def _resolve_rows(spark: SparkSession, rows: list, schema: Any) -> tuple[StructType, list]:
+    """``createDataFrame``'s schema resolution and row preparation
+    (``SparkSession._create_dataframe`` / ``_createFromLocal``): returns
+    the struct and the rows as tuples in its field order."""
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    if isinstance(schema, StructType):
+        struct, verify = schema, _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+    elif isinstance(schema, DataType):
+        verify = _make_type_verifier(schema, name="field value")
+        for r in rows:
+            verify(r)
+        struct, rows = StructType().add("value", schema), [(r,) for r in rows]
+    elif schema is None or isinstance(schema, (list, tuple)):
+        struct = spark._inferSchemaFromList(rows, names=schema)
+        # convert before renaming: dict rows are read by their inferred keys
+        convert = _create_converter(struct)
+        for i, name in enumerate(schema or ()):
+            struct.fields[i].name = struct.names[i] = name
+        return struct, [convert(r) for r in rows]
+    else:
+        raise PySparkTypeError(
+            errorClass="NOT_LIST_OR_NONE_OR_STRUCT",
+            messageParameters={"arg_name": "schema", "arg_type": type(schema).__name__},
+        )
+    convert = _create_converter(struct)
+    return struct, [convert(r) for r in rows]
+
+
+_ARROW_ATOMIC = (
+    BooleanType,
+    ByteType,
+    ShortType,
+    IntegerType,
+    LongType,
+    FloatType,
+    DoubleType,
+    DecimalType,
+    StringType,
+    BinaryType,
+    DateType,
+    TimestampType,
+    TimestampNTZType,
+    DayTimeIntervalType,
+    NullType,
+)
+
+
+def _arrow_carries(dt: DataType, nested: bool = False) -> bool:
+    """Whether every value of ``dt`` crosses to Arrow from its internal
+    (``toInternal``) form unchanged. Nested decimals are refused: only
+    top-level ones get ``_fit``'s rounding."""
+    if isinstance(dt, StructType):
+        return all(_arrow_carries(f.dataType, True) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _arrow_carries(dt.elementType, True)
+    if isinstance(dt, MapType):
+        return _arrow_carries(dt.keyType, True) and _arrow_carries(dt.valueType, True)
+    if nested and isinstance(dt, DecimalType):
+        return False
+    return type(dt) in _ARROW_ATOMIC
+
+
+def _fit(col: Sequence[Any], dt: DataType) -> Sequence[Any]:
+    """Round top-level decimals to the column's scale the way the JVM
+    does on the row path (HALF_UP); Arrow refuses to drop digits."""
+    if not isinstance(dt, DecimalType):
+        return col
+    q = decimal.Decimal(1).scaleb(-dt.scale)
+    ctx = decimal.Context(prec=38, rounding=decimal.ROUND_HALF_UP)  # Spark's max precision
+    return [None if v is None else v.quantize(q, context=ctx) for v in col]
 
 
 def local_file_paths(spark: SparkSession, path: str) -> DataFrame:
@@ -57,7 +204,7 @@ def local_file_paths(spark: SparkSession, path: str) -> DataFrame:
     for root, _dirs, files in os.walk(path):
         for f in sorted(files):
             paths.append((os.path.join(root, f),))
-    return spark.createDataFrame(paths, schema="value string")
+    return parallelize(spark, paths, "value string")
 
 
 def read_csv(

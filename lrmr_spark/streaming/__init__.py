@@ -34,6 +34,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources import parallelize
+
 __all__ = [
     "stream_events",
     "tumbling_counts",
@@ -632,7 +634,7 @@ def run_minhash_index_match_stream(
                 T.StructField("jaccard", T.DoubleType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return parallelize(spark, [], schema)
 
 
 def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,7 +751,7 @@ def run_phash_index_match_stream(
                 T.StructField("hamming", T.LongType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return parallelize(spark, [], schema)
 
 
 def run_quality_score_stream(
@@ -798,7 +800,7 @@ def run_quality_score_stream(
                 T.StructField("keep", T.BooleanType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return parallelize(spark, [], schema)
 
 
 def run_quality_score_stream_from_model(
@@ -896,7 +898,7 @@ def run_winnowing_index_match_stream(
                 T.StructField("n_shared", T.LongType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return parallelize(spark, [], schema)
 
 
 def run_line_dedup_stream(
@@ -989,4 +991,4 @@ def run_line_dedup_stream(
                 T.StructField("text_out", T.StringType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return parallelize(spark, [], schema)

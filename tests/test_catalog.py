@@ -122,3 +122,19 @@ def test_banding_lossless_brute_arm_guard_trips(spark):
     # under the bound the diagnostic still runs (and finds no
     # disagreement on distinct texts)
     assert _banding_vs_brute_diffs(docs, k=3, max_reps=1000).count() >= 0
+
+
+def test_banding_lossless_brute_arm_honours_k(spark):
+    """Both arms of the banding-losslessness diagnostic use the same
+    Hamming bound: at k=2 the brute arm must not keep the distance-3
+    pairs the banded arm drops."""
+    from lrmr_spark.catalog.dedup_ops import _banding_vs_brute_diffs
+    from lrmr_spark.operators import dedup as DD
+
+    base = " ".join(f"w{j}" for j in range(30))
+    docs = spark.createDataFrame(
+        [(i, f"{base} x{i}") for i in range(40)], "doc_id long, text string"
+    )
+    pairs = DD.simhash64_hamming_pairs(docs, "doc_id", "text", k=3)
+    assert pairs.filter("hamming = 3").count() > 0  # the k=2 arms must cut these
+    assert _banding_vs_brute_diffs(docs, k=2).collect() == []

@@ -1450,6 +1450,18 @@ def test_simhash64_hamming_pairs_shared_reps_identical(spark, docs):
     assert shared == base
 
 
+def test_simhash64_hamming_pairs_rejects_mismatched_shared_reps(spark):
+    docs = spark.createDataFrame([(1, "a b"), (2, "a c")], "doc_id long, text string")
+    bad = [
+        spark.createDataFrame([(1, 5)], "_id long, _sig int"),  # _sig not bigint
+        spark.createDataFrame([(1, 5, 0)], "_id long, _sig long, x int"),  # extra column
+        spark.createDataFrame([(1, 5)], "doc_id long, _sig long"),  # _id missing
+    ]
+    for reps in bad:
+        with pytest.raises(ValueError, match="shared_reps"):
+            DD.simhash64_hamming_pairs(docs, "doc_id", "text", shared_reps=reps)
+
+
 def test_simhash_hamming_lossless_adversarial_blocks(spark):
     # pairs differing in exactly k bits placed to straddle blocks must
     # still be found (pigeonhole: k diffs cannot touch all k+1 blocks)

@@ -12,12 +12,18 @@
                      /root/reference/test/context_cancel.go)
 """
 
+import datetime
+import decimal
 import time
 
 import pytest
+from pyspark.errors import PySparkTypeError, PySparkValueError
+from pyspark.ml.linalg import Vectors, VectorUDT
+from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from lrmr_spark import Pipeline, get_job
+from lrmr_spark import Pipeline, get_job, sources
 
 
 def test_f2_kv_counts(spark):
@@ -301,3 +307,127 @@ def test_metrics_observe(spark):
     )
     assert res.metrics["events"] == 50
     assert res.metrics["passed"] == 25
+
+
+# ----------------------------------------------------------------------
+# in-memory source: Arrow local relation, createDataFrame semantics
+# ----------------------------------------------------------------------
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parallelize_map_runs_no_spark_job(spark):
+    p = Pipeline.parallelize(spark, [(i,) for i in range(1, 1001)], "v long")
+    for _ in range(3):
+        p = p.map(cols={"v": F.col("v") * 2})
+    res, jobs = _jobs_in_group(spark, "parallelize-no-job", p.run_and_collect)
+    assert jobs == []
+    assert sorted(r["v"] for r in res.rows) == [8 * i for i in range(1, 1001)]
+
+
+def test_parallelize_keeps_row_verifier(spark):
+    # a bare pa.array(..., type=int64) would truncate 1.5 to 1
+    with pytest.raises(PySparkTypeError):
+        sources.parallelize(spark, [(1.5,)], "v long")
+    with pytest.raises(PySparkValueError):
+        sources.parallelize(spark, [(None,)], "v long not null")
+
+
+_PARITY_CASES = {
+    "atomic": (
+        [
+            (1, 2, 1.5, "a", True, datetime.date(2020, 1, 2),
+             datetime.datetime(2020, 1, 2, 3, 4, 5, 6), decimal.Decimal("1.25"), None),
+            (-7, 2**40, -0.0, "", False, datetime.date(1969, 12, 31),
+             datetime.datetime(1999, 12, 31, 23, 59, 59), decimal.Decimal("-3.10"), "x"),
+        ],
+        "i int, l long, d double, s string, b boolean, dt date, ts timestamp,"
+        " dec decimal(10,2), n string",
+    ),
+    "nulls": ([(None, None, None)], "i int, ts timestamp, dec decimal(10,2)"),
+    "decimal_rounding": (
+        [(decimal.Decimal("1.235"),), (decimal.Decimal("-1.235"),), (decimal.Decimal("1.2"),)],
+        "x decimal(10,2)",
+    ),
+    "decimal_wide": (
+        [(decimal.Decimal("12345678901234567890.1234567890123456785"),)],
+        "x decimal(38,18)",
+    ),
+    "empty": ([], "a int, b string"),
+    "tuples_inferred": ([(1, "x"), (2, None)], None),
+    "tuples_named": ([(1, "x"), (2, None)], ["k", "v"]),
+    "rows_inferred": ([Row(a=1, b="x"), Row(a=2, b="y")], None),
+    "rows_named": ([Row(a=1, b="x")], ["p", "q"]),
+    "dicts_inferred": ([{"a": 1, "b": "x"}, {"b": "y", "a": 2}], None),
+    "dicts_named": ([{"a": 1, "b": "x"}], ["a", "b"]),
+    "dicts_renamed": ([{"a": 1, "b": "x"}, {"b": "y", "a": 2}], ["p", "q"]),
+    "dicts_renamed_swapped": ([{"a": 1, "b": "x"}], ["b", "a"]),
+    "dicts_struct": ([{"a": 1, "b": "x"}], "b string, a long"),
+    "nested": (
+        [([1, None], {"a": 1}, (1, "z")), (None, None, None)],
+        "a array<int>, m map<string,int>, st struct<x:int,y:string>",
+    ),
+    "atomic_schema": ([1, 2, None], "long"),
+    # the JVM rounds decimals at every depth; nested ones take the row path
+    "nested_decimal": (
+        [([decimal.Decimal("1.235")], {"k": decimal.Decimal("-1.235")},
+          (decimal.Decimal("2.345"),))],
+        "a array<decimal(10,2)>, m map<string,decimal(10,2)>, st struct<x:decimal(10,2)>",
+    ),
+    # a type Arrow cannot carry takes createDataFrame's row path
+    "udt_row_path": (
+        [(Vectors.dense([1.0, 2.0]),), (None,)],
+        StructType([StructField("v", VectorUDT())]),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY_CASES))
+def test_parallelize_matches_create_dataframe(spark, case):
+    data, schema = _PARITY_CASES[case]
+    want = spark.createDataFrame(data, schema)
+    got = sources.parallelize(spark, data, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_parallelize_hands_whole_inputs_to_create_dataframe(spark):
+    import pandas as pd
+    import pyarrow as pa
+
+    want = [Row(a=1, b="x"), Row(a=2, b="y")]
+    pdf = pd.DataFrame({"a": [1, 2], "b": ["x", "y"]})
+    assert sources.parallelize(spark, pdf, None).collect() == want
+    table = pa.table({"a": [1, 2], "b": ["x", "y"]})
+    assert sources.parallelize(spark, table, None).collect() == want
+    rdd = spark.sparkContext.parallelize([(1, "x"), (2, "y")])
+    assert sources.parallelize(spark, rdd, ["a", "b"]).collect() == want
+
+
+@pytest.mark.parametrize("op", ["sort", "partitioned_by"])
+def test_parallelize_results_independent_of_shuffle_partitions(spark, op):
+    data = [(f"k{i % 5}", (i * 37) % 101) for i in range(200)]
+
+    def run():
+        p = Pipeline.parallelize(spark, data, "key string, v int")
+        p = p.sort("v") if op == "sort" else p.partitioned_by(3, F.col("key"))
+        return p.df.withColumn("pid", F.spark_partition_id()).collect()
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        results = []
+        for n in ("2", "8"):
+            spark.conf.set(key, n)
+            results.append(run())
+    finally:
+        spark.conf.set(key, old)
+    assert results[0] == results[1]
+    assert sorted((r["key"], r["v"]) for r in results[0]) == sorted(data)

@@ -513,3 +513,19 @@ def test_batch_topk_plan_broadcasts_queries_and_prelimits_window(spark):
     assert "WindowGroupLimit" in plan
     cols = read_schema_columns(df)
     assert set(cols) == {"vec_id", "embedding"}
+
+
+def test_parallelize_plans_local_table_scan(spark):
+    plan = physical_plan(queries()["parallelize_kv_counts"](spark, SF))
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_rdd_scan_flag_tells_python_rdds_from_checkpoints(spark):
+    from tools.audit_plans import python_rdd_scans
+
+    py_rdd = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "v long")
+    assert python_rdd_scans(physical_plan(py_rdd)) == 1
+    ckpt = spark.range(4).localCheckpoint()
+    assert "Scan ExistingRDD" in physical_plan(ckpt)
+    assert python_rdd_scans(physical_plan(ckpt)) == 0

@@ -10,6 +10,11 @@ markers. Flags the pathologies the measured pitfalls catalogue:
 - global_sort: a Sort above an Exchange rangepartitioning with no
   Limit — full-data sorts don't survive 100 TB (TakeOrderedAndProject
   and per-partition sortWithinPartitions are fine).
+- rdd_scan: a Scan ExistingRDD over a Python RDD
+  (``applySchemaToPythonRDD``) — an in-memory table that pays a Spark
+  job and a Python worker pass per action instead of landing as an
+  Arrow local relation (sources.parallelize). Checkpointed frames also
+  plan as Scan ExistingRDD but are JVM RDDs and do not trip it.
 
 Usage: python tools/audit_plans.py [SF_DIR] [OUT.json]
 Defaults: /root/testdata/sf0.001 (plan shape is SF-independent; the
@@ -52,7 +57,16 @@ WAIVERS = {
     # harness run at validation SFs only, never a production path
     # (the entry's docstring carries the O(reps²) warning)
     "dedup_simhash_fast_banding_lossless": "diagnostic banded-vs-brute equality harness",
+    # Pipeline.partitioned_by_fn: an opaque Python routing function can
+    # only run on the RDD layer
+    "feeder_route_do_pipeline": "partitioned_by_fn parity escape hatch: Python router over an RDD",
 }
+
+
+def python_rdd_scans(plan: str) -> int:
+    """Scan ExistingRDD nodes whose RDD came from a Python RDD, counted
+    from the formatted plan's per-node Arguments lines."""
+    return len(re.findall(r"^Arguments: .* at applySchemaToPythonRDD ", plan, re.MULTILINE))
 
 
 def main() -> None:
@@ -78,7 +92,8 @@ def main() -> None:
             and "GlobalLimit" not in plan
             and not top_k
         )
-        info = {"scans": n_scan, "exchanges": n_exch}
+        n_rdd = python_rdd_scans(plan)
+        info = {"scans": n_scan, "exchanges": n_exch, "python_rdd_scans": n_rdd}
         issues = []
         if n_scan > MAX_SCANS:
             issues.append(f"scan_blowup:{n_scan}")
@@ -86,6 +101,8 @@ def main() -> None:
             issues.append(f"exchange_heavy:{n_exch}")
         if global_sort:
             issues.append("global_sort")
+        if n_rdd:
+            issues.append(f"rdd_scan:{n_rdd}")
         if issues and name in WAIVERS:
             info["waived"] = WAIVERS[name]
         elif issues:
