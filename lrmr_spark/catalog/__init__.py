@@ -43,86 +43,18 @@ def query(name: str, oracle: str | Callable[[], str] | None = None):
 
 
 # The driver's correctness gate hashes only the FIRST 50 entries of
-# queries() (round-1 lesson: registration order cut off the entire
-# LLM-data family). This explicit priority list guarantees the first 50
-# cover at least one query per operator family — LLM-data, as-of,
-# streaming, TPC-H and this round's new operators first; redundant
-# window/scalar variants after the cut (they remain fully covered by
-# tools/check_oracle.py, which runs all entries).
-# ROTATION (r4): 13 load-bearing keeps (flagship, bench headline
-# queries, one per dedup algorithm, stratified_sample_by_lang until
-# its post-HUGEINT-fix green row lands, one pin per operator family)
-# + 37 first-time entries from the never-gated backlog, led by the 7
-# HUGEINT-cast-fixed oracles, the new stored-index dedup query, and
-# the two ops new this round (semdedup_prune, bm25_topk — dedup_exact
-# and ann_cosine_topk rotate out to make room: both green r2+r3,
-# their families stay pinned by other window entries, and both stay
-# covered by check_oracle; ann_cosine_topk also runs in the bench
-# headline).
-# r5 rotation candidates (added late in r4, deliberately OUTSIDE the
-# already-frozen-and-verified window; all green in check_oracle at
-# sf0.01 AND sf0.1): dedup_containment, lang_mismatch_audit,
-# embedding_pq_codes, ann_pq_adc_topk, dedup_pipeline_containment,
-# text_winnowing_fingerprints — rotate them in first, then continue the never-gated backlog.
-# Rotated out this round (green official rows in r1-r3; still
-# fully covered by tools/check_oracle.py): dedup_minhash_shingles,
-# dedup_incremental, snapshot_diff, ann_lsh_buckets, ann_ivf_topk,
-# ann_ivf_pruned_topk, embedding_kmeans_iter,
-# decontaminate_ngram_overlap, sample_split_hash, text_tfidf_top_terms,
-# text_pii_redaction, pack_sequences, text_repetition_signals,
-# corpus_curation_pipeline, multimodal_binary_meta,
-# range_join_error_context, percentiles_by_priority, approx_stats,
-# streaming_tumbling_counts, streaming_stateful_dedup,
-# skew_replicated_join, bucketed_join_orders, tpch_q3/q6,
-# parallelize_kv_counts, python_datasource_feeder,
-# feeder_route_do_pipeline, orders_abc_pareto, customer_rfm_segments,
-# recursive_cte_user_hierarchy, lateral_topk_orders,
-# udtf_token_positions, graph_pagerank_parts, events_gapfill_daily,
-# events_watermark_lateness_audit.
+# queries(), so this list orders those 50; every other entry follows in
+# registration order and stays covered by tools/check_oracle.py, which
+# runs all of them.
+# Rule for each rotation of the window: the standing keeps below, then
+# every entry built or whose engine code changed since the last
+# rotation, then the entries whose last gated row is oldest. Keep one
+# entry per operator family (test_gate_window_covers_every_family) and
+# check every new entry green with check_oracle at sf0.01 and sf0.1
+# before freezing. The history of past windows is in git and in the
+# VERDICT files.
 _PRIORITY = [
-    # ROTATION (r6) — THE FINAL BACKLOG ROTATION: 16 load-bearing
-    # keeps (the 11 bench-headline queries, the four remaining family
-    # pins — multimodal/skew/storage/corpus — and the streaming
-    # stateful pin) + the 34 LONGEST-WAITING first-time entries from
-    # the post-r6-freeze backlog, exactly as the r6 rotation note and
-    # VERDICT r6 task 1 prescribe (build order: ann_ivfpq_rerank_topk
-    # .. graph_label_propagation), leaving the 12 newest (the
-    # line-dedup index family .. text_heavy_hitters) plus this round's
-    # additions as the r8 window. All 34 verified green by
-    # tools/check_oracle.py at sf0.01 AND sf0.1 before freezing.
-    # Rotated out this round (green official rows in r6; still fully
-    # covered by check_oracle): ann_pq_rerank_topk, ann_pq_append_topk,
-    # streaming_pq_index_append, text_dup_token_spans,
-    # dedup_simhash_fast_banding_lossless, dedup_simhash_hamming_fast,
-    # ann_ivfpq_topk, ann_ivfpq_residual_topk,
-    # dedup_minhash_index_append, streaming_minhash_index_match,
-    # text_winnowing_matches_capped, the 15 events-tail entries,
-    # cogroup_click_purchase_profile, feature_store_pit_join, and the
-    # 6 streaming-tail entries.
-    # ROTATION (r8) — BACKLOG TO ZERO: 16 standing keeps + ALL 21
-    # never-gated entries (the 12 r6-session deferrals + the 9 built
-    # after the r7 freeze, exactly as the r8 rotation note and VERDICT
-    # r7 task 1 prescribe) + the 6 entries built THIS round + 7
-    # longest-unrefreshed pass* rows (gated r1-r3, rotated out in r4 —
-    # the oldest official rows in the catalog). 16+21+6+7 = 50.
-    # All 34 non-keeps verified green by tools/check_oracle.py at
-    # sf0.01 AND sf0.1 before freezing.
-    # Rotated out this round (green official rows in r6/r7; still
-    # fully covered by check_oracle): ann_ivfpq_rerank_topk,
-    # docs_dsir_weights, text_dup_span_removal, ann_pq_recall_at_k,
-    # pq_train_codebook_iter, embedding_pq_distortion,
-    # decontaminate_span_removal, the 4 BPE rows, the 3 mixture rows,
-    # embedding_sq8_codes, ann_sq8_sdc_topk, ann_ivf_recall_at_nprobe,
-    # multimodal_phash_dedup, token_diversity_index,
-    # ann_sq8_stored_topk, ann_sq8_recall_at_k, dedup_threshold_sweep,
-    # source_overlap_matrix, multimodal_curation_pipeline,
-    # multimodal_phash_index_match, streaming_phash_index_match,
-    # ann_sq8_append_topk, ann_pq_delete_topk,
-    # dedup_minhash_index_delete, ann_cosine_topk_batch,
-    # text_line_dedup, ann_hybrid_rrf, embedding_matryoshka_recall,
-    # graph_label_propagation.
-    # --- keeps: bench headliners (the legacy-11 bench queries; the 3
-    # r7-added headliners are window'd as backlog/pass* rows below)
+    # --- keeps: the bench headline queries
     "flagship_event_counts",
     "tpch_q1",
     "tpch_q6_forecast_revenue",
@@ -140,50 +72,11 @@ _PRIORITY = [
     "zorder_locality_index",
     "source_mixture_weights",
     "streaming_sessionization",  # rows-only by contract
-    # ROTATION (r11) — exactly as the written r11 note prescribed:
-    # 16 standing keeps (above) + the 1 entry BUILT this round
-    # (graph_random_walks_multi — pins the walk hash's w term against
-    # DuckDB, r10 VERDICT task 5) + the 7 entries whose ENGINE CODE
-    # changed this round (random_walks gained start sanitization and
-    # the step-rows shape decision; hits_ppm gained knob validation
-    # and the r11 profile decision; pagerank_ppm/PPR/LPA/HashMin all
-    # route their per-round join through the new
-    # _iterloop.state_adjacency_join and gained hub_safe=) + the 26
-    # longest-unrefreshed pass* rows, continuing exactly where r10's
-    # refresh tail stopped: the 6 streaming-tail rows of the r6
-    # rotated-out list, then the first 20 of the r7 rotated-out rows
-    # in the r8 comment's order (the 4 BPE rows are
-    # bpe_pair_counts/merge_apply/train_merges/encode_corpus, the 3
-    # mixture rows are unimax_weights/temperature_weights/
-    # unimax_sample). Rotated out this round (green official rows in
-    # r10; still fully covered by check_oracle): dedup_components_star
-    # (star engine code untouched this round), the 9 r6-named refresh
-    # rows, the 15 events-tail rows, cogroup_click_purchase_profile
-    # and feature_store_pit_join.
-    # ROTATION (r10) — exactly as the written r10 note prescribed:
-    # 16 standing keeps (above) + graph_pagerank_personalized FIRST
-    # (built after the r9 freeze — the only never-gated entry at the
-    # time) + the 2 entries BUILT this round (graph_hits_authorities,
-    # graph_random_walks) + the 5 entries whose ENGINE CODE changed
-    # this round
-    # (the adjacency_cache NULL-neighbor contract fix touches
-    # pagerank/dangling-PR/LPA/HashMin; the star CC per-round rebuild
-    # touches dedup_components_star — a changed operator gets an
-    # official row the same round it changes) + the 26
-    # longest-unrefreshed pass* rows, continuing exactly where r9's
-    # refresh tail stopped: the rest of the r6 rotated-out list in its
-    # order (9 named rows, the 15 events-tail rows, cogroup,
-    # feature-store PIT). Rotated out this round (green official rows in r9; still
-    # fully covered by check_oracle): graph_pagerank_dangling's r9
-    # siblings' refresh rows — the 20 r9-note rows, the 6 r4-list
-    # remainder rows, and the 2 r6-head ANN rows.
-    # --- built this round (r11): multi-walk w-term oracle pin,
-    # multi-source BFS distance labeling (trust-propagation features),
-    # and weighted deterministic walks (cumulative-range pick)
+    # --- current window: the graph entries built or changed in r11,
+    # the streaming tail, then the oldest refresh rows
     "graph_random_walks_multi",
     "graph_bfs_levels",
     "graph_random_walks_weighted",
-    # --- engine-changed-this-round rows (r11)
     "graph_random_walks",
     "graph_hits_authorities",
     "graph_pagerank_parts",
@@ -191,20 +84,12 @@ _PRIORITY = [
     "graph_pagerank_personalized",
     "graph_label_propagation",
     "dedup_components",
-    # --- refresh rows 25-30: the 6 streaming-tail rows of the r6
-    # rotated-out list, in the r11 note's order
     "streaming_static_enrich",
     "streaming_interval_join",
     "streaming_dropdup_watermark",
     "streaming_mincount_sketch",
     "streaming_backfill_available_now",
     "streaming_interval_join_left_outer",
-    # --- refresh rows 33-50: the first 18 r7 rotated-out rows, in
-    # the r8 comment's order (BPE rows = pair_counts/merge_apply/
-    # train_merges/encode_corpus; mixture rows = unimax_weights/
-    # temperature_weights/unimax_sample; token_diversity_index and
-    # ann_sq8_stored_topk were displaced to r12 by the two
-    # built-this-round graph entries bfs_levels/walks_weighted)
     "ann_ivfpq_rerank_topk",
     "docs_dsir_weights",
     "text_dup_span_removal",
@@ -224,24 +109,15 @@ _PRIORITY = [
     "ann_ivf_recall_at_nprobe",
     "multimodal_phash_dedup",
 ]
-# r12 ROTATION NOTE (for the next session): window = 16 standing
-# keeps + anything built or ENGINE-CHANGED in r12 + the
-# longest-unrefreshed pass* rows, continuing where r11's refresh tail
-# stopped — next in line, in order: the REMAINING 15 r7 rotated-out
-# rows in the r8 comment's order (token_diversity_index,
-# ann_sq8_stored_topk, ann_sq8_recall_at_k,
-# dedup_threshold_sweep, source_overlap_matrix,
-# multimodal_curation_pipeline, multimodal_phash_index_match,
-# streaming_phash_index_match, ann_sq8_append_topk,
-# ann_pq_delete_topk, dedup_minhash_index_delete,
+# Next in line for the window, in order: token_diversity_index,
+# ann_sq8_stored_topk, ann_sq8_recall_at_k, dedup_threshold_sweep,
+# source_overlap_matrix, multimodal_curation_pipeline,
+# multimodal_phash_index_match, streaming_phash_index_match,
+# ann_sq8_append_topk, ann_pq_delete_topk, dedup_minhash_index_delete,
 # ann_cosine_topk_batch, text_line_dedup, ann_hybrid_rrf,
-# embedding_matryoshka_recall — graph_label_propagation already
-# re-officialized r10+r11), then the r8 rotated-out rows (the 34
-# entries whose last official row is r8 — the r8 window's
-# first-time/backlog rows, registration order), then the r9 rotated-
-# out rows, then dedup_components_star and the r10 refresh rows.
-# Keep the family pins and the pre-freeze green check at sf0.01 AND
-# sf0.1 before freezing.
+# embedding_matryoshka_recall; then the entries last gated in r8, then
+# those last gated in r9 (each in registration order), then
+# dedup_components_star and the rest last gated in r10.
 
 
 def _ordered(names: list[str]) -> list[str]:

@@ -226,8 +226,74 @@ def read_json(spark: SparkSession, path: str, schema: Any = None, **options: Any
     return reader.json(path)
 
 
+# path -> ((file stamp, session conf), inferred schema); one entry per
+# path. Key and schema are stored as one tuple, so two threads racing on
+# a path can cost an extra inference but never pair a key with another
+# key's schema.
+_PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The engine's reader for input parquet.
+
+    Spark infers a parquet schema with a Spark job on every read, even
+    of one unchanged file. This reader remembers the schema inferred
+    for a local path and passes it back with ``.schema()`` — no job —
+    while both of these are unchanged:
+
+    - the stamp ``(relpath, st_ino, st_size, st_mtime_ns)`` of every
+      file under the path, ``_``-prefixed summary files included;
+    - the session's SQL conf, which holds everything that shapes
+      inference (``nanosAsLong``, ``binaryAsString``, ``mergeSchema``,
+      ``caseSensitive``, ...).
+
+    Otherwise it infers as ``spark.read.parquet`` does and stores the
+    result. A rewrite in place that keeps a file's size and its mtime to
+    the nanosecond goes unseen. Paths on another filesystem
+    (``s3a://``, ``hdfs://``), paths that name no local file or
+    directory (globs) and directories that lose a file while they are
+    stamped always infer."""
+    stamp = _local_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    key = (stamp, _conf_key(spark))
+    hit = _PARQUET_SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # a copy: df.schema is the frame's own object, which callers may mutate
+    _PARQUET_SCHEMAS[path] = (key, StructType.fromJson(df.schema.jsonValue()))
+    return df
+
+
+def _local_stamp(path: str) -> tuple | None:
+    """``(relpath, st_ino, st_size, st_mtime_ns)`` of every file under a
+    local path, or ``None`` for another scheme, a missing path or a file
+    removed while walking."""
+    local = path[len("file:"):] if path.startswith("file:") else path
+    if "://" in local or not os.path.exists(local):
+        return None
+    if os.path.isfile(local):
+        files = [local]
+    else:
+        files = []
+        for root, dirs, names in os.walk(local):
+            dirs.sort()
+            files += [os.path.join(root, f) for f in sorted(names)]
+    stamp = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except FileNotFoundError:
+            return None
+        stamp.append((os.path.relpath(f, local), st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
+
+
+def _conf_key(spark: SparkSession) -> str:
+    """The session's SQL conf in one JVM call (``spark.conf.getAll``
+    fetches it entry by entry, about 20 ms)."""
+    return spark.conf._jconf.getAll().toString()
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -34,7 +34,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..sources import parallelize
+from ..sources import parallelize, read_parquet
 
 __all__ = [
     "stream_events",
@@ -110,9 +110,7 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     both TIMESTAMP(NANOS) (long under nanosAsLong) and plain
     TIMESTAMP(MICROS); mirroring the physical type here lets
     stream_events normalize exactly like the batch loader."""
-    import os
-
-    batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    batch = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -166,18 +164,22 @@ def session_counts(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:
     """Event-time sessionization with session_window — the streaming
-    twin of the batch gaps-and-islands events_sessionization entry."""
+    twin of the batch gaps-and-islands events_sessionization entry.
+
+    The session bounds are aggregates (``min(ts)``, ``max(ts) + gap``),
+    not the window key's ``start``/``end``: the optimiser pushes a
+    filter on a key column below the session merge, which splits
+    sessions, and it cannot push one on an aggregate."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("sess_start"),
-            F.col("w.end").alias("sess_end"),
-            "n_events",
-            "total_value",
+        .groupBy(F.session_window("ts", gap), "user_id")
+        .agg(
+            F.min("ts").alias("sess_start"),
+            (F.max("ts") + F.expr(f"INTERVAL {gap}")).alias("sess_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
         )
+        .select("user_id", "sess_start", "sess_end", "n_events", "total_value")
     )
 
 
@@ -643,7 +645,7 @@ def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     only this function changes). Schema probed from the parquet footer
     batch-side, like _events_raw_schema: streaming sources never
     infer."""
-    batch = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    batch = read_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
     return (
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources import read_parquet
+
 __all__ = ["TABLES", "load", "load_all", "register_views"]
 
 TABLES = (
@@ -43,9 +45,12 @@ def _ensure_session_conf(spark: SparkSession) -> None:
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Column pruning + filter pushdown come free from
-    the parquet scan as long as callers select/filter declaratively."""
+    the parquet scan as long as callers select/filter declaratively.
+    The read reuses the table's inferred schema while its files and the
+    session conf are unchanged (sources.read_parquet), so a warm load
+    runs no Spark job."""
     _ensure_session_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = _normalize_events_ts(df)
     return df

@@ -312,22 +312,11 @@ def test_metrics_observe(spark):
 # ----------------------------------------------------------------------
 # in-memory source: Arrow local relation, createDataFrame semantics
 # ----------------------------------------------------------------------
-def _jobs_in_group(spark, group, action):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_parallelize_map_runs_no_spark_job(spark):
+def test_parallelize_map_runs_no_spark_job(spark, jobs_in_group):
     p = Pipeline.parallelize(spark, [(i,) for i in range(1, 1001)], "v long")
     for _ in range(3):
         p = p.map(cols={"v": F.col("v") * 2})
-    res, jobs = _jobs_in_group(spark, "parallelize-no-job", p.run_and_collect)
+    res, jobs = jobs_in_group("parallelize-no-job", p.run_and_collect)
     assert jobs == []
     assert sorted(r["v"] for r in res.rows) == [8 * i for i in range(1, 1001)]
 

@@ -529,3 +529,14 @@ def test_rdd_scan_flag_tells_python_rdds_from_checkpoints(spark):
     ckpt = spark.range(4).localCheckpoint()
     assert "Scan ExistingRDD" in physical_plan(ckpt)
     assert python_rdd_scans(physical_plan(ckpt)) == 0
+
+
+def test_warm_job_counts_pinned(spark, jobs_in_group):
+    # a warm call reuses each table's inferred schema, so only the
+    # query's own jobs run: flagship's scan+shuffle stages, and the
+    # multiway join's dim broadcasts plus its shuffle stages
+    for name, want in (("flagship_event_counts", 2), ("join_multiway_region_revenue", 7)):
+        fn = queries()[name]
+        fn(spark, SF).collect()
+        _, jobs = jobs_in_group(f"warm-{name}", lambda: fn(spark, SF).collect())
+        assert len(jobs) == want, name

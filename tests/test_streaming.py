@@ -2,10 +2,13 @@
 through a memory sink; streaming results cross-checked against the
 equivalent batch computation."""
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
 from lrmr_spark import streaming as ST
+from lrmr_spark.sources import parallelize
 from lrmr_spark.tables import load
 
 
@@ -36,6 +39,25 @@ def test_session_window_runs(events_stream):
     got = ST.run_to_memory(ST.session_counts(events_stream), "t_sessions")
     rows = got.collect()
     assert all(r["sess_start"] <= r["sess_end"] for r in rows)
+
+
+def test_session_bounds_filter_does_not_split_sessions(spark):
+    # one user, events 20 minutes apart under a 30-minute gap: a single
+    # session 00:00-01:10. A filter on sess_end pushed below the session
+    # merge would see the 2-event session ending 00:50 and keep it.
+    t0 = dt.datetime(2024, 1, 1)
+    ev = parallelize(
+        spark,
+        [(1, t0 + dt.timedelta(minutes=m), 1.0) for m in (0, 20, 40)],
+        "user_id long, ts timestamp, value double",
+    )
+    sessions = ST.session_counts(ev)
+    assert [tuple(r) for r in sessions.collect()] == [
+        (1, t0, t0 + dt.timedelta(minutes=70), 3, 3.0)
+    ]
+    end_cut, start_cut = F.lit(t0 + dt.timedelta(hours=1)), F.lit(t0 + dt.timedelta(minutes=10))
+    assert sessions.filter(F.col("sess_end") <= end_cut).collect() == []
+    assert sessions.filter(F.col("sess_start") >= start_cut).collect() == []
 
 
 def test_foreach_batch_parquet_sink(spark, tmp_path, events_stream):

@@ -112,6 +112,8 @@ def fp(rows) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    if reps < 1:
+        sys.exit(f"reps must be at least 1, got {reps}")
     spark = get_spark("ab-simhash-lossless")
     spark.range(1000).selectExpr("sum(id)").collect()
     bt, at, fps = [], [], set()
