@@ -2134,7 +2134,7 @@ def docs_quality_topfrac(spark, sf_dir):
     # projection of that checkpoint. The previous shape ran the md5
     # featurize chain twice over the corpus (train + score) and
     # checkpointed twice — fingerprint-identical, every paired rep
-    # faster (tools/ab_quality_topfrac.py, EXP_QUALITY_TOPFRAC.json)
+    # faster (EXP_QUALITY_TOPFRAC.json)
     scored = TX.hashed_ngram_classifier(
         d, "doc_id", "text", _QC_TEACHER, iterations=3
     ).select("doc_id", "score")

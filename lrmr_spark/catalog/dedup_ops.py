@@ -11,6 +11,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators import dedup as DD
+from ..sources import parallelize
 from ..tables import load
 from . import query
 from .oracle_util import grams_expr
@@ -465,8 +466,8 @@ def dedup_minhash_fast_vs_md5(spark, sf_dir):
     # are byte-identical (hashing is everything downstream), so the
     # shared frame is built and persisted once — persist, not
     # checkpoint, so hashpartitioning(_id) survives into both per-doc
-    # signature aggregations (tools/ab_fast_vs_md5.py,
-    # EXP_FAST_VS_MD5.json: fingerprint-identical, every rep faster)
+    # signature aggregations (EXP_FAST_VS_MD5.json:
+    # fingerprint-identical, every rep faster)
     items = DD._minhash_items(docs, "doc_id", "text", "multiset", 3).persist()
     fast = DD.minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=16, bands=4, threshold=0.9,
@@ -655,12 +656,11 @@ def dedup_simhash_fast_banding_lossless(spark, sf_dir):
     instead of launching a reps² cross join."""
     docs = load(spark, sf_dir, "documents")
     diffs = _banding_vs_brute_diffs(docs, k=3)
-    sentinel = spark.range(1).select(
-        F.lit(-1).cast("long").alias("id_a"),
-        F.lit(-1).cast("long").alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
-        F.lit(True).alias("in_banded"),
-        F.lit(True).alias("in_brute"),
+    sentinel = parallelize(
+        spark,
+        [(-1, -1, 0, True, True)],
+        "id_a bigint not null, id_b bigint not null, hamming int not null, "
+        "in_banded boolean not null, in_brute boolean not null",
     )
     return sentinel.unionAll(diffs).orderBy("id_a", "id_b")
 
@@ -691,7 +691,7 @@ def _banding_vs_brute_diffs(docs, k: int = 3, max_reps: int = _BRUTE_REPS_BOUND)
     # lazy collect. Linear in docs, so it is safe to land BEFORE the
     # quadratic-arm guard below (the guard protects the cross join,
     # not this). Fingerprint-asserted identical pair set:
-    # tools/ab_simhash_lossless.py, EXP_SIMHASH_LOSSLESS.json.
+    # EXP_SIMHASH_LOSSLESS.json.
     reps = (
         sigs.groupBy("_sig").agg(F.min("_id").alias("_id"))
         .localCheckpoint(eager=True)
@@ -1079,8 +1079,8 @@ def dedup_pipeline_containment(spark, sf_dir):
     # stage (r12: _minhash_reps re-ran the identical tokenize→explode→
     # count front half over the same corpus — shared_items tokenizes
     # once, the dedup_minhash_fast_vs_md5 pattern; item strings and
-    # fps are byte-identical by construction, tools/ab_pipeline_front.py
-    # fingerprint-asserts prune ids AND pairs before timing).
+    # fps are byte-identical by construction, EXP_PIPELINE_FRONT.json
+    # fingerprint-asserted prune ids AND pairs before timing).
     items = DD._minhash_items(docs, "doc_id", "text", "multiset", 3).persist()
     fps = (
         items.groupBy("_id")
@@ -1195,10 +1195,10 @@ def dedup_threshold_sweep(spark, sf_dir):
         threshold=0.5,
         unit="shingles",
     ).select("id_a", "jaccard")
-    ks = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(t) for t in (500000, 600000, 700000, 800000, 900000)])
-        ).alias("threshold_ppm")
+    ks = parallelize(
+        spark,
+        [(t,) for t in (500000, 600000, 700000, 800000, 900000)],
+        "threshold_ppm bigint not null",
     )
     return (
         ks.join(
@@ -1208,10 +1208,6 @@ def dedup_threshold_sweep(spark, sf_dir):
         )
         .groupBy("threshold_ppm")
         .agg(F.count("id_a").cast("bigint").alias("n_pairs"))
-        .select(
-            F.col("threshold_ppm").cast("bigint").alias("threshold_ppm"),
-            "n_pairs",
-        )
         .orderBy("threshold_ppm")
     )
 

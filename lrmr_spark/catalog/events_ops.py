@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..sources import parallelize
 from ..tables import load
 from . import query
 
@@ -1610,9 +1611,7 @@ def events_histogram_quantiles(spark, sf_dir):
         F.sum("n").over(w_cum).alias("cum_n"),
         F.sum("n").over(w_tot).alias("total_n"),
     )
-    qs = spark.range(1).select(
-        F.explode(F.array(F.lit(50), F.lit(95), F.lit(99))).alias("q")
-    ).select(F.col("q").cast("bigint").alias("q"))
+    qs = parallelize(spark, [(50,), (95,), (99,)], "q bigint not null")
     return (
         cum.crossJoin(F.broadcast(qs))  # 3 bounded quantile constants
         .filter(F.col("cum_n") * 100 >= F.col("q") * F.col("total_n"))

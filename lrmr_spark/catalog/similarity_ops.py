@@ -1778,14 +1778,11 @@ def ann_sq8_recall_at_k(spark, sf_dir):
     )
     exact = SIM.cosine_topk(emb, list(_query_vec()), k=10).select("vec_id")
     hit = ranked.join(exact, "vec_id").select("_ra")
-    kdf = spark.range(1).select(
-        F.explode(F.array(*[F.lit(int(x)) for x in ks])).alias("k_prime")
-    )
+    kdf = parallelize(spark, [(x,) for x in ks], "k_prime bigint not null")
     return (
         kdf.join(hit, F.col("_ra") <= F.col("k_prime"), "left")
         .groupBy("k_prime")
         .agg(F.count("_ra").cast("bigint").alias("hits"))
-        .select(F.col("k_prime").cast("bigint").alias("k_prime"), "hits")
         .orderBy("k_prime")
     )
 

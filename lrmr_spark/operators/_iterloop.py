@@ -66,7 +66,7 @@ def adjacency_cache(
     Returns (cached_frame, n_rows); n_rows doubles as the node count
     when every node has an out-edge (the pagerank fast-path
     contract). 100 TB trade, MEASURED (r10 planted-hub experiment,
-    tools/exp_adj_hub.py → EXP_ADJ_HUB.json): one row per source node
+    EXP_ADJ_HUB.json): one row per source node
     means a row's size is bounded by the graph's MAX OUT-DEGREE.
     Planting a symmetric hub into the sf1 rehearsal graph and pairing
     this layout against ``chunked_adjacency`` below, the single row

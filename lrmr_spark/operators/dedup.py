@@ -30,7 +30,7 @@ from .text import distinct_tokens, fingerprint, tokens
 # _minhash_reps): True = hash-repartition exploded tokens by _id up
 # front so one exchange serves both aggregations (the default); False =
 # let each groupBy insert its own exchange. Flipped only by
-# tools/ab_reps_fusion.py to measure the trade at scale.
+# the A/B that measured the trade at scale (AB_REPS_FUSION.json).
 _FUSE_REPS_EXCHANGE = True
 
 __all__ = [
@@ -80,14 +80,6 @@ def _portable_hash(seed: int, col: Column) -> Column:
     min over hex strings is a valid MinHash (uniform over the hex
     ordering). Production fast path: xxhash64(seed, token)."""
     return F.md5(F.concat(F.lit(f"{seed}:"), col))
-
-
-def _fast_hash(seed: int, col: Column) -> Column:
-    """xxhash64(seed, item) — the production MinHash hash: JVM-native
-    64-bit ints (no hex-string materialization, no md5 cost). Not
-    reproducible in DuckDB SQL, so fast-path results are checked by
-    property tests against the md5 variant instead of the oracle."""
-    return F.xxhash64(F.lit(seed), col)
 
 
 def _seed_hasher(seed: int):
@@ -224,8 +216,8 @@ def _minhash_reps(
     # The sf10 question (does the repartition's ~3× raw token rows
     # outweigh the saved exchange at scale?) is RESOLVED — r5 reran
     # the A/B under the idle-gated protocol (load < 1 before every
-    # timed run, answer equality asserted, tools/ab_reps_fusion.py +
-    # an alternating-order second pass, AB_REPS_FUSION.json): pooled
+    # timed run, answer equality asserted, plus an alternating-order
+    # second pass, AB_REPS_FUSION.json): pooled
     # min-of-N fused 27.7 s vs unfused 29.6 s at sf10 (−6%),
     # consistent in direction with sf0.1 (1.80 vs 1.93) and sf1
     # (3.14 vs 3.65). No flip; a sequential-order pass that briefly
@@ -868,7 +860,7 @@ def connected_components(
     # now the faster choice as well — hashmin stays the default for
     # the shallow near-dup cliques this operator's contract names,
     # and that default is now MEASURED on the contract shape (r11,
-    # tools/exp_cc_cliques.py → EXP_CC_CLIQUES*.json: 10M nodes in 2M
+    # EXP_CC_CLIQUES*.json: 10M nodes in 2M
     # 5-cliques, 20M intra-clique pairs, fingerprint-identical labels,
     # two interleaved sessions — hashmin 17.6/18.8 s min-of-2 vs star
     # 30.9/25.6: HashMin converges in 2 rounds + 1 count-only confirm
@@ -908,7 +900,7 @@ def connected_components(
     labels = ckpt
     for _ in range(max_iter):
         # the convergence check rides the round's OWN aggregate (r12,
-        # tools/ab_cc_fused_changed.py): each node's old label is
+        # EXP_CC_FUSED_CHANGED.json): each node's old label is
         # tagged through the groupBy-min as _old (exactly one labels
         # row per id — neighbor rows carry NULL, max() ignores them),
         # so `changed` is a filter-count over the just-checkpointed
@@ -958,8 +950,8 @@ def _connected_components_star(
     - small-star: over the large→small edges, each node u links every
       smaller neighbor (and itself) to m = min of that set.
 
-    Scale shape (r10, measured — tools/exp_cc_star.py →
-    EXP_CC_STAR.json): each star step is ONE window pass — min(v) and
+    Scale shape (r10, measured — EXP_CC_STAR.json): each star step
+    is ONE window pass — min(v) and
     row_number share a partitionBy(u).orderBy(v) spec, so the step
     costs one exchange+sort, the self-link u→m is emitted on the
     rn = 1 row, and the node-sized min table plus the edge⋈node join
@@ -1433,7 +1425,7 @@ def simhash64_hamming_pairs(
     ``simhash64(df, id, text).groupBy(_sig).agg(min(_id))`` with
     columns (_sig bigint, _id) — passes it here to skip the signature
     pipeline (the banding-losslessness gate builds the same reps for
-    its brute arm; tools/ab_simhash_lossless.py fingerprint-asserts
+    its brute arm; EXP_SIMHASH_LOSSLESS.json fingerprint-asserted
     the shared form identical). The frame must be the same-config
     derivation — a drifted reps table would silently change the pair
     set, so its schema is checked: exactly {_id, _sig} with _sig

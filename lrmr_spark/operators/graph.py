@@ -45,7 +45,7 @@ __all__ = [
 # k-core keep sets at or under this node count are explicitly
 # broadcast into the semi-joins (the checkpointed degree table is a
 # LogicalRDD without size statistics, so Catalyst can't make that
-# call itself — measured 40 s vs 12 s at sf1, tools/exp_kcore.py vD).
+# call itself — measured 40 s vs 12 s at sf1, tools/exp_kcore.py@7d6562e vD).
 # 2M longs ≈ 30 MB serialized: comfortably executor-resident; above
 # it the node set is corpus-proportional and must shuffle.
 _KEEP_BCAST_MAX = 2_000_000
@@ -432,8 +432,8 @@ def random_walks(
     dense graph; then a step pays zero exchanges. Both counts come
     from one aggregate over the cache.
 
-    STEP-ROWS state (r11, measured — tools/exp_walks_len.py →
-    EXP_WALKS_LEN.json): the per-step state carries only
+    STEP-ROWS state (r11, measured — EXP_WALKS_LEN.json): the
+    per-step state carries only
     (start, w, cursor), NOT the growing path array, so every step's
     localCheckpoint writes constant walk-count bytes; each step
     contributes a (start, w, t, node) row frame (a projection of
@@ -914,8 +914,8 @@ def hits_ppm(edges: DataFrame, iterations: int = 3) -> DataFrame:
         # hub fold lands on the AUTH table instead of the bare node
         # set, so its output IS the round's (node, auth, hub) scores —
         # the separate auth⋈hub join the r10 shape paid per round is
-        # fused away (r11, measured: tools/exp_hits_r11.py →
-        # EXP_HITS_R11*.json, sf10 4-arm interleaved session 79.7 s
+        # fused away (r11, measured: EXP_HITS_R11*.json, sf10 4-arm
+        # interleaved session 79.7 s
         # min-of-2 vs 125.8 for the join shape, fingerprint-identical;
         # the further lazy-auth arms measured within cross-session
         # noise of this and were rejected for their double evaluation)
@@ -1176,7 +1176,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     sorts — 26-40 s at sf1 vs ~9 s for this shape.
 
     Per-round materialization (the r7 disk-cliff experiment,
-    tools/exp_kcore.py → BENCH_r7_graphops.json): the EDGE frame
+    tools/exp_kcore.py@7d6562e → BENCH_r7_graphops.json): the EDGE frame
     rides persist(MEMORY_AND_DISK), NOT localCheckpoint —
     localCheckpoint stores raw serialized rows (~4 GB/round at sf10's
     120 M edges, off the single-node page-cache cliff at 62 s/round)
@@ -1228,7 +1228,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     prev_nodes, prev_edges = _stats(deg)  # seed: a no-op round 1 also certifies
     for r in range(1, rounds + 1):
         keep = deg.filter(F.col("_d") >= k).select("src")
-        # IDENTITY-SWEEP PRECHECK (r8 experiment, tools/exp_kcore_numbers.py):
+        # IDENTITY-SWEEP PRECHECK (r8 experiment, EXP_KCORE_NUMBERS.json):
         # every node in deg has >= 1 edge, so "no node below threshold"
         # PROVES "no edge removed" — the fixed-point certificate moves
         # from after the sweep (an edge-list materialization wasted on
@@ -1306,7 +1306,7 @@ def kcore_numbers(
     table node carries ≥ 1 edge), so confirmation sweeps cost one
     node-table count instead of an edge-frame materialization — at
     this operator's 8-sweep schedule roughly half the sweeps are such
-    confirmations (the r8 experiment, tools/exp_kcore_numbers.py)."""
+    confirmations (the r8 experiment, EXP_KCORE_NUMBERS.json)."""
     from pyspark.storagelevel import StorageLevel
 
     e = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
@@ -1332,7 +1332,7 @@ def kcore_numbers(
         for _ in range(rounds_per_k):
             keep = deg.filter(F.col("_d") >= k).select("src")
             # IDENTITY-SWEEP PRECHECK (r8 experiment,
-            # tools/exp_kcore_numbers.py): "no node below threshold"
+            # EXP_KCORE_NUMBERS.json): "no node below threshold"
             # PROVES "no edge removed" (every deg node carries >= 1
             # edge), so the level's fixed point is certified by a
             # node-table count on the checkpointed degree table

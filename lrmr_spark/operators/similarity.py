@@ -694,14 +694,11 @@ def pq_recall_at_k(
         id_col
     )
     hit = ranked.join(exact, id_col).select("_ra")
-    kdf = df.sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(int(x)) for x in sorted(ks)])).alias("k_prime")
-    )
+    kdf = parallelize(df.sparkSession, [(int(x),) for x in ks], "k_prime bigint not null")
     return (
         kdf.join(hit, F.col("_ra") <= F.col("k_prime"), "left")
         .groupBy("k_prime")
         .agg(F.count("_ra").cast("bigint").alias("hits"))
-        .select(F.col("k_prime").cast("bigint").alias("k_prime"), "hits")
         .orderBy("k_prime")
     )
 

@@ -1064,7 +1064,7 @@ def _train_rounds(base, dim: int, iterations: int) -> list[int]:
         # one parsed SQL string per gradient sum instead of py4j
         # Column construction (the PQ/IVF lesson): measured 0.38 vs
         # 0.73 s per round at sf0.1, gradients asserted identical
-        # (tools/exp_qround_ab.py). Integer literals carry the L
+        # (EXP_QROUND_AB.json). Integer literals carry the L
         # suffix and the accumulator seed is CAST(0 AS BIGINT), so
         # the arithmetic stays the exact-BIGINT form the oracle pins.
         w_arr = "array(" + ", ".join(f"{int(wi)}L" for wi in w) + ")"
@@ -1167,16 +1167,8 @@ def write_quality_model(
     w = train_hashed_ngram_weights(df, text_col, teacher, iterations)
     fs, jvm = _winnowing_fs(spark, path)
     fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_meta"), True)
-    # pure-JVM bounded table (createDataFrame from a Python list boots
-    # Python RDD workers — measured 4.1-5.2 s steady vs 0.17-0.26 s for
-    # this form at sf0.1, identical rows asserted; the dedup/similarity
-    # _meta writers already follow this rule)
-    # one-literal array<bigint>: O(1) py4j round-trips instead of
-    # O(n_buckets) — the similarity._dlit_arr rule (r11 verdict hygiene)
-    w_lit = F.lit([int(wi) for wi in w]).cast("array<bigint>")
-    spark.range(len(w)).select(
-        F.col("id").cast("int").alias("bucket"),
-        F.element_at(w_lit, F.col("id").cast("int") + 1).alias("weight"),
+    parallelize(
+        spark, [(i, int(wi)) for i, wi in enumerate(w)], "bucket int not null, weight bigint"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/weights")
     teacher_fp = _hashlib.md5(
         ",".join(str(int(t)) for t in teacher).encode()

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import decimal
 import os
+import threading
+from collections import OrderedDict
 from collections.abc import Iterable, Sequence
 from typing import Any
 
@@ -227,10 +229,13 @@ def read_json(spark: SparkSession, path: str, schema: Any = None, **options: Any
 
 
 # path -> ((file stamp, session conf), inferred schema); one entry per
-# path. Key and schema are stored as one tuple, so two threads racing on
-# a path can cost an extra inference but never pair a key with another
-# key's schema.
-_PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# path, least recently read first, at most _PARQUET_SCHEMAS_MAX paths so
+# a long session over many paths stays bounded. Key and schema are
+# stored as one tuple, so two threads racing on a path can cost an extra
+# inference but never pair a key with another key's schema.
+_PARQUET_SCHEMAS_MAX = 128
+_PARQUET_SCHEMAS: OrderedDict[str, tuple[tuple, StructType]] = OrderedDict()
+_PARQUET_SCHEMAS_LOCK = threading.Lock()
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -248,8 +253,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
       ``caseSensitive``, ...).
 
     Otherwise it infers as ``spark.read.parquet`` does and stores the
-    result. A rewrite in place that keeps a file's size and its mtime to
-    the nanosecond goes unseen. Paths on another filesystem
+    result. It keeps the ``_PARQUET_SCHEMAS_MAX`` most recently read
+    paths; a path read before those infers again. A rewrite in place
+    that keeps a file's size and its mtime to the nanosecond goes
+    unseen. Paths on another filesystem
     (``s3a://``, ``hdfs://``), paths that name no local file or
     directory (globs) and directories that lose a file while they are
     stamped always infer."""
@@ -257,12 +264,20 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     if stamp is None:
         return spark.read.parquet(path)
     key = (stamp, _conf_key(spark))
-    hit = _PARQUET_SCHEMAS.get(path)
+    with _PARQUET_SCHEMAS_LOCK:
+        hit = _PARQUET_SCHEMAS.get(path)
+        if hit is not None:
+            _PARQUET_SCHEMAS.move_to_end(path)
     if hit is not None and hit[0] == key:
         return spark.read.schema(hit[1]).parquet(path)
     df = spark.read.parquet(path)
     # a copy: df.schema is the frame's own object, which callers may mutate
-    _PARQUET_SCHEMAS[path] = (key, StructType.fromJson(df.schema.jsonValue()))
+    schema = StructType.fromJson(df.schema.jsonValue())
+    with _PARQUET_SCHEMAS_LOCK:
+        _PARQUET_SCHEMAS[path] = (key, schema)
+        _PARQUET_SCHEMAS.move_to_end(path)
+        while len(_PARQUET_SCHEMAS) > _PARQUET_SCHEMAS_MAX:
+            _PARQUET_SCHEMAS.popitem(last=False)
     return df
 
 

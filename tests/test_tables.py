@@ -111,3 +111,19 @@ def test_conf_change_reinfers(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.parquet.binaryAsString")
     assert SRC.read_parquet(spark, path).dtypes == [("b", "binary")]
+
+
+def test_memo_evicts_least_recently_read_path(spark, jobs_in_group, tmp_path, monkeypatch):
+    monkeypatch.setattr(SRC, "_PARQUET_SCHEMAS_MAX", 2)
+    paths = {}
+    for name in ("a", "b", "c"):
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({name: pa.array([1], pa.int64())}), paths[name])
+    for name in ("a", "b", "a", "c"):  # b is now the least recently read
+        SRC.read_parquet(spark, paths[name])
+    assert len(SRC._PARQUET_SCHEMAS) == 2
+    _, jobs = jobs_in_group("memo-recent", lambda: SRC.read_parquet(spark, paths["a"]))
+    assert jobs == []
+    got, jobs = jobs_in_group("memo-evicted", lambda: SRC.read_parquet(spark, paths["b"]))
+    assert len(jobs) == 1
+    assert got.columns == ["b"]
