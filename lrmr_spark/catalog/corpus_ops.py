@@ -20,7 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import text as TX
-from ..operators._meta_io import read_meta_row, write_meta_row
+from .. import stored_index as SI
 from ..tables import load
 from . import query
 from .oracle_util import grams_expr
@@ -1894,8 +1894,8 @@ def sample_weighted_priority(spark, sf_dir):
 @query("corpus_bloom_stored", oracle=_bloom_oracle)
 def corpus_bloom_stored(spark, sf_dir):
     """The STORED-sketch lifecycle for decontamination (write → probe):
-    the eval set's Bloom filter is persisted once as a parquet word
-    table with a ``_meta`` sidecar (bits / hash count / a params
+    the eval set's Bloom filter is persisted once as a stored index
+    (part ``words``; params bits / hash count / a params
     fingerprint — probing with a different geometry than the build
     mis-keys every bit, so reads raise on drift; the ANN-index
     discipline), then the training corpus is probed FROM THE STORED
@@ -1948,23 +1948,21 @@ def corpus_bloom_stored(spark, sf_dir):
         ).alias("p")
     ).select("p.w", "p.m")
     bf_build = inserts.groupBy("w").agg(F.bit_or("m").alias("bits"))
-    bf_build.write.mode("overwrite").parquet(f"{path}/words")
     fp = f"bits={_BF_BITS};hashes={_BF_HASHES};hash=md5-bf"
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
+    SI.commit(
+        path,
+        "bloom",
         {"bits": int(_BF_BITS), "hashes": int(_BF_HASHES), "params": fp},
+        {"words": SI.write_part(bf_build, path, "words")},
     )
 
-    meta = read_meta_row(
-        spark, f"{path}/_meta", "bits bigint, hashes int, params string"
-    )
-    if meta["params"] != fp:
+    idx = SI.open_index(path, "bloom", ("bits", "hashes", "params"))
+    if idx.params["params"] != fp:
         raise ValueError(
             "bloom-geometry drift: the stored sketch was built with "
-            f"{meta['params']!r}, this probe expects {fp!r}"
+            f"{idx.params['params']!r}, this probe expects {fp!r}"
         )
-    bf = spark.read.parquet(f"{path}/words")
+    bf = idx.read(spark, "words")
 
     marked = grams.withColumn(
         "anyev", F.max("is_ev").over(Window.partitionBy("g"))
@@ -2329,8 +2327,8 @@ def _quality_model_score_oracle() -> str:
 @query("docs_quality_model_score", oracle=_quality_model_score_oracle)
 def docs_quality_model_score(spark, sf_dir):
     """Serving from the STORED model registry: train + persist the
-    hashed-n-gram quality model (weights + feature geometry under a
-    _meta-disciplined dir — operators.text.write_quality_model), then
+    hashed-n-gram quality model (weights + feature geometry as a
+    stored index — operators.text.write_quality_model), then
     score the corpus FROM THE STORED artifact. The oracle replays
     training + scoring from scratch in SQL, so the row is red if the
     store/load round-trip perturbs a single weight or the drift/torn
@@ -2431,7 +2429,7 @@ def docs_chunk_embed_sq8_topk(spark, sf_dir):
     """The chunk → embed-stub → STORED-INDEX lifecycle as a hash-green
     row (docs_chunk_embed_ann_topk's exact-baseline twin through the
     persisted path): chunk the corpus, stub-embed each chunk, WRITE
-    the SQ8 codes table (operators.similarity.write_sq8_codes — _meta
+    the SQ8 codes table (operators.similarity.write_sq8_codes — params
     fingerprint, codes-only layout), then answer a symmetric-distance
     top-10 FROM THE STORED TABLE with a driver-quantized query. The
     oracle replays chunking, embedding, quantization, and SDC in SQL,

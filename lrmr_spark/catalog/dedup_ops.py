@@ -337,7 +337,7 @@ def dedup_minhash_incremental(spark, sf_dir):
 def dedup_minhash_stored_index(spark, sf_dir):
     """The production daily-crawl layout end-to-end: the accumulated
     corpus (doc_id MOD 5 <> 0) is materialized ONCE as an on-disk
-    MinHash index (reps + band posting list + _meta parquet/JSON,
+    MinHash index (reps + band posting list + manifest params,
     operators.dedup.write_minhash_index), then the day's batch
     (doc_id MOD 5 = 0) is matched against the STORED index — only the
     new side is tokenized and hashed; the corpus side is two parquet

@@ -366,7 +366,7 @@ def multimodal_phash_index_delete(spark, sf_dir):
     (reps minus every signature the takedown content carries), so the
     row is red if the delete removes too little (takedown'd content
     still matches), too much (surviving reps lost), or corrupts
-    _meta. Double-delete-0 idempotence is asserted inline and in
+    the params. Double-delete-0 idempotence is asserted inline and in
     tests/test_operators.py."""
     import os
     import tempfile

@@ -911,7 +911,7 @@ def ann_pq_stored_topk(spark, sf_dir):
     """PQ ADC top-10 over STORED codes — the production read path
     end-to-end (the dedup_minhash_stored_index layout discipline): the
     embeddings are quantized ONCE into a (vec_id, code_0..7) parquet
-    table with a self-describing _meta (codebook fingerprint — a
+    table with self-describing params (codebook fingerprint — a
     codebook drift between write and query raises instead of silently
     scoring against the wrong centroids), then the query scans ONLY
     the 8-byte codes: the scan's ReadSchema contains no embedding
@@ -1407,7 +1407,7 @@ def ann_ivfpq_topk(spark, sf_dir):
     the catalog proves separately (ann_ivf_pruned_topk: scan 1/4 of
     rows; ann_pq_stored_topk: ~9 bytes/row) into the production
     composition: ~1/4 of directories × ~1/28 of bytes. Codebook drift
-    between write and query raises via the stored _meta fingerprints.
+    between write and query raises via the stored fingerprints.
     Oracle recomputes assignment, probe pruning, codes, and the ADC
     sum from the same literals."""
     import os
@@ -1691,7 +1691,7 @@ def ann_ivf_recall_at_nprobe(spark, sf_dir):
 @query("ann_sq8_stored_topk", oracle=_sq8_sdc_oracle)
 def ann_sq8_stored_topk(spark, sf_dir):
     """The SQ8 production read path: write the codes table once
-    (write_sq8_codes — torn-write-guarded _meta with the quantizer
+    (write_sq8_codes — params carry the quantizer
     fingerprint), then answer the query from the STORED codes only —
     the scan reads (vec_id, codes), 64 bytes + id per row, never the
     raw embeddings (plan-pinned). SHARES ann_sq8_sdc_topk's oracle:

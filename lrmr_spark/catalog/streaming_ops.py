@@ -239,9 +239,9 @@ def streaming_line_dedup(spark, sf_dir):
     """The CCNet line-dedup curation loop as a LIVE STREAM: each
     micro-batch of documents is cleaned against the segment-frequency
     index accumulated from prior batches (prefix-causal), then lands
-    its own counts as a new index epoch — both sinks epoch-partitioned
-    dynamic overwrites, with before_epoch-scoped reads so a checkpoint
-    replay is bit-identical. Stream-index ≡ one-shot-index convergence
+    its own counts as a new index epoch — an epoch-partitioned output
+    sink and a replay-replaced index epoch, with before_epoch-scoped
+    reads so a checkpoint replay is bit-identical. Stream-index ≡ one-shot-index convergence
     and multi-batch prefix-causal semantics are asserted against a
     plain-python model in tests/test_streaming.py."""
     import os

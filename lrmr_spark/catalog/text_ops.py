@@ -874,7 +874,7 @@ def text_winnowing_index(spark, sf_dir):
     epochs — doc_id % 4 = 0 then % 4 = 2, so the multi-epoch read
     path is inside the gated query) becomes the fingerprint postings
     index; today's submissions (odd doc_ids) are matched against it
-    at min_shared = 2 under the _meta-recorded max_df = 8 read-time
+    at min_shared = 2 under the recorded max_df = 8 read-time
     cap. The oracle recomputes both sides from scratch over the same
     md5-8 window-minima, so the row is red if the epoch write, the
     postings dedupe, the df cap, or the (k, w) convention drifts.
@@ -911,7 +911,7 @@ def text_winnowing_index_compacted(spark, sf_dir):
     compact_winnowing_index), then match the odd-doc batch. SHARES
     text_winnowing_index's oracle verbatim: compaction must change no
     answer — a lost posting, a double-fold under a leaked dynamic
-    overwrite mode, or a parameter drift through the _meta rewrite
+    overwrite mode, or a parameter drift through the commit
     turns this row red."""
     import os
     import tempfile
@@ -1016,13 +1016,13 @@ def text_winnowing_index_empty_delete(spark, sf_dir):
     """The VALIDLY-EMPTY index lifecycle: write one epoch, take down
     EVERY document in it (the full-corpus takedown — a GDPR purge or
     a poisoned-crawl rollback), then REVIVE the index by appending a
-    fresh epoch and match against it. An emptied index records its
-    emptiness in _meta (postings + df dirs dropped wholesale) so the
+    fresh epoch and match against it. An emptied index keeps postings
+    and df with no segments, so the
     intermediate state is queryable, the parameter-drift guard still
     applies across the gap, and the revival append rebuilds the df
     side table from scratch — the oracle's stored side is EXACTLY the
     revived epoch's documents, so a leaked pre-delete posting, a lost
-    _meta field, or a stale df ban turns this row red. Fresh temp dir
+    param, or a stale df ban turns this row red. Fresh temp dir
     per run (the lifecycle's emptied state is the point; a reused dir
     would take the replay shortcut instead)."""
     import os
@@ -1374,7 +1374,7 @@ def text_line_dedup_compacted(spark, sf_dir):
     it (fold epochs into one — operators/text.py compact_line_index),
     then clean the odd-doc batch. SHARES text_line_dedup_index's
     oracle verbatim: compaction must change no answer — a lost count,
-    a double-fold, or a width drift through the _meta rewrite turns
+    a double-fold, or a width drift through the commit turns
     this row red. Completes the stored line-index lifecycle: write →
     append (epochs) → COMPACT → clean, with the streaming twin
     (streaming_line_dedup) covering the live-append path."""

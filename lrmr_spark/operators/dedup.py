@@ -23,15 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
-from ._meta_io import overwrite_parquet_swap, read_meta_row, write_meta_row
+from .. import stored_index as SI
 from .text import distinct_tokens, fingerprint, tokens
 
-# A/B switch for the MinHash reps-stage exchange fusion (see
-# _minhash_reps): True = hash-repartition exploded tokens by _id up
-# front so one exchange serves both aggregations (the default); False =
-# let each groupBy insert its own exchange. Flipped only by
-# the A/B that measured the trade at scale (AB_REPS_FUSION.json).
-_FUSE_REPS_EXCHANGE = True
+_MINHASH_PARAMS = ("num_hashes", "bands", "unit", "shingle_k", "fast")
 
 __all__ = [
     "exact_dedup",
@@ -163,15 +158,11 @@ def _minhash_items(
             F.col(id_col).alias("_id"),
             F.explode_outer(shingles(text_col, shingle_k)).alias("_item"),
         )
-        if _FUSE_REPS_EXCHANGE:
-            items_df = items_df.repartition("_id")
-        return items_df.dropDuplicates(["_id", "_item"])
+        return items_df.repartition("_id").dropDuplicates(["_id", "_item"])
     if unit == "multiset":
         exploded = df.select(
             F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("_tok")
-        )
-        if _FUSE_REPS_EXCHANGE:
-            exploded = exploded.repartition("_id")
+        ).repartition("_id")
         item = F.concat(F.col("_tok"), F.lit(":"), F.col("_cnt"))
         return (
             exploded.groupBy("_id", "_tok")
@@ -211,20 +202,8 @@ def _minhash_reps(
     # between them. The repartition shuffles raw token instances
     # (≈2-3× the distinct-item rows the groupBy exchange would carry)
     # but deletes the second, WIDER exchange — the one carrying every
-    # distinct item plus its 16 hash columns. Measured min-of-3 on the
-    # 4×4 fast config: 1.93→1.80 s at sf0.1, 3.65→3.14 s at sf1, pairs
-    # The sf10 question (does the repartition's ~3× raw token rows
-    # outweigh the saved exchange at scale?) is RESOLVED — r5 reran
-    # the A/B under the idle-gated protocol (load < 1 before every
-    # timed run, answer equality asserted, plus an alternating-order
-    # second pass, AB_REPS_FUSION.json): pooled
-    # min-of-N fused 27.7 s vs unfused 29.6 s at sf10 (−6%),
-    # consistent in direction with sf0.1 (1.80 vs 1.93) and sf1
-    # (3.14 vs 3.65). No flip; a sequential-order pass that briefly
-    # showed unfused ahead inverted under alternating order — host
-    # drift, not signal (identical code spans 27–163 s on this host).
-    # Fusion stays the default. _FUSE_REPS_EXCHANGE is the A/B switch
-    # the tool flips — not a user-facing knob.
+    # distinct item plus its 16 hash columns. The fused shape won the
+    # A/B at sf0.1, sf1 and sf10 (AB_REPS_FUSION.json).
     items_df = (
         shared_items
         if shared_items is not None
@@ -569,17 +548,16 @@ def write_minhash_index(
     shingle_k: int = 3,
     fast: bool = True,
 ) -> None:
-    """Materialize the corpus MinHash index ONCE: ``path/reps`` holds
-    (_id, items, signature) per representative, ``path/bands`` the
+    """Materialize the corpus MinHash index ONCE: part ``reps`` holds
+    (_id, items, signature) per representative, part ``bands`` the
     (band, _id) posting list. Every subsequent batch matches against
     the stored index (match_minhash_index) without re-hashing the
     corpus — the write-once/read-per-batch shape a daily-crawl dedup
     runs in production. Defaults to the fast (xxhash64) path.
 
-    Hashing parameters are persisted to ``path/_meta`` (single-row
-    JSON via Spark, so the index stays self-describing on any
-    filesystem Spark writes to); match_minhash_index reads them back,
-    making a parameter drift between write and match impossible.
+    Hashing parameters are the manifest's params (stored_index);
+    match_minhash_index reads them back, making a parameter drift
+    between write and match impossible.
 
     The reps table also persists each rep's multiset fingerprint
     (``_fp`` — the rep pipeline's own group key, free to keep):
@@ -589,25 +567,25 @@ def write_minhash_index(
     reps = _minhash_reps(
         df, id_col, text_col, num_hashes, unit, shingle_k, fast, keep_fp=True
     )
-    reps.write.mode("overwrite").parquet(f"{path}/reps")
+    new_reps = SI.write_part(reps, path, "reps")
     # read back so the band explode consumes the materialized table
     # instead of re-running the rep pipeline
-    spark = df.sparkSession
-    stored = spark.read.parquet(f"{path}/reps")
-    stored.select(
-        "_id", F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
-    ).write.mode("overwrite").parquet(f"{path}/bands")
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "num_hashes": int(num_hashes),
-            "bands": int(bands),
-            "unit": unit,
-            "shingle_k": int(shingle_k),
-            "fast": bool(fast),
-        },
+    stored = new_reps.read(df.sparkSession, path, "reps")
+    new_bands = SI.write_part(
+        stored.select(
+            "_id", F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
+        ),
+        path,
+        "bands",
     )
+    params = {
+        "num_hashes": int(num_hashes),
+        "bands": int(bands),
+        "unit": unit,
+        "shingle_k": int(shingle_k),
+        "fast": bool(fast),
+    }
+    SI.commit(path, "minhash", params, {"reps": new_reps, "bands": new_bands})
 
 
 def append_minhash_index(
@@ -616,7 +594,7 @@ def append_minhash_index(
     """Fold a new batch into a stored MinHash index (the write side of
     the daily-crawl loop write_minhash_index/match_minhash_index model:
     match today's batch against the index, THEN append it so tomorrow's
-    batch sees it). Hashing parameters come from the stored ``_meta``
+    batch sees it). Hashing parameters come from the stored manifest
     — drift is impossible by construction. Returns the number of new
     representative rows appended.
 
@@ -633,65 +611,49 @@ def append_minhash_index(
 
     Scale shape: the new batch is hashed once (the same one-exchange
     rep pipeline); dedup-against-stored is a narrow anti-join on the
-    8-byte/32-hex multiset fingerprint, which r12 indexes PERSIST as
-    a rep column (_fp) — the stored side of the anti-join is a single
-    narrow column scan and the wide item arrays are never read at all
-    (pre-r12 indexes without the column fall back to recomputing it).
-    Appends are plain parquet appends; single-writer, like the
-    index's write-once discipline."""
+    persisted 8-byte/32-hex multiset fingerprint (_fp), so the stored
+    side is a single narrow column scan and the wide item arrays are
+    never read. The new reps and their postings land as new segments
+    of both parts under ONE manifest commit."""
     spark = new_df.sparkSession
-    meta = read_minhash_index_meta(spark, path)
+    idx = SI.open_index(path, "minhash", _MINHASH_PARAMS)
+    meta = idx.params
     num_hashes, bands = meta["num_hashes"], meta["bands"]
-    unit, shingle_k, fast = meta["unit"], meta["shingle_k"], meta["fast"]
     reps_new = _minhash_reps(
-        new_df, id_col, text_col, num_hashes, unit, shingle_k, fast, keep_fp=True
+        new_df, id_col, text_col, num_hashes, meta["unit"], meta["shingle_k"],
+        meta["fast"], keep_fp=True,
     )
-    stored = spark.read.parquet(f"{path}/reps")
-    # Indexes written since r12 persist the rep fingerprint (_fp) —
-    # the anti-join then reads ONE narrow stored column instead of
-    # re-scanning the wide items arrays and re-hashing every one
-    # (guide §6; at 100 TB the items scan was the append's dominant
-    # read). Pre-r12 indexes lack the column: recompute, and keep the
-    # stored layout unchanged by dropping _fp from the appended rows.
-    legacy = "_fp" not in stored.columns
-    if legacy:
-        fp = (
-            (lambda c: F.xxhash64(c))
-            if fast
-            else (lambda c: F.md5(F.array_join(c, " ")))
-        )
-        stored_fps = stored.select(fp(F.col("items")).alias("_fp"))
-    else:
-        stored_fps = stored.select("_fp")
+    stored_fps = idx.read(spark, "reps").select("_fp")
     fresh = reps_new.join(stored_fps, "_fp", "left_anti")
-    if legacy:
-        fresh = fresh.drop("_fp")
     fresh = fresh.localCheckpoint(eager=True)  # one computation, both writes
     n_new = fresh.count()
     if n_new:
-        fresh.write.mode("append").parquet(f"{path}/reps")
-        fresh.select(
-            "_id", F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
-        ).write.mode("append").parquet(f"{path}/bands")
+        reps = SI.write_part(fresh, path, "reps")
+        bands_part = SI.write_part(
+            fresh.select(
+                "_id",
+                F.explode(_band_keys(num_hashes, bands, meta["fast"])).alias("_band"),
+            ),
+            path,
+            "bands",
+        )
+        SI.commit(
+            path,
+            "minhash",
+            meta,
+            {
+                "reps": idx.parts["reps"].plus(reps),
+                "bands": idx.parts["bands"].plus(bands_part),
+            },
+        )
+    fresh.unpersist()
     return n_new
 
 
 def read_minhash_index_meta(spark, path: str) -> dict:
     """The hashing parameters a stored index was built with
-    (write_minhash_index's ``path/_meta``)."""
-    row = read_meta_row(
-        spark,
-        f"{path}/_meta",
-        "num_hashes int, bands int, unit string, shingle_k int, "
-        "fast boolean",
-    )
-    return {
-        "num_hashes": int(row["num_hashes"]),
-        "bands": int(row["bands"]),
-        "unit": row["unit"],
-        "shingle_k": int(row["shingle_k"]),
-        "fast": bool(row["fast"]),
-    }
+    (write_minhash_index's manifest params)."""
+    return dict(SI.open_index(path, "minhash", _MINHASH_PARAMS).params)
 
 
 def match_minhash_index(
@@ -709,14 +671,15 @@ def match_minhash_index(
     for verify). Output: (new_id, base_id, jaccard ≥ threshold).
 
     Hashing parameters (num_hashes/bands/unit/shingle_k/fast) come
-    from the index's stored ``_meta`` — a batch hashed differently
+    from the index's stored manifest — a batch hashed differently
     than the corpus would silently produce zero candidates (e.g.
     fast bigint band keys joined against md5 strings), so they are
     not free parameters here. Passing one as a keyword is allowed
     only as an assertion: a value that disagrees with the stored
     meta raises instead of mis-matching."""
     spark = new_df.sparkSession
-    meta = read_minhash_index_meta(spark, path)
+    idx = SI.open_index(path, "minhash", _MINHASH_PARAMS)
+    meta = idx.params
     drift = {
         k: (v, meta[k])
         for k, v in overrides.items()
@@ -738,8 +701,8 @@ def match_minhash_index(
     new_banded = new_reps.select(
         "_id", F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
     )
-    base_banded = spark.read.parquet(f"{path}/bands")
-    base_reps = spark.read.parquet(f"{path}/reps")
+    base_banded = idx.read(spark, "bands")
+    base_reps = idx.read(spark, "reps")
     cand = (
         new_banded.alias("l")
         .join(base_banded.alias("r"), on="_band")
@@ -1501,20 +1464,18 @@ def delete_minhash_index_content(
     that-content EXACTLY (asserted in tests).
 
     The takedown batch is itemized with the index's own stored
-    parameters (unit/shingle_k/fast from _meta — a drifted
-    itemization would silently delete nothing), matched by item-array
-    equality, and both stored tables are rewritten: reps minus the
-    matched rows, bands minus the removed rep ids. Torn-write
-    discipline: survivors materialize first (eager checkpoint — never
-    read and overwrite one parquet dir in a single plan), _meta is
-    invalidated before the rewrites and restored after, so an
-    interruption fails loudly on the next read. Returns reps removed.
+    parameters (unit/shingle_k/fast — a drifted itemization would
+    silently delete nothing), matched by item-array equality, and both
+    parts are rewritten as new segments (reps minus the matched rows,
+    bands minus the removed rep ids) under one manifest commit.
+    Returns reps removed.
 
     Scale shape: the takedown side is bounded (a removal batch);
     reps/bands are scanned once each and rewritten — the rewrite IS
     the compaction a tombstone variant would eventually run."""
     spark = takedown_df.sparkSession
-    meta = read_minhash_index_meta(spark, path)
+    idx = SI.open_index(path, "minhash", _MINHASH_PARAMS)
+    meta = idx.params
     t_items = (
         _minhash_reps(
             takedown_df,
@@ -1528,8 +1489,7 @@ def delete_minhash_index_content(
         .select(F.col("items").alias("_t_items"))
         .distinct()
     )
-    reps = spark.read.parquet(f"{path}/reps")
-    bands = spark.read.parquet(f"{path}/bands")
+    reps = idx.read(spark, "reps")
     # ONE reps scan serves keep + removed + the count (r12, measured:
     # the former anti-join/semi-join pair scanned and joined reps
     # twice and checkpointed each side separately — EXP_CRUD_PHASES).
@@ -1542,31 +1502,18 @@ def delete_minhash_index_content(
         .localCheckpoint(eager=True)
     )
     n_removed = flagged.filter(F.col("_rm")).count()
-    if n_removed == 0:
-        # nothing matched: the index is bit-identical to the rewrite's
-        # output — skip the rewrites AND the _meta invalidation window
-        # entirely (idempotent re-sends stop paying the full rewrite;
-        # measured 2.3 s -> ~1 s at sf0.1)
-        flagged.unpersist()
-        return 0
-    keep_reps = flagged.filter(~F.col("_rm")).drop("_rm")
-    removed_ids = flagged.filter(F.col("_rm")).select("_id")
-    # bands survivors in ONE pass: the anti-join plan reads the old
-    # bands dir (removed_ids comes off the flagged checkpoint) while
-    # writing a sibling temp, swapped in after success — the former
-    # eager checkpoint's only consumer was this write (r12, guide §5)
-    keep_bands = bands.join(removed_ids, "_id", "left_anti")
-    # torn-write guard: no _meta may pair with half-rewritten tables
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # deliberately schema-INFERRED (unlike the hot-path _meta reads):
-    # this generic backup must round-trip every field the writer emits,
-    # known or future, and it runs once per delete, not per query
-    meta_backup = spark.read.json(f"{path}/_meta").collect()[0].asDict()
-    fs.delete(jpath, True)
-    keep_reps.write.mode("overwrite").parquet(f"{path}/reps")
-    overwrite_parquet_swap(keep_bands, f"{path}/bands")
-    write_meta_row(spark, f"{path}/_meta", meta_backup)
+    # a takedown that matched nothing leaves the index bit-identical,
+    # so idempotent re-sends skip the rewrite (2.3 s -> ~1 s at sf0.1)
+    if n_removed:
+        removed_ids = flagged.filter(F.col("_rm")).select("_id")
+        keep_reps = SI.write_part(
+            flagged.filter(~F.col("_rm")).drop("_rm"), path, "reps"
+        )
+        keep_bands = SI.write_part(
+            idx.read(spark, "bands").join(removed_ids, "_id", "left_anti"),
+            path,
+            "bands",
+        )
+        SI.commit(path, "minhash", meta, {"reps": keep_reps, "bands": keep_bands})
     flagged.unpersist()  # pitfall 19: release the checkpoint blocks
     return int(n_removed)

@@ -1093,8 +1093,8 @@ def label_propagation(
         # fingerprint-identical labels on every arm):
         # hash-repartitioning the raw votes by nd makes ONE exchange
         # serve both the (nd, label) count AND the nd argmax
-        # (partitioning keys ⊆ grouping keys — the minhash
-        # _FUSE_REPS_EXCHANGE lesson). Measured: sf0.1 5.18→4.61 s,
+        # (partitioning keys ⊆ grouping keys — the minhash reps
+        # fusion, AB_REPS_FUSION.json). Measured: sf0.1 5.18→4.61 s,
         # sf1 23.9→18.2 / 41.8→19.0 s min-of-2; at sf10 (16.7M nodes,
         # above the broadcast gate) the r12 settle at loadavg <3 ran
         # fused 57.7 vs unfused 77.4 s min-of-3 with 2/3 paired reps

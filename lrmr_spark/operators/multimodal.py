@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._meta_io import read_meta_row, write_meta_row
+from .. import stored_index as SI
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -382,8 +382,8 @@ def write_phash_index(media: DataFrame, path: str) -> None:
         .groupBy("phash")
         .agg(F.min("media_id").alias("media_id"))
     )
-    reps.write.mode("overwrite").parquet(f"{path}/hashes")
-    write_meta_row(media.sparkSession, f"{path}/_meta", {"n_bits": 16})
+    hashes = SI.write_part(reps, path, "hashes")
+    SI.commit(path, "phash", {"n_bits": 16}, {"hashes": hashes})
 
 
 def delete_phash_index_content(takedown_media: DataFrame, path: str) -> int:
@@ -399,18 +399,15 @@ def delete_phash_index_content(takedown_media: DataFrame, path: str) -> int:
     content EXACTLY (asserted in tests). Idempotent: a second
     identical delete removes 0 rows.
 
-    Torn-write discipline: survivors materialize first (eager
-    checkpoint — never read and overwrite one parquet dir in a single
-    plan), _meta is invalidated before the rewrite and restored
-    after, so an interruption fails loudly on the next read; the
-    checkpoint is unpersisted on exit (pitfall 19). Scale shape: the
-    takedown side is a bounded removal batch; the stored table is
-    scanned once and rewritten — the rewrite IS the compaction a
-    tombstone variant would eventually run."""
+    The survivors are written as a new segment and committed in place
+    of the old one; the checkpoint is unpersisted on exit (pitfall
+    19). Scale shape: the takedown side is a bounded removal batch;
+    the stored table is scanned once and rewritten — the rewrite IS
+    the compaction a tombstone variant would eventually run."""
     spark = takedown_media.sparkSession
-    meta = read_meta_row(spark, f"{path}/_meta", "n_bits int")
+    idx = SI.open_index(path, "phash", ("n_bits",))
     t_hashes = phash_media(takedown_media).select("phash").distinct()
-    stored = spark.read.parquet(f"{path}/hashes")
+    stored = idx.read(spark, "hashes")
     # one-scan flag + no-op skip (the delete_pq_codes r12 pattern):
     # t_hashes is distinct, so the left join matches each stored row
     # at most once and adds no fan-out
@@ -425,16 +422,11 @@ def delete_phash_index_content(takedown_media: DataFrame, path: str) -> int:
         .localCheckpoint(eager=True)
     )
     n_removed = flagged.filter(F.col("_rm")).count()
-    if n_removed == 0:
-        flagged.unpersist()
-        return 0
-    survivors = flagged.filter(~F.col("_rm")).drop("_rm")
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-    survivors.write.mode("overwrite").parquet(f"{path}/hashes")
-    write_meta_row(spark, f"{path}/_meta", {"n_bits": int(meta["n_bits"])})
+    if n_removed:
+        survivors = SI.write_part(
+            flagged.filter(~F.col("_rm")).drop("_rm"), path, "hashes"
+        )
+        SI.commit(path, "phash", idx.params, {"hashes": survivors})
     flagged.unpersist()  # pitfall 19: release the checkpoint blocks
     return int(n_removed)
 
@@ -454,8 +446,8 @@ def match_phash_index(
     from .dedup import _block_bounds
 
     spark = batch_media.sparkSession
-    meta = read_meta_row(spark, f"{index_path}/_meta", "n_bits int")
-    n_bits = int(meta["n_bits"])
+    idx = SI.open_index(index_path, "phash", ("n_bits",))
+    n_bits = idx.params["n_bits"]
     blocks = k + 1
     bounds = _block_bounds(n_bits, blocks)
 
@@ -480,7 +472,7 @@ def match_phash_index(
         )
 
     new_hashes = banded(phash_media(batch_media), "new_id")
-    base = banded(spark.read.parquet(f"{index_path}/hashes"), "base_id")
+    base = banded(idx.read(spark, "hashes"), "base_id")
     return (
         new_hashes.join(base, on="_blk")
         .select(

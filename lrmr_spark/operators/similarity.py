@@ -20,8 +20,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import stored_index as SI
 from ..sources import parallelize
-from ._meta_io import read_meta_row, write_meta_row
 
 __all__ = [
     "dot",
@@ -55,14 +55,13 @@ __all__ = [
 ]
 
 
-# Stored-index _meta schemas, exactly the fields each writer emits: an
-# explicit schema makes every _meta read a single job (schema inference
-# runs an extra scan job per read — measured ~0.13 s/read on the
-# lifecycle entries, r11 opt round). Missing-path reads still raise
-# AnalysisException (the torn-state contract) with or without a schema.
-_PQ_META_SCHEMA = "num_sub int, dim int, n_centroids int, codebook_md5 string, id_col string"
-_IVFPQ_META_SCHEMA = "num_sub int, dim int, n_coarse int, n_pq_centroids int, coarse_md5 string, pq_md5 string, by_residual boolean, id_col string"
-_SQ8_META_SCHEMA = "dim int, params_md5 string, id_col string"
+# The params each stored-index family's manifest must carry.
+_PQ_PARAMS = ("num_sub", "dim", "n_centroids", "codebook_md5", "id_col")
+_IVFPQ_PARAMS = (
+    "num_sub", "dim", "n_coarse", "n_pq_centroids", "coarse_md5", "pq_md5",
+    "by_residual", "id_col",
+)
+_SQ8_PARAMS = ("dim", "params_md5", "id_col")
 
 
 def _centroid_fingerprint(centroids: list[list[float]]) -> str:
@@ -750,20 +749,6 @@ def pq_adc_topk(
     )
 
 
-def _invalidate_meta(spark, path: str) -> None:
-    """Delete ``path/_meta`` (if present) BEFORE overwriting codes: the
-    codes and _meta writes are not atomic together, so a failure between
-    them must leave NO _meta rather than the previous one — a stale
-    _meta would pair the OLD codebook fingerprint with NEW codes and the
-    drift check would silently accept wrong distances. With _meta gone,
-    the next read fails loudly (missing-path AnalysisException) until a
-    complete rewrite lands."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-
-
 def write_pq_codes(
     df: DataFrame,
     path: str,
@@ -779,46 +764,36 @@ def write_pq_codes(
     path needs only codes.
 
     The codebook identity (md5 over exact centroid reprs), num_sub and
-    dim are persisted to ``path/_meta`` (single-row JSON, the
-    write_minhash_index discipline), so the stored table is
+    dim are the manifest's params (the write_minhash_index
+    discipline), so the stored table is
     self-describing and pq_adc_topk_stored raises on codebook/param
     drift instead of silently scoring against the wrong centroids —
     codes are meaningless outside their codebook."""
     code_cols = [f"code_{s}" for s in range(num_sub)]
-    _invalidate_meta(df.sparkSession, path)  # torn-write guard: no stale _meta over new codes
     # NULL embeddings never enter the index: their codes would be NULL
     # and element_at(lut, NULL) resolves like index -1 on Spark 4
     # (silently wrong distance, not NULL — see pq_adc_topk)
-    pq_codes(
-        df.filter(F.col(vec_col).isNotNull()), centroids, num_sub, id_col, vec_col
-    ).select(
-        id_col, *code_cols
-    ).write.mode("overwrite").parquet(f"{path}/codes")
-    spark = df.sparkSession
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "num_sub": int(num_sub),
-            "dim": int(len(centroids[0])),
-            "n_centroids": int(len(centroids)),
-            "codebook_md5": _centroid_fingerprint(centroids),
-            "id_col": id_col,
-        },
+    codes = SI.write_part(
+        pq_codes(
+            df.filter(F.col(vec_col).isNotNull()), centroids, num_sub, id_col, vec_col
+        ).select(id_col, *code_cols),
+        path,
+        "codes",
     )
+    params = {
+        "num_sub": int(num_sub),
+        "dim": int(len(centroids[0])),
+        "n_centroids": int(len(centroids)),
+        "codebook_md5": _centroid_fingerprint(centroids),
+        "id_col": id_col,
+    }
+    SI.commit(path, "pq", params, {"codes": codes})
 
 
 def read_pq_codes_meta(spark, path: str) -> dict:
     """The parameters a stored PQ codes table was built with
-    (write_pq_codes' ``path/_meta``)."""
-    row = read_meta_row(spark, f"{path}/_meta", _PQ_META_SCHEMA)
-    return {
-        "num_sub": int(row["num_sub"]),
-        "dim": int(row["dim"]),
-        "n_centroids": int(row["n_centroids"]),
-        "codebook_md5": row["codebook_md5"],
-        "id_col": row["id_col"],
-    }
+    (write_pq_codes' manifest params)."""
+    return dict(SI.open_index(path, "pq", _PQ_PARAMS).params)
 
 
 def pq_adc_topk_stored(
@@ -838,11 +813,12 @@ def pq_adc_topk_stored(
     the original dimension.
 
     ``centroids`` must be the codebook the codes were written with:
-    the stored _meta's codebook fingerprint is checked and a mismatch
-    raises (codes index into THIS codebook; scoring them against
-    another would be silently wrong, the match_minhash_index drift
+    the stored codebook fingerprint is checked and a mismatch raises
+    (codes index into THIS codebook; scoring them against another
+    would be silently wrong, the match_minhash_index drift
     discipline)."""
-    meta = read_pq_codes_meta(spark, path)
+    idx = SI.open_index(path, "pq", _PQ_PARAMS)
+    meta = idx.params
     fp = _centroid_fingerprint(centroids)
     if fp != meta["codebook_md5"]:
         raise ValueError(
@@ -866,12 +842,9 @@ def pq_adc_topk_stored(
         ]
         for s in range(num_sub)
     ]
-    # defensively drop NULL-code rows (indexes written before the
-    # NULL-embedding write filter): element_at with a NULL index acts
-    # like -1 on Spark 4 → silently wrong distance, not NULL
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("code_0").isNotNull()
-    )
+    # defensively drop NULL-code rows: element_at with a NULL index
+    # acts like -1 on Spark 4 → silently wrong distance, not NULL
+    codes = idx.read(spark, "codes").filter(F.col("code_0").isNotNull())
     adist: Column | None = None
     for s in range(num_sub):
         term = F.element_at(
@@ -956,7 +929,7 @@ def ivfpq_rerank_topk(
     pushdown story — here shortlist recall is additionally bounded by
     the probe set, the standard IVF trade). Works over both raw and
     residual encodings (the shortlist stage reads by_residual from the
-    stored _meta)."""
+    stored params)."""
     spark = emb_df.sparkSession
     shortlist = ivfpq_adc_topk(
         spark, path, query, coarse_centroids, pq_centroids,
@@ -990,6 +963,25 @@ def _exact_rerank(
     )
 
 
+def _stored_ids(spark, idx, id_col: str) -> DataFrame:
+    """The stored id column of a codes index, renamed to ``id_col`` —
+    the narrow side of a first-writer-wins anti-join."""
+    return idx.read(spark, "codes").select(F.col(idx.params["id_col"]).alias(id_col))
+
+
+def _commit_append(idx, path: str, out: DataFrame) -> int:
+    """Append ``out`` (already id-deduped against the index) as new
+    codes segments under one manifest commit; returns rows appended."""
+    out = out.localCheckpoint(eager=True)  # one computation serves count + write
+    n_new = out.count()
+    if n_new:
+        codes = idx.parts["codes"]
+        new = SI.write_part(out, path, "codes", key=codes.key)
+        SI.commit(path, idx.family, idx.params, {"codes": codes.plus(new)})
+    out.unpersist()
+    return n_new
+
+
 def append_pq_codes(
     new_df: DataFrame,
     path: str,
@@ -1001,7 +993,7 @@ def append_pq_codes(
     the ANN twin of append_minhash_index (the daily-crawl loop: match/
     query against the index, THEN append the batch so tomorrow's
     queries see it). Quantization parameters and the codebook come
-    from the stored ``_meta``; a codebook whose fingerprint disagrees
+    from the stored params; a codebook whose fingerprint disagrees
     with the stored one raises (appended codes MUST index into the
     codebook the table was built with — mixing codebooks scores
     silently wrong distances). Returns the number of rows appended.
@@ -1016,10 +1008,10 @@ def append_pq_codes(
     Scale shape: the anti-join scans ONLY the stored id column
     (column-pruned parquet read; codes never load), the new batch is
     quantized by the same zero-shuffle codegen projection as
-    write_pq_codes, and the append is a plain parquet append —
-    single-writer, like the index's write-once discipline."""
+    write_pq_codes, and the append is one new segment."""
     spark = new_df.sparkSession
-    meta = read_pq_codes_meta(spark, path)
+    idx = SI.open_index(path, "pq", _PQ_PARAMS)
+    meta = idx.params
     fp = _centroid_fingerprint(centroids)
     if fp != meta["codebook_md5"]:
         raise ValueError(
@@ -1028,22 +1020,32 @@ def append_pq_codes(
             "— appended codes must index into the stored codebook"
         )
     num_sub, dim, sid = meta["num_sub"], meta["dim"], meta["id_col"]
-    stored_ids = spark.read.parquet(f"{path}/codes").select(
-        F.col(sid).alias(id_col)
+    fresh = new_df.filter(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
+    ).join(_stored_ids(spark, idx, id_col), id_col, "left_anti")
+    return _commit_append(
+        idx,
+        path,
+        pq_codes(fresh, centroids, num_sub, id_col, vec_col).select(
+            F.col(id_col).alias(sid), *[f"code_{s}" for s in range(num_sub)]
+        ),
     )
-    fresh = (
-        new_df.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
+
+
+def _open_ivfpq(path: str, coarse_centroids, pq_centroids, who: str):
+    """The stored IVF-PQ index, checked against both codebooks."""
+    idx = SI.open_index(path, "ivfpq", _IVFPQ_PARAMS)
+    if idx.params["coarse_md5"] != _centroid_fingerprint(coarse_centroids):
+        raise ValueError(
+            "coarse-codebook drift: the stored index was partitioned by a "
+            f"different coarse quantizer than the {who} supplied"
         )
-        .join(stored_ids, id_col, "left_anti")
-    )
-    out = pq_codes(fresh, centroids, num_sub, id_col, vec_col).select(
-        F.col(id_col).alias(sid), *[f"code_{s}" for s in range(num_sub)]
-    ).localCheckpoint(eager=True)  # one computation serves count + write
-    n_new = out.count()
-    if n_new:
-        out.write.mode("append").parquet(f"{path}/codes")
-    return n_new
+    if idx.params["pq_md5"] != _centroid_fingerprint(pq_centroids):
+        raise ValueError(
+            "pq-codebook drift: stored codes index a different PQ codebook "
+            f"than the {who} supplied"
+        )
+    return idx
 
 
 def append_ivfpq_index(
@@ -1057,44 +1059,25 @@ def append_ivfpq_index(
     """append_pq_codes for the partitioned IVF-PQ layout
     (write_ivfpq_index): new vectors are coarse-assigned, (optionally
     residual-)quantized with the exact write-path expressions, and
-    appended into their partition directories — parquet's partitioned
-    append IS the inverted-list insert. Both codebook fingerprints are
-    checked against the stored ``_meta`` (drift raises); first-writer-
-    wins on id; append ≡ rebuild for id-disjoint batches (same
-    determinism argument as append_pq_codes, asserted in tests).
-    Returns rows appended."""
+    appended as new segments of their inverted lists (``part`` keys).
+    Both codebook fingerprints are checked against the stored params
+    (drift raises); first-writer-wins on id; append ≡ rebuild for
+    id-disjoint batches (same determinism argument as append_pq_codes,
+    asserted in tests). Returns rows appended."""
     spark = new_df.sparkSession
-    row = read_meta_row(spark, f"{path}/_meta", _IVFPQ_META_SCHEMA)
-    if row["coarse_md5"] != _centroid_fingerprint(coarse_centroids):
-        raise ValueError(
-            "coarse-codebook drift: the stored index was partitioned by a "
-            "different coarse quantizer than the append supplied"
-        )
-    if row["pq_md5"] != _centroid_fingerprint(pq_centroids):
-        raise ValueError(
-            "pq-codebook drift: stored codes index a different PQ codebook "
-            "than the append supplied"
-        )
-    num_sub, dim = int(row["num_sub"]), int(row["dim"])
-    sid = row["id_col"]
-    by_residual = bool(row["by_residual"]) if "by_residual" in row else False
-    stored_ids = spark.read.parquet(f"{path}/codes").select(
-        F.col(sid).alias(id_col)
+    idx = _open_ivfpq(path, coarse_centroids, pq_centroids, "append")
+    meta = idx.params
+    fresh = new_df.filter(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == meta["dim"])
+    ).join(_stored_ids(spark, idx, id_col), id_col, "left_anti")
+    return _commit_append(
+        idx,
+        path,
+        _ivfpq_encode(
+            fresh, coarse_centroids, pq_centroids, meta["num_sub"],
+            meta["by_residual"], id_col, vec_col,
+        ).withColumnRenamed(id_col, meta["id_col"]),
     )
-    fresh = (
-        new_df.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-        )
-        .join(stored_ids, id_col, "left_anti")
-    )
-    out = _ivfpq_encode(
-        fresh, coarse_centroids, pq_centroids, num_sub, by_residual,
-        id_col, vec_col,
-    ).withColumnRenamed(id_col, sid).localCheckpoint(eager=True)
-    n_new = out.count()
-    if n_new:
-        out.write.mode("append").partitionBy("part").parquet(f"{path}/codes")
-    return n_new
 
 
 def write_ivfpq_index(
@@ -1132,7 +1115,7 @@ def write_ivfpq_index(
     reductions this catalog already proves separately
     (ann_ivf_pruned_topk, ann_pq_stored_topk).
 
-    ``path/_meta`` records BOTH codebook fingerprints + num_sub +
+    The params record BOTH codebook fingerprints + num_sub +
     by_residual; ivfpq_adc_topk raises on drift (codes and partitions
     are meaningless outside the codebooks that produced them)."""
     if len(pq_centroids[0]) % num_sub != 0:
@@ -1144,23 +1127,18 @@ def write_ivfpq_index(
         df.filter(F.col(vec_col).isNotNull()),  # NULLs excluded at write time (see write_pq_codes)
         coarse_centroids, pq_centroids, num_sub, by_residual, id_col, vec_col,
     )
-    _invalidate_meta(df.sparkSession, path)  # torn-write guard: no stale _meta over new codes
-    out.write.mode("overwrite").partitionBy("part").parquet(f"{path}/codes")
-    spark = df.sparkSession
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "num_sub": int(num_sub),
-            "dim": int(len(pq_centroids[0])),
-            "n_coarse": int(len(coarse_centroids)),
-            "n_pq_centroids": int(len(pq_centroids)),
-            "coarse_md5": _centroid_fingerprint(coarse_centroids),
-            "pq_md5": _centroid_fingerprint(pq_centroids),
-            "by_residual": bool(by_residual),
-            "id_col": id_col,
-        },
-    )
+    params = {
+        "num_sub": int(num_sub),
+        "dim": int(len(pq_centroids[0])),
+        "n_coarse": int(len(coarse_centroids)),
+        "n_pq_centroids": int(len(pq_centroids)),
+        "coarse_md5": _centroid_fingerprint(coarse_centroids),
+        "pq_md5": _centroid_fingerprint(pq_centroids),
+        "by_residual": bool(by_residual),
+        "id_col": id_col,
+    }
+    codes = SI.write_part(out, path, "codes", key="part")
+    SI.commit(path, "ivfpq", params, {"codes": codes})
 
 
 def _ivfpq_encode(
@@ -1287,17 +1265,8 @@ def ivfpq_adc_topk(
     Codebook drift between write and query raises."""
     import math
 
-    row = read_meta_row(spark, f"{path}/_meta", _IVFPQ_META_SCHEMA)
-    if row["coarse_md5"] != _centroid_fingerprint(coarse_centroids):
-        raise ValueError(
-            "coarse-codebook drift: the stored index was partitioned by "
-            "a different coarse quantizer than the query supplied"
-        )
-    if row["pq_md5"] != _centroid_fingerprint(pq_centroids):
-        raise ValueError(
-            "pq-codebook drift: stored codes index a different PQ "
-            "codebook than the query supplied"
-        )
+    idx = _open_ivfpq(path, coarse_centroids, pq_centroids, "query")
+    row = idx.params
     num_sub, dim = int(row["num_sub"]), int(row["dim"])
     if len(query) != dim:
         raise ValueError(f"query dim {len(query)} != stored dim {dim}")
@@ -1316,7 +1285,7 @@ def ivfpq_adc_topk(
         range(len(coarse_centroids)),
         key=lambda i: -py_cos(coarse_centroids[i], query),
     )[:n_probe]
-    by_residual = bool(row["by_residual"]) if "by_residual" in row else False
+    by_residual = row["by_residual"]
 
     def make_lut(origin: list[float]) -> list[list[float]]:
         # lut[s][c] = || (query − origin)_s − pqc_s ||², left-assoc sums
@@ -1336,7 +1305,7 @@ def ivfpq_adc_topk(
         p: make_lut(coarse_centroids[p] if by_residual else zero)
         for p in probes
     }
-    codes = spark.read.parquet(f"{path}/codes").filter(
+    codes = idx.read(spark, "codes").filter(
         F.col("part").isin(probes) & F.col("code_0").isNotNull()
     )
     # NOTE on n_probe growth: the by_residual branch builds one CASE
@@ -1436,27 +1405,38 @@ def write_sq8_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the SQ8 codes table ONCE: ``path/codes`` holds
+    """Materialize the SQ8 codes table ONCE: part ``codes`` holds
     (id, codes array<bigint> of 64 bytes-worth) — the write half of
-    the write_pq_codes discipline, including the torn-write guard
-    (_meta invalidated before codes overwrite) and the NULL-embedding
-    write filter. ``path/_meta`` persists dim + the parameter
-    fingerprint so reads raise on quantizer drift."""
-    spark = df.sparkSession
-    _invalidate_meta(spark, path)
-    df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col),
-        sq8_codes_col(F.col(vec_col), mins, scales).alias("codes"),
-    ).write.mode("overwrite").parquet(f"{path}/codes")
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "dim": int(len(mins)),
-            "params_md5": _sq8_fingerprint(mins, scales),
-            "id_col": id_col,
-        },
+    the write_pq_codes discipline, including the NULL-embedding write
+    filter. The params persist dim + the parameter fingerprint so
+    reads raise on quantizer drift."""
+    codes = SI.write_part(
+        df.filter(F.col(vec_col).isNotNull()).select(
+            F.col(id_col),
+            sq8_codes_col(F.col(vec_col), mins, scales).alias("codes"),
+        ),
+        path,
+        "codes",
     )
+    params = {
+        "dim": int(len(mins)),
+        "params_md5": _sq8_fingerprint(mins, scales),
+        "id_col": id_col,
+    }
+    SI.commit(path, "sq8", params, {"codes": codes})
+
+
+def _open_sq8(path: str, mins, scales, who: str):
+    """The stored SQ8 index, checked against the quantizer."""
+    idx = SI.open_index(path, "sq8", _SQ8_PARAMS)
+    fp = _sq8_fingerprint(mins, scales)
+    if fp != idx.params["params_md5"]:
+        raise ValueError(
+            f"quantizer drift: stored SQ8 codes at {path!r} were "
+            f"written with params {idx.params['params_md5']} but the "
+            f"{who} supplied {fp}"
+        )
+    return idx
 
 
 def sq8_sdc_topk_stored(
@@ -1470,24 +1450,15 @@ def sq8_sdc_topk_stored(
     """Symmetric-distance top-k over a STORED SQ8 codes table — the
     production read path: the scan touches ONLY (id, codes); raw
     embeddings are never read (plan-pinned like pq_adc_topk_stored).
-    The stored _meta's parameter fingerprint must match the supplied
+    The stored parameter fingerprint must match the supplied
     quantizer or the read raises (codes index into THIS quantizer's
-    grid). Distance stays exact BIGINT; NULL-code rows (pre-filter
-    legacy writes) are dropped defensively."""
-    row = read_meta_row(spark, f"{path}/_meta", _SQ8_META_SCHEMA)
-    fp = _sq8_fingerprint(mins, scales)
-    if fp != row["params_md5"]:
-        raise ValueError(
-            f"quantizer drift: stored SQ8 codes at {path!r} were "
-            f"written with params {row['params_md5']} but the query "
-            f"supplied {fp}"
-        )
-    if len(qcodes) != int(row["dim"]):
-        raise ValueError(f"query dim {len(qcodes)} != stored {row['dim']}")
-    id_col = row["id_col"]
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("codes").isNotNull()
-    )
+    grid). Distance stays exact BIGINT; NULL-code rows are dropped
+    defensively."""
+    idx = _open_sq8(path, mins, scales, "query")
+    dim, id_col = idx.params["dim"], idx.params["id_col"]
+    if len(qcodes) != dim:
+        raise ValueError(f"query dim {len(qcodes)} != stored {dim}")
+    codes = idx.read(spark, "codes").filter(F.col("codes").isNotNull())
     return (
         codes.select(
             F.col(id_col), sq8_sdc_dist_col(F.col("codes"), qcodes).alias("sdc_dist")
@@ -1506,9 +1477,9 @@ def append_sq8_codes(
     vec_col: str = "embedding",
 ) -> int:
     """Fold a new batch of embeddings into a stored SQ8 codes table —
-    append_pq_codes for the scalar quantizer: the stored _meta's
-    parameter fingerprint must match the supplied quantizer (drift
-    raises — appended codes must live on the same per-dim grid);
+    append_pq_codes for the scalar quantizer: the stored parameter
+    fingerprint must match the supplied quantizer (drift raises —
+    appended codes must live on the same per-dim grid);
     FIRST-WRITER-WINS on id, so re-delivered batches append nothing;
     NULL/wrong-dim vectors are excluded exactly as at write time.
     Codes are deterministic in (vector, params), so append ≡ rebuild
@@ -1516,79 +1487,75 @@ def append_sq8_codes(
     column; quantization is the same zero-shuffle projection as
     write_sq8_codes. Returns rows appended."""
     spark = new_df.sparkSession
-    row = read_meta_row(spark, f"{path}/_meta", _SQ8_META_SCHEMA)
-    fp = _sq8_fingerprint(mins, scales)
-    if fp != row["params_md5"]:
-        raise ValueError(
-            f"quantizer drift: stored SQ8 codes at {path!r} were written "
-            f"with params {row['params_md5']} but the append supplied {fp}"
-        )
-    dim, sid = int(row["dim"]), row["id_col"]
-    stored_ids = spark.read.parquet(f"{path}/codes").select(
-        F.col(sid).alias(id_col)
-    )
+    idx = _open_sq8(path, mins, scales, "append")
     fresh = new_df.filter(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-    ).join(stored_ids, id_col, "left_anti")
-    out = fresh.select(
-        F.col(id_col).alias(sid),
-        sq8_codes_col(F.col(vec_col), mins, scales).alias("codes"),
-    ).localCheckpoint(eager=True)  # one computation serves count + write
-    n_new = out.count()
-    if n_new:
-        out.write.mode("append").parquet(f"{path}/codes")
-    return n_new
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == idx.params["dim"])
+    ).join(_stored_ids(spark, idx, id_col), id_col, "left_anti")
+    return _commit_append(
+        idx,
+        path,
+        fresh.select(
+            F.col(id_col).alias(idx.params["id_col"]),
+            sq8_codes_col(F.col(vec_col), mins, scales).alias("codes"),
+        ),
+    )
+
+
+def _delete_code_ids(spark, path: str, family: str, params: tuple, ids) -> int:
+    """Remove ``ids`` from a stored codes index (PQ, SQ8, IVF-PQ) and
+    return the rows removed. ONE scan of the segments that can hold
+    the ids serves the removed count and the survivors; the survivors
+    land as new segments replacing those under one commit, and a
+    delete that matched nothing skips the rewrite (idempotent
+    re-sends; r12, EXP_CRUD_PHASES). For a keyed (IVF-PQ) index only
+    the inverted lists that hold the ids are read and rewritten; a
+    list the delete empties simply has no segment afterwards."""
+    idx = SI.open_index(path, family, params)
+    sid, codes = idx.params["id_col"], idx.parts["codes"]
+    takedown = [int(i) for i in ids]
+    hit, kept = codes, codes.empty()
+    if codes.key is not None:
+        affected = {
+            r[0]
+            for r in idx.read(spark, "codes")
+            .filter(F.col(sid).isin(takedown))
+            .select(codes.key)
+            .distinct()
+            .collect()
+        }
+        if not affected:
+            return 0
+        hit = codes.where_key(lambda p: p in affected)
+        kept = codes.where_key(lambda p: p not in affected)
+    flagged = (
+        idx.read(spark, "codes", hit)
+        .withColumn("_rm", F.col(sid).isin(takedown))
+        .localCheckpoint(eager=True)
+    )
+    n_removed = flagged.filter(F.col("_rm")).count()
+    if n_removed:
+        survivors = SI.write_part(
+            flagged.filter(~F.col("_rm")).drop("_rm"), path, "codes", key=codes.key
+        )
+        SI.commit(path, family, idx.params, {"codes": kept.plus(survivors)})
+    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
+    return int(n_removed)
 
 
 def delete_pq_codes(spark, path: str, ids: list[int]) -> int:
     """Remove ids from a stored PQ codes table — the TAKEDOWN half of
     the index lifecycle (write → append → DELETE → query): a removal
     request (DMCA, GDPR, contamination finding) must disappear from
-    tomorrow's ANN results without a full rebuild. Rewrites the codes
-    table minus the ids with the torn-write discipline inverted from
-    write_pq_codes: the survivors are materialized FIRST (eager
-    checkpoint — reading and overwriting the same parquet dir in one
-    plan would corrupt it), then _meta is invalidated, codes
-    overwritten, _meta restored — an interruption leaves no _meta, so
-    the next read fails loudly rather than scoring a half-rewritten
-    table. Returns the number of rows removed.
+    tomorrow's ANN results without a full rebuild. The codes table
+    minus the ids is written as a new segment and committed in place
+    of the old one. Returns the number of rows removed; idempotent.
 
     Scale shape: one column-pruned scan + an isin/anti filter (a
     BROADCAST of the bounded takedown list — removal batches are
     thousands, not corpus-scale) + one rewrite. A production variant
     with frequent small deletes would tombstone instead and compact
     periodically; the rewrite IS the compaction."""
-    meta = read_pq_codes_meta(spark, path)
-    codes = spark.read.parquet(f"{path}/codes")
-    sid = meta["id_col"]
-    # ONE scan serves survivors + the removed count (the former
-    # keep-checkpoint + two count() passes scanned codes twice), and a
-    # no-op delete (idempotent re-send) skips the rewrite and its
-    # _meta invalidation window entirely — the table is bit-identical
-    # either way (r12, EXP_CRUD_PHASES)
-    flagged = codes.withColumn(
-        "_rm", F.col(sid).isin([int(i) for i in ids])
-    ).localCheckpoint(eager=True)
-    n_removed = flagged.filter(F.col("_rm")).count()
-    if n_removed == 0:
-        flagged.unpersist()
-        return 0
-    survivors = flagged.filter(~F.col("_rm")).drop("_rm")
-    _invalidate_meta(spark, path)
-    survivors.write.mode("overwrite").parquet(f"{path}/codes")
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "num_sub": int(meta["num_sub"]),
-            "dim": int(meta["dim"]),
-            "n_centroids": int(meta["n_centroids"]),
-            "codebook_md5": meta["codebook_md5"],
-            "id_col": sid,
-        },
-    )
-    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
-    return int(n_removed)
+    return _delete_code_ids(spark, path, "pq", _PQ_PARAMS, ids)
 
 
 def perceptron_train(
@@ -1695,121 +1662,18 @@ def perceptron_train(
 def delete_ivfpq_index(spark, path: str, ids: list[int]) -> int:
     """delete_pq_codes for the partitioned IVF-PQ layout — and the
     payoff of that layout on the WRITE side: a takedown only rewrites
-    the inverted lists (partition directories) that actually contain
-    the removed ids. The untouched lists' files are never read or
+    the inverted lists (``part`` keys) that actually contain the
+    removed ids. The untouched lists' files are never read or
     written — at 100 TB with 4096 coarse lists, a thousand-id takedown
-    touches a handful of directories, not the corpus.
-
-    Protocol (the delete_pq_codes torn-write discipline, per
-    partition): find the affected parts with one codes-pruned scan
-    against the broadcast takedown list; materialize each affected
-    part's survivors (eager checkpoint — never read-and-overwrite one
-    parquet dir in a single plan); invalidate _meta; dynamic-overwrite
-    the surviving rows into their partitions; drop any partition
-    directory the delete EMPTIED (dynamic overwrite only replaces
-    partitions present in the written data — an all-deleted list would
-    otherwise survive intact, returning takedown'd vectors); restore
-    _meta. An interruption leaves no _meta → the next read raises
-    rather than scoring a half-rewritten index. Returns rows removed.
-    Idempotent: a second identical delete removes 0 rows."""
-    row = read_meta_row(spark, f"{path}/_meta", _IVFPQ_META_SCHEMA)
-    sid = row["id_col"]
-    codes = spark.read.parquet(f"{path}/codes")
-    takedown = [int(i) for i in ids]
-    affected = [
-        r["part"]
-        for r in codes.filter(F.col(sid).isin(takedown))
-        .select("part")
-        .distinct()
-        .collect()
-    ]
-    if not affected:
-        return 0
-    # ONE affected-partition scan serves survivors, the removed count
-    # and the kept-partition set (the former shape scanned the hit
-    # partitions three times — r12 one-scan flag pattern)
-    flagged = (
-        codes.filter(F.col("part").isin(affected))
-        .withColumn("_rm", F.col(sid).isin(takedown))
-        .localCheckpoint(eager=True)
-    )
-    stats = flagged.agg(
-        F.sum(F.col("_rm").cast("long")).alias("_n"),
-        F.collect_set(F.when(~F.col("_rm"), F.col("part"))).alias("_kept"),
-    ).first()
-    n_removed = int(stats["_n"] or 0)
-    kept_parts = set(stats["_kept"])
-    survivors = flagged.filter(~F.col("_rm")).drop("_rm")
-    _invalidate_meta(spark, path)
-    conf = spark.conf
-    prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if kept_parts:
-            survivors.write.mode("overwrite").partitionBy("part").parquet(
-                f"{path}/codes"
-            )
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # drop directories the takedown emptied (no survivors to overwrite
-    # them with)
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc.hadoopConfiguration()
-    for p in affected:
-        if p not in kept_parts:
-            jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/codes/part={p}")
-            fs = jpath.getFileSystem(jsc)
-            fs.delete(jpath, True)
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "num_sub": int(row["num_sub"]),
-            "dim": int(row["dim"]),
-            "n_coarse": int(row["n_coarse"]),
-            "n_pq_centroids": int(row["n_pq_centroids"]),
-            "coarse_md5": row["coarse_md5"],
-            "pq_md5": row["pq_md5"],
-            "by_residual": (
-                bool(row["by_residual"]) if "by_residual" in row else False
-            ),
-            "id_col": sid,
-        },
-    )
-    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
-    return int(n_removed)
+    touches a handful of directories, not the corpus. A list the
+    delete empties has no segment afterwards, so takedown'd vectors
+    cannot survive in it. Returns rows removed. Idempotent: a second
+    identical delete removes 0 rows."""
+    return _delete_code_ids(spark, path, "ivfpq", _IVFPQ_PARAMS, ids)
 
 
 def delete_sq8_codes(spark, path: str, ids: list[int]) -> int:
     """delete_pq_codes for the SQ8 codes layout — the takedown half of
-    the SQ8 lifecycle (write → append → DELETE → query). Same torn-
-    write inversion: survivors materialize FIRST (eager checkpoint —
-    never read-and-overwrite one parquet dir in a plan), _meta is
-    invalidated across the rewrite and restored after, so an
-    interruption leaves a loudly-failing index. Idempotent; returns
-    rows removed."""
-    row = read_meta_row(spark, f"{path}/_meta", _SQ8_META_SCHEMA)
-    sid = row["id_col"]
-    codes = spark.read.parquet(f"{path}/codes")
-    # one-scan flag + no-op skip: the delete_pq_codes r12 pattern
-    flagged = codes.withColumn(
-        "_rm", F.col(sid).isin([int(i) for i in ids])
-    ).localCheckpoint(eager=True)
-    n_removed = flagged.filter(F.col("_rm")).count()
-    if n_removed == 0:
-        flagged.unpersist()
-        return 0
-    survivors = flagged.filter(~F.col("_rm")).drop("_rm")
-    _invalidate_meta(spark, path)
-    survivors.write.mode("overwrite").parquet(f"{path}/codes")
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "dim": int(row["dim"]),
-            "params_md5": row["params_md5"],
-            "id_col": sid,
-        },
-    )
-    flagged.unpersist()
-    return int(n_removed)
+    the SQ8 lifecycle (write → append → DELETE → query). Idempotent;
+    returns rows removed."""
+    return _delete_code_ids(spark, path, "sq8", _SQ8_PARAMS, ids)

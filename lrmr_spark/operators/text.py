@@ -12,19 +12,11 @@ non-portable fast path (xxhash64) is offered where noted.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import stored_index as SI
 from ..sources import parallelize
-from ._meta_io import (
-    TornMetaError,
-    overwrite_parquet_swap,
-    read_meta_row,
-    write_meta_row,
-)
 
 # Serving-path broadcast gate for the banned-fingerprint frame (the
 # over-max_df template noise anti-joined out of a match batch). On any
@@ -33,11 +25,11 @@ from ._meta_io import (
 # broadcast is gated on a driver-known count (one pushed-filter scan of
 # the narrow df side table) instead of assumed, mirroring graph.py's
 # _KEEP_BCAST_MAX pattern. Above the gate the anti-join runs as a
-# regular shuffle join. Env override exists so tests can force the
-# big-banned path on toy data.
-_BANNED_BCAST_MAX = int(
-    os.environ.get("LRMR_SPARK_WINNOW_BANNED_BCAST_MAX", 2_000_000)
-)
+# regular shuffle join.
+_BANNED_BCAST_MAX = 2_000_000
+_WINNOW_PARAMS = ("k", "w", "max_df", "hash", "id_col")
+_LINE_PARAMS = ("width", "hash", "id_col")
+_QM_PARAMS = ("n_buckets", "iterations", "feature", "hash", "teacher_fp")
 
 __all__ = [
     "tokens",
@@ -400,91 +392,32 @@ def winnowing_matches(
     return pairs.filter(F.col("n_shared") >= min_shared)
 
 
-def _winnowing_fs(spark, p: str):
-    """(hadoop FileSystem, jvm) for a path — driver-side FS ops."""
-    jvm = spark.sparkContext._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
-
-
-def _winnowing_epochs(spark, path: str) -> list[int]:
-    """Epoch ids present in ``path/postings`` by DRIVER-SIDE directory
-    listing (no Spark job, no footer reads) — the partition layout IS
-    the epoch catalog. Empty list when the dir is absent."""
-    fs, jvm = _winnowing_fs(spark, path)
-    jdir = jvm.org.apache.hadoop.fs.Path(f"{path}/postings")
-    if not fs.exists(jdir):
-        return []
-    out = []
-    for st in fs.listStatus(jdir):
-        name = st.getPath().getName()
-        if name.startswith("_epoch="):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _read_winnowing_meta(spark, path: str) -> dict | None:
-    """``path/_meta`` as a dict, or None when absent. Back-compat:
-    indexes written before the df side table lack ``empty``/``id_type``
-    — callers use .get with defaults."""
+def _open_winnowing(path: str):
+    """The stored winnowing index at ``path``, or None when there is
+    none (callers branch on absence)."""
     try:
-        return read_meta_row(
-            spark,
-            f"{path}/_meta",
-            "k int, w int, max_df int, hash string, id_col string, "
-            "id_type string, empty boolean",
-        ).asDict()
-    except AnalysisException:
-        # absent _meta -> None (callers branch on absence); a PRESENT-
-        # but-empty _meta raises TornMetaError from read_meta_row -- the
-        # loud torn-state failure the r11 ADVICE asked for
+        return SI.open_index(path, "winnowing", _WINNOW_PARAMS)
+    except FileNotFoundError:
         return None
 
 
-def _write_winnowing_meta(
-    spark, path: str, *, k, w, max_df, hash_name, id_col, id_type, empty
-) -> None:
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "k": int(k),
-            "w": int(w),
-            "max_df": int(max_df),
-            "hash": hash_name,
-            "id_col": id_col,
-            "id_type": id_type,
-            "empty": bool(empty),
-        },
-    )
-
-
-def _apply_winnowing_df_delta(spark, path: str, inc, dec) -> None:
-    """Merge (fp, _delta) increments/decrements into the per-fp
-    document-frequency side table at ``path/df`` — the maintained
+def _merge_winnowing_df(spark, path: str, idx, inc, dec) -> SI.Part:
+    """A new ``df`` segment: the per-fp document-frequency side table
+    with (fp, _delta) increments/decrements merged in — the maintained
     statistic that lets the matcher ban over-df fingerprints WITHOUT
     re-windowing the full posting table per serving call. Counts are
     DISTINCT indexed documents per fingerprint (exactly what the
     read-time window computed). Merge = union the current table with
-    the deltas, sum per fp, drop non-positive rows; the merged frame
-    lands via write-to-temp + rename (overwrite_parquet_swap) so the
-    plan reads the old df dir while writing a sibling temp — ONE pass
-    instead of the former eager-checkpoint + overwrite two-pass shape
-    (r12; the checkpoint's only consumer was this write)."""
+    the deltas, sum per fp, drop non-positive rows, written in ONE
+    pass while the old segments stay in place."""
     frames = []
-    try:
+    if idx is not None:
         frames.append(
-            spark.read.parquet(f"{path}/df").select(
-                "fp", F.col("df").cast("bigint").alias("_delta")
-            )
+            idx.read(spark, "df").select("fp", F.col("df").alias("_delta"))
         )
-    except AnalysisException:
-        pass
     for d in (inc, dec):
         if d is not None:
             frames.append(d.select("fp", F.col("_delta").cast("bigint")))
-    if not frames:
-        return
     merged = frames[0]
     for f in frames[1:]:
         merged = merged.unionByName(f)
@@ -493,7 +426,7 @@ def _apply_winnowing_df_delta(spark, path: str, inc, dec) -> None:
         .agg(F.sum("_delta").cast("bigint").alias("df"))
         .filter(F.col("df") > 0)
     )
-    overwrite_parquet_swap(merged, f"{path}/df")
+    return SI.write_part(merged, path, "df")
 
 
 def write_winnowing_index(
@@ -511,21 +444,21 @@ def write_winnowing_index(
     decontamination service (Schleimer et al. SIGMOD'03 §5: the
     server keeps the corpus's selected fingerprints and every new
     submission is matched against them): rows are (id, fp) postings
-    from ``winnowing_postings``, landed in an epoch partition under
-    dynamic partition overwrite so the index is APPEND-ONLY and a
-    replayed epoch (checkpoint recovery) overwrites itself instead of
-    double-posting — the write_line_index discipline. Appending a
-    crawl batch = writing its postings as a new epoch; postings are
-    per-document, so append ≡ rebuild EXACTLY (asserted in tests; no
-    cross-document state exists at write time — the df-cap is a READ-
-    side decision recorded in _meta).
+    from ``winnowing_postings``, landed as the ``_epoch`` = ``epoch``
+    segment of part ``postings``, so the index is APPEND-ONLY and a
+    replayed epoch (checkpoint recovery) replaces its own segment
+    instead of double-posting — the write_line_index discipline.
+    Appending a crawl batch = writing its postings as a new epoch;
+    postings are per-document, so append ≡ rebuild EXACTLY (asserted
+    in tests; no cross-document state exists at write time — the
+    df-cap is a READ-side decision recorded in the params).
 
-    ``path/_meta`` records (k, w, max_df, hash convention): a later
-    epoch written at different k/w would select different grams and
+    The params record (k, w, max_df, hash convention): a later epoch
+    written at different k/w would select different grams and
     silently never match the earlier epochs, so the write raises on
     parameter drift (the codebook-fingerprint discipline).
 
-    The per-fp document-frequency side table (``path/df``) is
+    The per-fp document-frequency side table (part ``df``) is
     maintained INCREMENTALLY here (and by delete; compaction leaves
     it untouched — folding preserves the distinct (id, fp) multiset):
     the new epoch's postings are anti-joined against the OTHER epochs
@@ -536,146 +469,82 @@ def write_winnowing_index(
     This moves the df cost from EVERY serving call (the old read-time
     window over the full index) to each maintenance op — the
     write-amplified/read-optimized trade a serving index wants.
-
-    Torn-write discipline: _meta is deleted before the postings/df
-    writes and restored after, so an interruption leaves a
-    loudly-failing index, not a postings/df disagreement. A missing
-    _meta OVER existing postings is exactly that torn state, so this
-    write RAISES on it instead of minting fresh parameters over
-    mixed-selection epochs.
+    Postings and df land under one manifest commit.
 
     100 TB shape: the index stores only (id, 8-hex fp) — ~16 bytes a
     posting, no text; each epoch write is the one doc-keyed
     winnowing exchange plus a partition-local sink plus the narrow
     df-maintenance scan."""
     spark = df.sparkSession
-    meta = _read_winnowing_meta(spark, path)
-    epochs = _winnowing_epochs(spark, path)
-    if meta is None:
-        if epochs:
-            raise ValueError(
-                f"winnowing index at {path} is TORN: postings epochs "
-                f"{epochs} exist but _meta is missing (interrupted "
-                f"compact/delete) — refusing to mint fresh parameters "
-                f"over epochs of unknown (k, w)"
-            )
-    else:
+    idx = _open_winnowing(path)
+    if idx is not None:
         drift = {
-            "k": (int(meta["k"]), int(k)),
-            "w": (int(meta["w"]), int(w)),
-            "max_df": (int(meta["max_df"]), int(max_df)),
+            n: (idx.params[n], int(v))
+            for n, v in (("k", k), ("w", w), ("max_df", max_df))
+            if idx.params[n] != int(v)
         }
-        bad = {n: v for n, v in drift.items() if v[0] != v[1]}
-        if bad:
+        if drift:
             raise ValueError(
                 f"winnowing-index parameter drift: stored epochs used "
-                f"{ {n: v[0] for n, v in bad.items()} }, this write "
-                f"supplied { {n: v[1] for n, v in bad.items()} } — "
+                f"{ {n: v[0] for n, v in drift.items()} }, this write "
+                f"supplied { {n: v[1] for n, v in drift.items()} } — "
                 f"mixed selections never match across epochs"
             )
-    fs, jvm = _winnowing_fs(spark, path)
-    # appending to a PRE-df-era index (epochs exist, no side table —
-    # e.g. one written before the table shipped): the incremental
-    # delta has no base to merge into, so BOOTSTRAP df from the full
-    # postings after the write (one-time migration scan) instead
-    bootstrap = bool(epochs) and not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{path}/df")
+    epoch = int(epoch)
+    # the epoch lands FIRST, computed and written in ONE pass; the
+    # df-delta inputs below derive from a narrow read-back of the
+    # segment just written (guide §5/§6)
+    new_post = SI.write_part(
+        winnowing_postings(df, id_col, text_col, k, w).select(
+            F.col("_id").alias("id"), "fp", F.lit(epoch).alias("_epoch")
+        ),
+        path,
+        "postings",
+        key="_epoch",
     )
-    id_type = df.schema[id_col].dataType.simpleString()
-    post_schema = f"id {id_type}, fp string, _epoch int"
-    old_e = None
-    if int(epoch) in epochs and not bootstrap:
-        # epoch REPLAY (checkpoint recovery): materialize the old
-        # contribution BEFORE the overwrite replaces its partition —
-        # the one frame that MUST checkpoint here (its source files
-        # are about to be rewritten)
+    post_rb = new_post.read(spark, path, "postings").select("id", "fp")
+    postings = new_post
+    inc, dec_src = post_rb, None
+    if idx is not None:
+        stored = idx.parts["postings"]
+        postings = stored.where_key(lambda e: e != epoch).plus(new_post)
+        replayed = stored.where_key(lambda e: e == epoch)
         old_e = (
-            spark.read.schema(post_schema)
-            .parquet(f"{path}/postings")
-            .filter(F.col("_epoch") == int(epoch))
-            .select("id", "fp")
-            .localCheckpoint(eager=True)
+            idx.read(spark, "postings", replayed).select("id", "fp")
+            if replayed.segments
+            else None
         )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_meta"), True)
-    # the epoch lands FIRST, computed and written in ONE pass (r12:
-    # the former shape eager-checkpointed the batch postings — a full
-    # batch-sized copy through executor storage — then wrote them from
-    # the cache and fed the df delta from the cache too; the df-delta
-    # inputs below derive from a NARROW explicit-schema read-back of
-    # the partition just written instead, guide §5/§6). _meta is
-    # already invalidated, so a crash anywhere in this window fails
-    # loudly at the next read — same torn discipline as before.
-    (
-        winnowing_postings(df, id_col, text_col, k, w)
-        .select(
-            F.col("_id").alias("id"), "fp", F.lit(int(epoch)).alias("_epoch")
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(f"{path}/postings")
-    )
-    # explicit schema: no footer-inference job, and an empty batch
-    # (dir holding only _SUCCESS) reads back as an empty frame
-    allp = spark.read.schema(post_schema).parquet(f"{path}/postings")
-    post_rb = allp.filter(F.col("_epoch") == int(epoch)).select("id", "fp")
-    if bootstrap:
-        full = (
-            allp.select("id", "fp")
-            .distinct()
-            .groupBy("fp")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-        )
-        overwrite_parquet_swap(full, f"{path}/df")
-    else:
-        if epochs:
+        if stored.segments:
             probe = post_rb.select("fp").distinct()
             if old_e is not None:
                 probe = probe.union(old_e.select("fp")).distinct()
             # pairs from OTHER epochs sharing a fingerprint with this
             # batch: a narrow stored-side scan behind a broadcast
-            # semi-join, left LAZY — it folds into the one df-merge
-            # job below (replay's dec branch recomputes it inside that
-            # same job — the rare recovery path; the former eager
-            # checkpoint cost EVERY write a separate job for it)
+            # semi-join, left LAZY — it folds into the one df-merge job
             hit = (
-                allp.filter(F.col("_epoch") != int(epoch))
+                idx.read(spark, "postings", stored.where_key(lambda e: e != epoch))
                 .select("id", "fp")
                 .join(F.broadcast(probe), "fp", "left_semi")
                 .distinct()
             )
             inc = post_rb.join(hit, ["id", "fp"], "left_anti")
-            dec_src = (
-                old_e.join(hit, ["id", "fp"], "left_anti")
-                if old_e is not None
-                else None
-            )
-        else:
-            inc, dec_src = post_rb, None
-        inc = inc.groupBy("fp").agg(
-            F.count(F.lit(1)).cast("bigint").alias("_delta")
+            if old_e is not None:
+                dec_src = old_e.join(hit, ["id", "fp"], "left_anti")
+    inc = inc.groupBy("fp").agg(F.count(F.lit(1)).cast("bigint").alias("_delta"))
+    dec = (
+        dec_src.groupBy("fp").agg(
+            (-F.count(F.lit(1))).cast("bigint").alias("_delta")
         )
-        dec = (
-            dec_src.groupBy("fp").agg(
-                (-F.count(F.lit(1))).cast("bigint").alias("_delta")
-            )
-            if dec_src is not None
-            else None
-        )
-        _apply_winnowing_df_delta(spark, path, inc, dec)
-    _write_winnowing_meta(
-        spark,
-        path,
-        k=k,
-        w=w,
-        max_df=max_df,
-        hash_name="md5-8",
-        id_col=id_col,
-        id_type=id_type,
-        empty=False,
+        if dec_src is not None
+        else None
     )
-    if old_e is not None:
-        old_e.unpersist()  # pitfall 19: release the checkpoint blocks
+    SI.commit(
+        path,
+        "winnowing",
+        {"k": int(k), "w": int(w), "max_df": int(max_df), "hash": "md5-8",
+         "id_col": id_col},
+        {"postings": postings, "df": _merge_winnowing_df(spark, path, idx, inc, dec)},
+    )
 
 
 def match_winnowing_index(
@@ -688,21 +557,21 @@ def match_winnowing_index(
     use_df_table: bool = True,
 ) -> DataFrame:
     """Match a batch of NEW documents against the stored winnowing
-    index: fingerprint the batch with the INDEX'S OWN (k, w) from
-    _meta, join on fingerprint against the stored postings, count
+    index: fingerprint the batch with the INDEX'S OWN (k, w) from its
+    params, join on fingerprint against the stored postings, count
     shared fingerprints per (new, indexed) document pair, keep pairs
     with ≥ ``min_shared`` — the submission-vs-corpus half of
     winnowing_matches (which self-joins one corpus). Hamming of ≥
     min_shared shared window-minima ⇒ shared verbatim runs of length
     ≥ w+k−1 — the plagiarism / benchmark-contamination signal.
 
-    The MOSS boilerplate guard applies with the _meta-recorded
-    ``max_df``: stored fingerprints appearing in more than max_df
-    indexed documents are template noise AND the quadratic join
-    fanout, so they are dropped before pairing. The SERVING path reads
-    the banned set off the maintained per-fp document-frequency side
-    table (``path/df``, kept exact by write/append/delete; compaction
-    is df-invariant): over-df fingerprints are anti-joined out of the
+    The MOSS boilerplate guard applies with the recorded ``max_df``:
+    stored fingerprints appearing in more than max_df indexed
+    documents are template noise AND the quadratic join fanout, so
+    they are dropped before pairing. The SERVING path reads the banned
+    set off the maintained per-fp document-frequency side table (part
+    ``df``, kept exact by write/append/delete; compaction is
+    df-invariant): over-df fingerprints are anti-joined out of the
     BOUNDED batch side (equivalent to dropping them from the stored
     side — a banned fp produces no pairs either way), the batch is
     broadcast into the stored postings scan, and cross-epoch re-lands
@@ -725,31 +594,20 @@ def match_winnowing_index(
     from pyspark.sql import Window as W
 
     spark = df.sparkSession
-    meta = _read_winnowing_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"no winnowing index _meta at {path}")
-    if meta.get("empty", False):
-        base_t = meta.get("id_type", "bigint")
+    idx = _open_winnowing(path)
+    if idx is None:
+        raise ValueError(f"no winnowing index at {path}")
+    epochs = idx.parts["postings"].keys()
+    if not epochs:  # every document deleted: a valid, empty index
+        base_t = idx.parts["postings"].spark_schema()["id"].dataType.simpleString()
         new_t = df.schema[id_col].dataType.simpleString()
         return parallelize(spark, [], f"new_id {new_t}, base_id {base_t}, n_shared bigint")
-    k, w, max_df = int(meta["k"]), int(meta["w"]), int(meta["max_df"])
+    k, w, max_df = idx.params["k"], idx.params["w"], idx.params["max_df"]
     batch = winnowing_postings(df, id_col, text_col, k, w).select(
         F.col("_id").alias("new_id"), "fp"
     )
-    epochs = _winnowing_epochs(spark, path)
-    fs, jvm = _winnowing_fs(spark, path)
-    fast = (
-        use_df_table
-        and epochs
-        and fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/df"))
-        and (before_epoch is None or int(before_epoch) > max(epochs))
-    )
-    if fast:
-        banned = (
-            spark.read.parquet(f"{path}/df")
-            .filter(F.col("df") > max_df)
-            .select("fp")
-        )
+    if use_df_table and (before_epoch is None or int(before_epoch) > max(epochs)):
+        banned = idx.read(spark, "df").filter(F.col("df") > max_df).select("fp")
         # driver-known count gate: the df table is (fp, df) with the
         # df > max_df filter pushed to the scan, so this count is one
         # cheap narrow job. Under the gate the banned set broadcasts;
@@ -757,7 +615,7 @@ def match_winnowing_index(
         # than betting executor memory on a template-heavy corpus.
         if banned.count() <= _BANNED_BCAST_MAX:
             banned = F.broadcast(banned)
-        stored = spark.read.parquet(f"{path}/postings").select(
+        stored = idx.read(spark, "postings").select(
             F.col("id").alias("base_id"), "fp"
         )
         return (
@@ -767,7 +625,7 @@ def match_winnowing_index(
             .agg(F.count_distinct("fp").cast("bigint").alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared)
         )
-    stored = spark.read.parquet(f"{path}/postings")
+    stored = idx.read(spark, "postings")
     if before_epoch is not None:
         stored = stored.filter(F.col("_epoch") < int(before_epoch))
     stored = (
@@ -794,50 +652,41 @@ def delete_winnowing_index_ids(spark, path: str, ids: list) -> int:
     Returns postings removed; a second identical delete removes 0.
 
     The epoch layout pays off on the write side exactly as the
-    IVF-PQ partition layout does: one postings-pruned scan finds the
-    epochs actually containing the ids (the takedown list is bounded
-    — broadcast isin, passed through at the id column's OWN type, so
-    string-id indexes take down cleanly), ONLY those epoch partitions
-    are rewritten under dynamic overwrite, and an epoch the delete
-    EMPTIED is dropped explicitly (dynamic overwrite only replaces
-    partitions present in the written data). A takedown that empties
-    EVERY epoch records ``empty`` in _meta (and drops postings + df
-    dirs) so subsequent match/append/compact treat the index as
-    validly empty instead of failing schema inference. The per-fp df
-    side table is decremented by the removed documents' distinct
-    (id, fp) pairs — exact, because a takedown removes every posting
-    of the id. Torn-write discipline: survivors and the df decrement
-    materialize first, _meta is deleted across the rewrite and
-    restored after, checkpoints are unpersisted (pitfall 19)."""
-    meta = _read_winnowing_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"no winnowing index _meta at {path}")
-    if meta.get("empty", False):
+    IVF-PQ partition layout does: one postings scan finds the epochs
+    actually containing the ids (the takedown list is bounded —
+    broadcast isin, passed through at the id column's OWN type, so
+    string-id indexes take down cleanly), and ONLY those epochs'
+    segments are read and replaced by survivor segments; an epoch the
+    delete EMPTIED simply has none. A takedown that empties EVERY
+    epoch leaves postings and df with no segments — a valid, empty
+    index that match/append/compact accept. The per-fp df side table
+    is decremented by the removed documents' distinct (id, fp) pairs —
+    exact, because a takedown removes every posting of the id."""
+    idx = _open_winnowing(path)
+    if idx is None:
+        raise ValueError(f"no winnowing index at {path}")
+    stored = idx.parts["postings"]
+    if not stored.segments:
         return 0
     takedown = list(ids)
-    post = spark.read.parquet(f"{path}/postings")
-    affected = [
+    affected = {
         r["_epoch"]
-        for r in post.filter(F.col("id").isin(takedown))
+        for r in idx.read(spark, "postings")
+        .filter(F.col("id").isin(takedown))
         .select("_epoch")
         .distinct()
         .collect()
-    ]
+    }
     if not affected:
         return 0
     # ONE affected-epoch scan serves survivors, the df decrement and
     # both counts (r12, measured: the former shape scanned the
-    # affected partitions four times — survivors checkpoint, dec
-    # checkpoint, hit.count(), survivors.count() — EXP_CRUD_PHASES);
-    # the flag checkpoint also satisfies the torn-write discipline
-    # (everything downstream materializes off the parquet dir before
-    # it is overwritten)
+    # affected partitions four times — EXP_CRUD_PHASES)
     flagged = (
-        post.filter(F.col("_epoch").isin(affected))
+        idx.read(spark, "postings", stored.where_key(lambda e: e in affected))
         .withColumn("_rm", F.col("id").isin(takedown))
         .localCheckpoint(eager=True)
     )
-    survivors = flagged.filter(~F.col("_rm")).drop("_rm")
     dec = (
         flagged.filter(F.col("_rm"))
         .select("id", "fp")
@@ -849,106 +698,60 @@ def delete_winnowing_index_ids(spark, path: str, ids: list) -> int:
         F.sum(F.col("_rm").cast("long")).alias("_n_removed"),
         F.collect_set(F.when(~F.col("_rm"), F.col("_epoch"))).alias("_kept"),
     ).first()
-    n_removed = int(stats["_n_removed"] or 0)
-    kept_epochs = set(stats["_kept"])
-    fs, jvm = _winnowing_fs(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_meta"), True)
-    emptied = not kept_epochs and len(affected) == len(
-        _winnowing_epochs(spark, path)
-    )
-    if emptied:
-        # every epoch emptied: drop postings + df wholesale and record
-        # emptiness in _meta — an empty index is a valid index
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/postings"), True)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/df"), True)
-    else:
-        if kept_epochs:
-            (
-                survivors.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_epoch")
-                .parquet(f"{path}/postings")
+    postings = stored.where_key(lambda e: e not in affected)
+    if stats["_kept"]:
+        postings = postings.plus(
+            SI.write_part(
+                flagged.filter(~F.col("_rm")).drop("_rm"),
+                path,
+                "postings",
+                key="_epoch",
             )
-        for ep in affected:
-            if ep not in kept_epochs:
-                jp = jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/postings/_epoch={ep}"
-                )
-                fs.delete(jp, True)
-        # a pre-df-era index has no side table to decrement — the
-        # matcher's window fallback stays correct without one
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/df")):
-            _apply_winnowing_df_delta(spark, path, None, dec)
-    _write_winnowing_meta(
-        spark,
-        path,
-        k=meta["k"],
-        w=meta["w"],
-        max_df=meta["max_df"],
-        hash_name=meta["hash"],
-        id_col=meta["id_col"],
-        id_type=meta.get(
-            "id_type", survivors.schema["id"].dataType.simpleString()
-        ),
-        empty=emptied,
+        )
+    df_part = (
+        _merge_winnowing_df(spark, path, idx, None, dec)
+        if postings.segments
+        else idx.parts["df"].empty()
     )
+    SI.commit(path, "winnowing", idx.params, {"postings": postings, "df": df_part})
     flagged.unpersist()  # pitfall 19: release the checkpoint blocks
-    return int(n_removed)
+    return int(stats["_n_removed"] or 0)
 
 
 def compact_winnowing_index(spark, path: str) -> int:
     """Fold every epoch of a stored winnowing index into ONE (epoch
-    0) — the nightly maintenance op of the epoch-partitioned layout
+    0) — the nightly maintenance op of the epoch-keyed layout
     (compact_line_index's twin): postings are deduped on (id, fp)
     while folding — exactly the dedupe the matcher applies at read —
-    so compaction CHANGES NO ANSWER. Torn-write discipline: the
-    folded postings land via write-to-temp + rename
-    (overwrite_parquet_swap — the fold plan reads the old epochs
-    while writing a sibling temp dir, ONE pass over the index instead
-    of the former eager-checkpoint + overwrite two-pass shape; at
-    index scale the checkpoint pushed the whole folded table through
-    executor storage twice, r12 guide §5/§6), _meta is invalidated
-    across the swap and restored after, so an interruption leaves a
-    loudly-failing index, not a half-folded one. The df side table is
-    untouched: folding preserves the distinct (id, fp) multiset, so
-    per-fp document frequency is compaction-invariant by
-    construction. Returns the number of epochs folded (0 for a
-    validly-empty index)."""
-    meta = _read_winnowing_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"no winnowing index _meta at {path}")
-    if meta.get("empty", False):
+    so compaction CHANGES NO ANSWER. The folded postings are written in
+    ONE pass over the old segments and replace them all in the commit,
+    so no old epoch survives it. The df side table is untouched:
+    folding preserves the distinct (id, fp) multiset, so per-fp
+    document frequency is compaction-invariant by construction.
+    Returns the number of epochs folded (0 for a validly-empty
+    index)."""
+    idx = _open_winnowing(path)
+    if idx is None:
+        raise ValueError(f"no winnowing index at {path}")
+    epochs = idx.parts["postings"].keys()
+    if not epochs:
         return 0
-    post = spark.read.parquet(f"{path}/postings")
-    n_epochs = post.select("_epoch").distinct().count()
     folded = (
-        post.select("id", "fp")
+        idx.read(spark, "postings")
+        .select("id", "fp")
         .distinct()
         .withColumn("_epoch", F.lit(0))
     )
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_meta")
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-    # the swap replaces the WHOLE postings dir by construction, so a
-    # leaked dynamic session overwrite mode cannot leave old epochs
-    # alive (the hazard the former static-pinned overwrite guarded —
-    # the compact_line_index lesson; asserted by the same tests)
-    overwrite_parquet_swap(folded, f"{path}/postings", ["_epoch"])
-    _write_winnowing_meta(
-        spark,
+    SI.commit(
         path,
-        k=meta["k"],
-        w=meta["w"],
-        max_df=meta["max_df"],
-        hash_name=meta["hash"],
-        id_col=meta["id_col"],
-        id_type=meta.get(
-            "id_type", folded.schema["id"].dataType.simpleString()
-        ),
-        empty=False,
+        "winnowing",
+        idx.params,
+        {
+            "postings": SI.write_part(folded, path, "postings", key="_epoch"),
+            "df": idx.parts["df"],
+        },
     )
-    return int(n_epochs)
+    return len(epochs)
 
 
 def hashed_ngram_features(col: Column | str, n_buckets: int = 32) -> Column:
@@ -1132,7 +935,7 @@ def hashed_ngram_score(col: Column | str, weights: list[int]) -> Column:
 
 # feature-geometry constants the stored quality model pins: a model
 # trained under a different gram mix or bucket-hash convention would
-# score garbage silently, so _meta records these and load refuses drift
+# score garbage silently, so the params record these and load refuses drift
 _QM_FEATURE = "uni+bigram"
 _QM_HASH = "md5-q-6"
 
@@ -1153,57 +956,50 @@ def write_quality_model(
     every worker (/root/reference/pipeline.go:51-53 Broadcast — the
     model IS dim scalars).
 
-    Layout: ``path/weights`` (bucket, weight) parquet +
-    ``path/_meta`` recording the FEATURE GEOMETRY — n_buckets, the
-    gram mix, the bucket-hash convention, a teacher fingerprint and
-    the round count — so a scorer can refuse a model trained under
-    different geometry (the codebook-fingerprint discipline). Torn-
-    write: _meta is deleted before the weights write and restored
-    after. Training is exact integer arithmetic, so RETRAIN ≡ REBUILD
-    bit-for-bit (asserted in tests). Returns the weights."""
+    Layout: part ``weights`` (bucket, weight), with params recording
+    the FEATURE GEOMETRY — n_buckets, the gram mix, the bucket-hash
+    convention, a teacher fingerprint and the round count — so a
+    scorer can refuse a model trained under different geometry (the
+    codebook-fingerprint discipline). Training is exact integer
+    arithmetic, so RETRAIN ≡ REBUILD bit-for-bit (asserted in tests).
+    Returns the weights."""
     import hashlib as _hashlib
 
     spark = df.sparkSession
     w = train_hashed_ngram_weights(df, text_col, teacher, iterations)
-    fs, jvm = _winnowing_fs(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_meta"), True)
-    parallelize(
-        spark, [(i, int(wi)) for i, wi in enumerate(w)], "bucket int not null, weight bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/weights")
+    weights = SI.write_part(
+        parallelize(
+            spark, [(i, int(wi)) for i, wi in enumerate(w)],
+            "bucket int not null, weight bigint",
+        ).coalesce(1),
+        path,
+        "weights",
+    )
     teacher_fp = _hashlib.md5(
         ",".join(str(int(t)) for t in teacher).encode()
     ).hexdigest()[:16]
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "n_buckets": len(teacher),
-            "iterations": int(iterations),
-            "feature": _QM_FEATURE,
-            "hash": _QM_HASH,
-            "teacher_fp": teacher_fp,
-        },
-    )
+    params = {
+        "n_buckets": len(teacher),
+        "iterations": int(iterations),
+        "feature": _QM_FEATURE,
+        "hash": _QM_HASH,
+        "teacher_fp": teacher_fp,
+    }
+    SI.commit(path, "quality_model", params, {"weights": weights})
     return w
 
 
 def load_quality_model(spark, path: str) -> tuple[list[int], dict]:
-    """Load a stored quality model: (weights, meta). RAISES on a
-    missing _meta (absent or torn model), on feature-geometry drift
-    (a model trained under a different gram mix / bucket-hash
-    convention than this library scores with), and on a weights table
-    that does not cover exactly buckets 0..n_buckets−1 (torn)."""
+    """Load a stored quality model: (weights, params). RAISES on a
+    missing model, on feature-geometry drift (a model trained under a
+    different gram mix / bucket-hash convention than this library
+    scores with), and on a weights table that does not cover exactly
+    buckets 0..n_buckets−1."""
     try:
-        meta = read_meta_row(
-            spark,
-            f"{path}/_meta",
-            "n_buckets int, iterations int, feature string, "
-            "hash string, teacher_fp string",
-        ).asDict()
-    except (AnalysisException, TornMetaError):
-        raise ValueError(
-            f"no quality model _meta at {path} (absent or torn)"
-        ) from None
+        idx = SI.open_index(path, "quality_model", _QM_PARAMS)
+    except FileNotFoundError as e:
+        raise ValueError(f"no quality model: {e}") from None
+    meta = dict(idx.params)
     if meta["feature"] != _QM_FEATURE or meta["hash"] != _QM_HASH:
         raise ValueError(
             f"quality-model feature-geometry drift: stored "
@@ -1212,7 +1008,7 @@ def load_quality_model(spark, path: str) -> tuple[list[int], dict]:
             f"— scoring would be silent garbage"
         )
     n = int(meta["n_buckets"])
-    rows = spark.read.parquet(f"{path}/weights").collect()
+    rows = idx.read(spark, "weights").collect()
     by_bucket = {int(r["bucket"]): int(r["weight"]) for r in rows}
     if len(rows) != n or sorted(by_bucket) != list(range(n)):
         raise ValueError(
@@ -1238,8 +1034,7 @@ def delete_quality_model(spark, path: str) -> bool:
     """Remove a stored quality model wholesale. Returns whether it
     existed. Delete + retrain ≡ rebuild (training is deterministic
     exact-integer arithmetic; asserted in tests)."""
-    fs, jvm = _winnowing_fs(spark, path)
-    return bool(fs.delete(jvm.org.apache.hadoop.fs.Path(path), True))
+    return SI.drop_index(path)
 
 
 def exact_topk_threshold_bucketed(
@@ -1700,44 +1495,42 @@ def write_line_index(
 ) -> None:
     """Write one EPOCH of the stored line-dedup index: the segment-
     frequency table (h = 16-hex md5 of the segment, df = count) for
-    this batch of documents, landed in an epoch partition with dynamic
-    partition overwrite — so the index is APPEND-ONLY and a replayed
-    epoch (checkpoint recovery) overwrites itself instead of
-    double-counting, which a merged counts table cannot do without a
-    transaction log. Readers sum df over epochs (line_dedup_with_index);
-    a compaction pass that folds old epochs into one is the ordinary
-    maintenance op and changes no answer (sums are associative).
-    ``path/_meta`` records width + the hash convention; a later epoch
-    written with a DIFFERENT width would silently mis-key every lookup
-    against the earlier epochs, so the write raises on width drift
-    (the codebook-fingerprint discipline of the ANN indexes)."""
-    spark = df.sparkSession
+    this batch of documents, landed as the ``_epoch`` = ``epoch``
+    segment of part ``counts`` — so the index is APPEND-ONLY and a
+    replayed epoch (checkpoint recovery) replaces its own segment
+    instead of double-counting, which a merged counts table cannot do
+    without a transaction log. Readers sum df over epochs
+    (line_dedup_with_index); a compaction pass that folds old epochs
+    into one is the ordinary maintenance op and changes no answer
+    (sums are associative). The params record width + the hash
+    convention; a later epoch written with a DIFFERENT width would
+    silently mis-key every lookup against the earlier epochs, so the
+    write raises on width drift (the codebook-fingerprint discipline
+    of the ANN indexes)."""
     try:
-        prev = read_meta_row(spark, f"{path}/_meta", "width int, hash string, id_col string")
-        if int(prev["width"]) != int(width):
-            raise ValueError(
-                f"line-index width drift: stored epochs were segmented at "
-                f"width={int(prev['width'])}, this write supplied "
-                f"width={int(width)} — mixed widths mis-key every lookup"
-            )
-    except AnalysisException:
-        pass  # first write: no _meta yet
+        idx = SI.open_index(path, "line", _LINE_PARAMS)
+    except FileNotFoundError:
+        idx = None  # first write
+    if idx is not None and idx.params["width"] != int(width):
+        raise ValueError(
+            f"line-index width drift: stored epochs were segmented at "
+            f"width={idx.params['width']}, this write supplied "
+            f"width={int(width)} — mixed widths mis-key every lookup"
+        )
     segs = _line_segments(df, id_col, text_col, width)
     counts = (
         segs.groupBy(_LINE_HASH(F.col("seg")).alias("h"))
         .agg(F.count(F.lit(1)).alias("df"))
         .withColumn("_epoch", F.lit(int(epoch)))
     )
-    (
-        counts.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(f"{path}/counts")
-    )
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
+    new = SI.write_part(counts, path, "counts", key="_epoch")
+    if idx is not None:
+        new = idx.parts["counts"].where_key(lambda e: e != int(epoch)).plus(new)
+    SI.commit(
+        path,
+        "line",
         {"width": int(width), "hash": "md5-16", "id_col": id_col},
+        {"counts": new},
     )
 
 
@@ -1770,10 +1563,9 @@ def line_dedup_with_index(
     posture a shared index wants), one doc-keyed rebuild."""
     from pyspark.sql import Window as W
 
-    spark = df.sparkSession
-    meta = read_meta_row(spark, f"{path}/_meta", "width int, hash string, id_col string")
-    width = int(meta["width"])
-    stored = spark.read.parquet(f"{path}/counts")
+    idx = SI.open_index(path, "line", _LINE_PARAMS)
+    width = idx.params["width"]
+    stored = idx.read(df.sparkSession, "counts")
     if before_epoch is not None:
         stored = stored.filter(F.col("_epoch") < int(before_epoch))
     stored = stored.groupBy("h").agg(F.sum("df").alias("_sdf"))
@@ -1790,49 +1582,30 @@ def line_dedup_with_index(
 
 def compact_line_index(spark, path: str) -> int:
     """Fold every epoch of a stored line-dedup index into ONE (epoch
-    0) — the nightly maintenance op the epoch-partitioned layout calls
+    0) — the nightly maintenance op the epoch-keyed layout calls
     for: appends stay cheap and replay-idempotent because epochs are
     append-only, so epoch count grows with crawl cadence and read-side
     df lookups pay one sum-over-epochs aggregation per query; the
     compaction pre-folds that sum. Counts are associative, so
     compaction CHANGES NO ANSWER (clean-after ≡ clean-before, the
-    hash-gated claim of text_line_dedup_compacted). Torn-write
-    discipline: folded counts land via write-to-temp + rename
-    (overwrite_parquet_swap — the fold plan reads the old epochs while
-    writing a sibling temp dir, ONE pass over the index instead of
-    the former eager-checkpoint + overwrite two-pass shape, r12 guide
-    §5/§6), _meta is invalidated across the swap and restored after,
-    so an interruption leaves a loudly-failing index, not a
-    half-folded one. Returns the number of epochs folded."""
-    meta = read_meta_row(spark, f"{path}/_meta", "width int, hash string, id_col string")
-    counts = spark.read.parquet(f"{path}/counts")
-    n_epochs = counts.select("_epoch").distinct().count()
+    hash-gated claim of text_line_dedup_compacted). The folded counts
+    are written in ONE pass over the old segments and replace them
+    all in the commit, so no old epoch survives to double-count.
+    Returns the number of epochs folded."""
+    idx = SI.open_index(path, "line", _LINE_PARAMS)
     folded = (
-        counts.groupBy("h")
+        idx.read(spark, "counts")
+        .groupBy("h")
         .agg(F.sum("df").alias("df"))
         .withColumn("_epoch", F.lit(0))
     )
-    _p = f"{path}/_meta"
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(_p)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-    # the swap replaces the WHOLE counts dir by construction, so a
-    # session-level dynamic overwrite mode (leaked by any partial
-    # index-op failure) cannot leave old epochs alive double-counting
-    # every post-compaction df — the hazard the former static-pinned
-    # overwrite guarded; asserted by the same hash-gated entry
-    overwrite_parquet_swap(folded, f"{path}/counts", ["_epoch"])
-    write_meta_row(
-        spark,
-        f"{path}/_meta",
-        {
-            "width": int(meta["width"]),
-            "hash": meta["hash"],
-            "id_col": meta["id_col"],
-        },
+    SI.commit(
+        path,
+        "line",
+        idx.params,
+        {"counts": SI.write_part(folded, path, "counts", key="_epoch")},
     )
-    return int(n_epochs)
+    return len(idx.parts["counts"].keys())
 
 
 def heavy_hitters_exact(

@@ -37,6 +37,9 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+# list_versions / read_manifest are this sink's snapshot readers too
+from ..stored_index import commit_manifest, list_versions, read_manifest  # noqa: F401
+
 FORMAT_NAME = "lrmr_feeder"
 _SCHEMA = "id bigint, key string, value bigint"
 _KNUTH = 2654435761
@@ -237,14 +240,10 @@ class _JsonlDirWriter(DataSourceWriter):
         return _PartFileCommit(filename=fname, n_rows=n)
 
     def commit(self, messages):
-        import json
-        import os
-
         # Versioned snapshot commit (time travel in its minimal form):
         # every commit publishes an immutable _MANIFEST-v{N} listing the
         # FULL visible file set as of that commit — append extends the
-        # parent snapshot, overwrite starts a new lineage — and then
-        # atomically points _MANIFEST at the new snapshot. Old snapshots
+        # parent snapshot, overwrite starts a new lineage. Old snapshots
         # stay readable by version number (read_versioned), exactly the
         # Iceberg/Delta snapshot rule. Single-driver commit protocol:
         # Spark serializes commit() per write job.
@@ -256,25 +255,16 @@ class _JsonlDirWriter(DataSourceWriter):
             except FileNotFoundError:
                 parent = None
         if parent is not None:
-            merged = dict(parent.get("file_rows", {}))
-            merged.update(file_rows)
-            file_rows = merged
-        version = 1 + max(list_versions(self.path), default=0)
-        manifest = {
-            "version": version,
-            "parent": parent["version"] if parent else None,
-            "files": sorted(file_rows),
-            "file_rows": file_rows,
-            "rows": sum(file_rows.values()),
-        }
-        payload = json.dumps(manifest)
-        tmp = os.path.join(self.path, "._MANIFEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(payload)
-        os.replace(tmp, os.path.join(self.path, f"_MANIFEST-v{version:05d}"))
-        with open(tmp, "w") as f:
-            f.write(payload)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST"))
+            file_rows = {**parent.get("file_rows", {}), **file_rows}
+        commit_manifest(
+            self.path,
+            {
+                "parent": parent["version"] if parent else None,
+                "files": sorted(file_rows),
+                "file_rows": file_rows,
+                "rows": sum(file_rows.values()),
+            },
+        )
 
     def abort(self, messages):
         import os
@@ -284,35 +274,6 @@ class _JsonlDirWriter(DataSourceWriter):
                 os.remove(os.path.join(self.path, m.filename))
             except FileNotFoundError:
                 pass
-
-
-def read_manifest(path: str, version: int | None = None) -> dict:
-    """Latest manifest, or a specific snapshot when ``version`` given."""
-    import json
-    import os
-
-    name = "_MANIFEST" if version is None else f"_MANIFEST-v{version:05d}"
-    with open(os.path.join(path, name)) as f:
-        return json.load(f)
-
-
-def list_versions(path: str) -> list[int]:
-    """All committed snapshot versions of a sink directory, ascending."""
-    import os
-    import re
-
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    # \d+ (not \d{5}): the zero-padding is for sort convenience only —
-    # at version 100000 the name grows to six digits and a fixed-width
-    # match would stop seeing it, making the next commit overwrite it.
-    return sorted(
-        int(m.group(1))
-        for e in entries
-        if (m := re.fullmatch(r"_MANIFEST-v(\d+)", e))
-    )
 
 
 def read_versioned(spark, path: str, version: int | None = None):

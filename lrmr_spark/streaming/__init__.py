@@ -34,6 +34,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import stored_index as SI
 from ..sources import parallelize, read_parquet
 
 __all__ = [
@@ -697,7 +698,7 @@ def run_pq_index_append_stream(
         timeout_s,
         "pq-append",
     )
-    return spark.read.parquet(f"{index_path}/codes")
+    return SI.read_part(spark, index_path, "codes")
 
 
 def run_phash_index_match_stream(
@@ -867,7 +868,8 @@ def run_winnowing_index_match_stream(
 
     spark = docs_stream.sparkSession
     # index-state snapshot: everything strictly before this is visible
-    _index_epochs = TX._winnowing_epochs(spark, index_path)
+    idx = TX._open_winnowing(index_path)
+    _index_epochs = idx.parts["postings"].keys() if idx is not None else []
     _snap = (max(_index_epochs) + 1) if _index_epochs else 0
 
     def _match_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -932,8 +934,9 @@ def run_line_dedup_stream(
     periodic re-clean against the converged index recovers the batch
     answer; that re-clean is the ordinary nightly compaction job.
 
-    Exactly-once: BOTH sinks are epoch-partitioned dynamic overwrites,
-    and the clean step passes before_epoch = its own epoch id, so a
+    Exactly-once: the output sink is an epoch-partitioned dynamic
+    overwrite, a replayed index epoch replaces its own segment, and the
+    clean step passes before_epoch = its own epoch id, so a
     checkpoint REPLAY of epoch N excludes the epoch-N counts its
     failed first attempt may already have landed — replay output is
     bit-identical, not just append-safe."""
@@ -943,15 +946,11 @@ def run_line_dedup_stream(
 
     def _clean_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # the within-batch fallback is ONLY for the no-index-yet first
-        # epoch, gated on an explicit _meta existence probe — a blanket
-        # AnalysisException catch here would also swallow real defects
-        # (bad columns, corrupt counts table, _meta invalidated by an
-        # interrupted compaction) and quietly emit different output
-        # instead of failing the stream
-        jvm = spark.sparkContext._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_meta")
-        fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
+        # epoch, gated on an explicit manifest probe — a blanket
+        # exception catch here would also swallow real defects (bad
+        # columns, a corrupt manifest) and quietly emit different
+        # output instead of failing the stream
+        if SI.exists(index_path):
             cleaned = TX.line_dedup_with_index(
                 batch_df, index_path, id_col, text_col,
                 min_df=min_df, before_epoch=int(epoch_id),

@@ -5,6 +5,7 @@ the exact-value gate is the DuckDB oracle in tools/check_oracle.py)."""
 import pytest
 from pyspark.sql import functions as F
 
+from lrmr_spark import stored_index as SI
 from lrmr_spark.operators import dedup as DD
 from lrmr_spark.operators import multimodal as MM
 from lrmr_spark.operators import similarity as SIM
@@ -1033,7 +1034,7 @@ def test_minhash_stored_index_matches_direct(spark, tmp_path):
     ).collect()
     key = lambda rows: sorted((r["new_id"], r["base_id"], r["jaccard"]) for r in rows)
     assert key(got) == key(direct) and key(got) == [(10, 1, 0.99)]
-    # stored _meta is authoritative: a conflicting override must raise,
+    # the stored params are authoritative: a conflicting override must raise,
     # never silently join mismatched band-key types into zero candidates
     meta = DD.read_minhash_index_meta(spark, path)
     assert meta == {
@@ -1632,43 +1633,6 @@ def test_minhash_index_append_skips_known_multisets(spark, docs, tmp_path):
     assert DD.append_minhash_index(docs, path, "doc_id", "text") == 0
 
 
-def test_minhash_index_append_legacy_layout_without_fp(spark, docs, tmp_path):
-    # r12: new indexes persist the rep fingerprint (_fp) so append's
-    # anti-join reads one narrow column instead of re-hashing the wide
-    # items arrays. A pre-r12 index has no _fp column: append must
-    # recompute fingerprints AND keep the legacy layout (no _fp in the
-    # appended rows), with match results identical to the new layout.
-    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
-    t1, t2 = ids[len(ids) // 3], ids[2 * len(ids) // 3]
-    day1 = docs.filter(F.col("doc_id") < t1)
-    day2 = docs.filter((F.col("doc_id") >= t1) & (F.col("doc_id") < t2))
-    day3 = docs.filter(F.col("doc_id") >= t2)
-
-    new = str(tmp_path / "newfmt")
-    DD.write_minhash_index(day1, "doc_id", "text", new, num_hashes=16, bands=4)
-    assert "_fp" in spark.read.parquet(f"{new}/reps").columns
-
-    legacy = str(tmp_path / "legacy")
-    DD.write_minhash_index(day1, "doc_id", "text", legacy, num_hashes=16, bands=4)
-    stripped = spark.read.parquet(f"{legacy}/reps").drop("_fp").localCheckpoint()
-    stripped.write.mode("overwrite").parquet(f"{legacy}/reps")
-
-    n_new = DD.append_minhash_index(day2, new, "doc_id", "text")
-    n_legacy = DD.append_minhash_index(day2, legacy, "doc_id", "text")
-    assert n_new == n_legacy > 0
-    assert "_fp" not in spark.read.parquet(f"{legacy}/reps").columns
-
-    got_new = {
-        (r["new_id"], r["base_id"], r["jaccard"])
-        for r in DD.match_minhash_index(day3, new, "doc_id", "text").collect()
-    }
-    got_legacy = {
-        (r["new_id"], r["base_id"], r["jaccard"])
-        for r in DD.match_minhash_index(day3, legacy, "doc_id", "text").collect()
-    }
-    assert got_new == got_legacy and got_new
-
-
 def test_ivfpq_residual_roundtrip_matches_python_model(spark, emb, tmp_path):
     # by_residual=True: codes quantize vec - coarse[part]; the query
     # builds one ADC table per probed list. Exact-match against an
@@ -1775,30 +1739,6 @@ def test_pq_null_embedding_excluded_everywhere(spark, tmp_path):
     assert 2 not in {r["vec_id"] for r in ivf}
 
 
-def test_pq_write_torn_between_codes_and_meta_fails_loudly(
-    spark, emb, tmp_path, monkeypatch
-):
-    # simulate a crash AFTER the codes overwrite but BEFORE the _meta
-    # write: the stale _meta from the previous write must be gone, so
-    # the next read raises instead of accepting the OLD codebook
-    # fingerprint against the NEW codes (r5 advice fix)
-    cents = [[float((i * 13 + j) % 7) for j in range(64)] for i in range(4)]
-    other = [[c + 1.0 for c in row] for row in cents]
-    path = str(tmp_path / "pq_torn")
-    SIM.write_pq_codes(emb, path, cents, num_sub=8)
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated crash before _meta write")
-
-    monkeypatch.setattr(SIM, "write_meta_row", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        SIM.write_pq_codes(emb, path, other, num_sub=8)
-    monkeypatch.undo()
-    # old codebook must NOT silently validate against the new codes
-    with pytest.raises(Exception, match="_meta|PATH_NOT_FOUND|Path does not exist"):
-        SIM.pq_adc_topk_stored(spark, path, [0.0] * 64, cents, k=5)
-
-
 # -------------------------------------------- two-stage rerank + append
 def test_pq_rerank_is_exact_cosine_over_adc_shortlist(spark, emb, tmp_path):
     # the contract: output == exact-cosine ordering restricted to the
@@ -1862,10 +1802,10 @@ def test_append_pq_codes_equals_rebuild_and_is_idempotent(spark, emb, tmp_path):
     assert SIM.append_pq_codes(batch, apath, cents) == 0
     SIM.write_pq_codes(emb, rpath, cents, num_sub=8)
     got = sorted(
-        tuple(r) for r in spark.read.parquet(f"{apath}/codes").collect()
+        tuple(r) for r in SI.read_part(spark, apath, "codes").collect()
     )
     want = sorted(
-        tuple(r) for r in spark.read.parquet(f"{rpath}/codes").collect()
+        tuple(r) for r in SI.read_part(spark, rpath, "codes").collect()
     )
     assert got == want  # append ≡ one-shot rebuild
 
@@ -1892,8 +1832,8 @@ def test_append_ivfpq_equals_rebuild_both_encodings(spark, emb, tmp_path):
         assert n1 == batch.count()
         assert SIM.append_ivfpq_index(batch, apath, coarse, pq_cents) == 0
         SIM.write_ivfpq_index(emb, rpath, coarse, pq_cents, num_sub=8, by_residual=res)
-        got = sorted(tuple(r) for r in spark.read.parquet(f"{apath}/codes").collect())
-        want = sorted(tuple(r) for r in spark.read.parquet(f"{rpath}/codes").collect())
+        got = sorted(tuple(r) for r in SI.read_part(spark, apath, "codes").collect())
+        want = sorted(tuple(r) for r in SI.read_part(spark, rpath, "codes").collect())
         assert got == want
 
 
@@ -2824,11 +2764,11 @@ def test_sq8_append_equals_rebuild(spark, sf_dir, tmp_path):
     SIM.write_sq8_codes(emb, p_full, list(mins), list(scales))
     inc = {
         (r["vec_id"], tuple(r["codes"]))
-        for r in spark.read.parquet(f"{p_inc}/codes").collect()
+        for r in SI.read_part(spark, p_inc, "codes").collect()
     }
     full = {
         (r["vec_id"], tuple(r["codes"]))
-        for r in spark.read.parquet(f"{p_full}/codes").collect()
+        for r in SI.read_part(spark, p_full, "codes").collect()
     }
     assert inc == full
     drifted = [s * 1.0000001 if s else 0.0 for s in scales]
@@ -2840,7 +2780,7 @@ def test_sq8_append_equals_rebuild(spark, sf_dir, tmp_path):
 
 def test_pq_delete_equals_rebuild_without(spark, sf_dir, tmp_path):
     """delete(ids) must leave the codes table equal to a one-shot
-    build over the corpus minus ids, preserve _meta, and be
+    build over the corpus minus ids, preserve the params, and be
     idempotent."""
     from lrmr_spark.catalog.similarity_ops import _centroids
     from lrmr_spark.operators import similarity as SIM
@@ -2863,14 +2803,14 @@ def test_pq_delete_equals_rebuild_without(spark, sf_dir, tmp_path):
     cols = ["vec_id"] + [f"code_{s}" for s in range(8)]
     after = {
         tuple(r[c] for c in cols)
-        for r in spark.read.parquet(f"{p_del}/codes").collect()
+        for r in SI.read_part(spark, p_del, "codes").collect()
     }
     ref = {
         tuple(r[c] for c in cols)
-        for r in spark.read.parquet(f"{p_ref}/codes").collect()
+        for r in SI.read_part(spark, p_ref, "codes").collect()
     }
     assert after == ref
-    # _meta survived the rewrite: the stored read path still works
+    # the params survived the rewrite: the stored read path still works
     meta = SIM.read_pq_codes_meta(spark, p_del)
     assert meta["num_sub"] == 8 and meta["id_col"] == "vec_id"
 
@@ -2913,23 +2853,23 @@ def test_minhash_content_delete_equals_rebuild_without(spark, sf_dir, tmp_path):
     )
     got_reps = {
         (r["_id"], tuple(r["items"]))
-        for r in spark.read.parquet(f"{p_del}/reps").collect()
+        for r in SI.read_part(spark, p_del, "reps").collect()
     }
     ref_reps = {
         (r["_id"], tuple(r["items"]))
-        for r in spark.read.parquet(f"{p_ref}/reps").collect()
+        for r in SI.read_part(spark, p_ref, "reps").collect()
     }
     assert got_reps == ref_reps and got_reps
     got_bands = {
         (r["_band"], r["_id"])
-        for r in spark.read.parquet(f"{p_del}/bands").collect()
+        for r in SI.read_part(spark, p_del, "bands").collect()
     }
     ref_bands = {
         (r["_band"], r["_id"])
-        for r in spark.read.parquet(f"{p_ref}/bands").collect()
+        for r in SI.read_part(spark, p_ref, "bands").collect()
     }
     assert got_bands == ref_bands
-    # _meta survived
+    # the params survived
     assert DD.read_minhash_index_meta(spark, p_del)["num_hashes"] == 16
 
 
@@ -3195,7 +3135,7 @@ def test_ivfpq_delete_equals_rebuild_without_and_prunes_empty_lists(
 ):
     """delete_ivfpq_index(ids) must equal a one-shot build over the
     corpus minus ids — including dropping any partition directory the
-    delete emptied — preserve _meta, and be idempotent."""
+    delete emptied — preserve the params, and be idempotent."""
     from lrmr_spark.catalog.similarity_ops import _centroids
     from lrmr_spark.operators import similarity as SIM
 
@@ -3207,7 +3147,7 @@ def test_ivfpq_delete_equals_rebuild_without_and_prunes_empty_lists(
     SIM.write_ivfpq_index(emb, p_del, coarse, pq_cents, num_sub=8)
     # takedown = every id in ONE whole inverted list (so the empty-dir
     # branch is exercised) plus the id%7 batch across the others
-    codes = spark.read.parquet(f"{p_del}/codes")
+    codes = SI.read_part(spark, p_del, "codes")
     one_part = codes.select("part").distinct().orderBy("part").first()["part"]
     ids = sorted(
         r["vec_id"]
@@ -3227,11 +3167,11 @@ def test_ivfpq_delete_equals_rebuild_without_and_prunes_empty_lists(
     cols = ["vec_id", "part"] + [f"code_{s}" for s in range(8)]
     after = {
         tuple(r[c] for c in cols)
-        for r in spark.read.parquet(f"{p_del}/codes").collect()
+        for r in SI.read_part(spark, p_del, "codes").collect()
     }
     ref = {
         tuple(r[c] for c in cols)
-        for r in spark.read.parquet(f"{p_ref}/codes").collect()
+        for r in SI.read_part(spark, p_ref, "codes").collect()
     }
     assert after == ref
     # the emptied inverted list's directory is gone from the layout
@@ -3308,7 +3248,7 @@ def test_hashed_ngram_classifier_matches_python_model(spark):
 def test_phash_index_delete_equals_rebuild_without_content(spark, sf_dir, tmp_path):
     """Content takedown from the stored pHash index must equal the
     index rebuilt WITHOUT every blob carrying the takedown content's
-    signatures (whole-cluster removal), preserve _meta, and be
+    signatures (whole-cluster removal), preserve the params, and be
     idempotent."""
     from lrmr_spark.operators import multimodal as MM
 
@@ -3338,15 +3278,14 @@ def test_phash_index_delete_equals_rebuild_without_content(spark, sf_dir, tmp_pa
     )
     after = {
         (r["phash"], r["media_id"])
-        for r in spark.read.parquet(f"{p_del}/hashes").collect()
+        for r in SI.read_part(spark, p_del, "hashes").collect()
     }
     ref = {
         (r["phash"], r["media_id"])
-        for r in spark.read.parquet(f"{p_ref}/hashes").collect()
+        for r in SI.read_part(spark, p_ref, "hashes").collect()
     }
     assert after == ref and after
-    meta = spark.read.json(f"{p_del}/_meta").collect()[0]
-    assert int(meta["n_bits"]) == 16
+    assert SI.open_index(p_del, "phash").params == {"n_bits": 16}
 
 
 def test_line_index_raises_on_width_drift(spark, tmp_path):
@@ -3429,7 +3368,7 @@ def test_winnowing_index_compaction_changes_no_answer(spark, tmp_path):
     }
     assert before == after and before
     # everything folded into the single epoch-0 partition
-    post = spark.read.parquet(f"{path}/postings")
+    post = SI.read_part(spark, path, "postings")
     assert [r["_epoch"] for r in post.select("_epoch").distinct().collect()] == [0]
 
 
@@ -3449,7 +3388,7 @@ def test_winnowing_index_raises_on_param_drift(spark, tmp_path):
 
 def test_winnowing_index_delete_equals_rebuild_without(spark, tmp_path):
     """Id takedown must equal the index rebuilt without those docs,
-    drop an emptied epoch's directory, preserve _meta, and be
+    drop an emptied epoch's directory, preserve the params, and be
     idempotent."""
     import os
 
@@ -3473,16 +3412,16 @@ def test_winnowing_index_delete_equals_rebuild_without(spark, tmp_path):
     )
     after = {
         (r["id"], r["fp"])
-        for r in spark.read.parquet(f"{p_del}/postings").collect()
+        for r in SI.read_part(spark, p_del, "postings").collect()
     }
     ref = {
         (r["id"], r["fp"])
-        for r in spark.read.parquet(f"{p_ref}/postings").collect()
+        for r in SI.read_part(spark, p_ref, "postings").collect()
     }
     assert after == ref and after
     assert not os.path.exists(f"{p_del}/postings/_epoch=0")
-    meta = spark.read.json(f"{p_del}/_meta").collect()[0]
-    assert (int(meta["k"]), int(meta["w"]), int(meta["max_df"])) == (3, 4, 8)
+    meta = SI.open_index(p_del, "winnowing").params
+    assert (meta["k"], meta["w"], meta["max_df"]) == (3, 4, 8)
 
 
 def test_winnowing_index_read_df_cap_is_global_across_epochs(spark, tmp_path):
@@ -3548,7 +3487,7 @@ def test_winnowing_index_df_table_equals_read_time_window(spark, tmp_path):
     # max_df = 5: the boilerplate run crosses the cap only as epochs
     # accumulate, so the banned set actually changes per op
     TX.write_winnowing_index(mk(0, 4), path, "doc_id", "text", max_df=5, epoch=0)
-    assert os.path.exists(f"{path}/df")
+    assert SI.open_index(path, "winnowing").parts["df"].segments
     assert both()  # df = 4: boilerplate still under the cap, matches
     TX.write_winnowing_index(mk(4, 8), path, "doc_id", "text", max_df=5, epoch=1)
     m = both()  # df = 8: banned; only the unique2 overlap remains
@@ -3599,12 +3538,14 @@ def test_winnowing_banned_bcast_gate_equivalence(spark, tmp_path, monkeypatch):
 
 
 def test_winnowing_index_bootstraps_df_for_pre_df_index(spark, tmp_path):
-    """Appending to an index written BEFORE the df side table existed
-    must bootstrap the table from the full postings — merging a delta
-    into no base would silently under-count df, under-ban boilerplate,
-    and emit extra match pairs (the sf0.1 regression this pins)."""
+    """An index written BEFORE the df side table existed (any layout
+    with no manifest) is never adopted: the next epoch write replaces
+    it, so df is built from the new index alone and matches equal a
+    fresh index's — merging a delta into a base that predates it would
+    silently under-count df, under-ban boilerplate, and emit extra
+    match pairs (the sf0.1 regression this pins)."""
+    import json
     import os
-    import shutil
 
     boiler = "b1 b2 b3 b4 b5 b6 b7 b8 b9 b10"
     mk = lambda lo, hi: spark.createDataFrame(  # noqa: E731
@@ -3615,25 +3556,33 @@ def test_winnowing_index_bootstraps_df_for_pre_df_index(spark, tmp_path):
         [(100, f"{boiler} unique2 x2 y2")], "doc_id long, text string"
     )
     path = str(tmp_path / "preidx")
-    TX.write_winnowing_index(mk(0, 4), path, "doc_id", "text", max_df=5, epoch=0)
-    shutil.rmtree(f"{path}/df")  # simulate a pre-df-era index
-    TX.write_winnowing_index(mk(4, 8), path, "doc_id", "text", max_df=5, epoch=1)
-    assert os.path.exists(f"{path}/df")
-    fast = {
-        (r["new_id"], r["base_id"], r["n_shared"])
-        for r in TX.match_winnowing_index(
-            batch, path, "doc_id", "text", min_shared=1
-        ).collect()
-    }
-    slow = {
-        (r["new_id"], r["base_id"], r["n_shared"])
-        for r in TX.match_winnowing_index(
-            batch, path, "doc_id", "text", min_shared=1, use_df_table=False
-        ).collect()
-    }
-    # boilerplate df = 8 > 5: banned on BOTH paths — only the unique2
-    # overlap survives
-    assert fast == slow and {b for _, b, _ in fast} == {2}
+    # the pre-manifest layout: a _meta row plus epoch-partitioned
+    # postings for docs 0..7, and no df table
+    TX.winnowing_postings(mk(0, 8), "doc_id", "text", 3, 4).select(
+        F.col("_id").alias("id"), "fp", F.lit(0).alias("_epoch")
+    ).write.partitionBy("_epoch").parquet(f"{path}/postings")
+    os.makedirs(f"{path}/_meta")
+    with open(f"{path}/_meta/part-00000.json", "w") as f:
+        json.dump({"k": 3, "w": 4, "max_df": 5, "hash": "md5-8",
+                   "id_col": "doc_id"}, f)
+    fresh = str(tmp_path / "freshidx")
+    for p in (path, fresh):
+        TX.write_winnowing_index(mk(4, 8), p, "doc_id", "text", max_df=5, epoch=1)
+    assert sorted(os.listdir(path)) == sorted(os.listdir(fresh))
+
+    def matches(p, use_df_table):
+        return {
+            (r["new_id"], r["base_id"], r["n_shared"])
+            for r in TX.match_winnowing_index(
+                batch, p, "doc_id", "text", min_shared=1,
+                use_df_table=use_df_table,
+            ).collect()
+        }
+
+    got = matches(path, True)
+    assert got == matches(path, False) == matches(fresh, True)
+    # boilerplate df = 4 <= 5 in the replacing index: not banned
+    assert {b for _, b, _ in got} == {4, 5, 6, 7}
 
 
 def test_winnowing_index_delete_to_empty_then_reuse(spark, tmp_path):
@@ -3687,22 +3636,6 @@ def test_winnowing_index_string_id_takedown(spark, tmp_path):
         for r in TX.match_winnowing_index(batch, path, "doc_id", "text").collect()
     }
     assert after == {"d2"}
-
-
-def test_winnowing_index_write_raises_on_torn_meta(spark, tmp_path):
-    """_meta missing OVER existing postings is the documented torn
-    state (interrupted compact/delete) — a later write must REFUSE to
-    mint fresh parameters over epochs of unknown (k, w)."""
-    import shutil
-
-    import pytest as _pytest
-
-    docs = _win_docs(spark)
-    path = str(tmp_path / "torn")
-    TX.write_winnowing_index(docs, path, "doc_id", "text", epoch=0)
-    shutil.rmtree(f"{path}/_meta")
-    with _pytest.raises(ValueError, match="TORN"):
-        TX.write_winnowing_index(docs, path, "doc_id", "text", epoch=1)
 
 
 def test_heavy_hitters_exact_matches_counter_even_when_skew_planted(spark):
@@ -3886,7 +3819,7 @@ def test_quality_model_store_load_score_lifecycle(spark, docs, tmp_path):
     # retrain ≡ rebuild (exact-integer training is deterministic)
     assert TX.write_quality_model(d, path, "text", _QM_TEACHER16, 2) == w1
     assert TX.delete_quality_model(spark, path)
-    with pytest.raises(ValueError, match="_meta"):
+    with pytest.raises(ValueError, match="no quality model"):
         TX.load_quality_model(spark, path)
     assert not TX.delete_quality_model(spark, path)
 
@@ -3897,24 +3830,23 @@ def test_quality_model_drift_and_torn_raise(spark, docs, tmp_path):
     path = str(tmp_path / "qmd")
     d = docs.limit(40)
     TX.write_quality_model(d, path, "text", _QM_TEACHER16, iterations=1)
-    # tamper: claim a different bucket-hash convention in _meta
-    spark.range(1).select(
-        F.lit(16).cast("int").alias("n_buckets"),
-        F.lit(1).cast("int").alias("iterations"),
-        F.lit("uni+bigram").alias("feature"),
-        F.lit("xxhash-q-8").alias("hash"),
-        F.lit("deadbeef").alias("teacher_fp"),
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_meta")
+    # tamper: claim a different bucket-hash convention in the params
+    idx = SI.open_index(path, "quality_model")
+    SI.commit(
+        path, "quality_model",
+        {**idx.params, "hash": "xxhash-q-8", "teacher_fp": "deadbeef"},
+        idx.parts,
+    )
     with pytest.raises(ValueError, match="drift"):
         TX.load_quality_model(spark, path)
-    # restore meta, then tear the weights table (drop bucket 0)
+    # restore the params, then tear the weights table (drop bucket 0)
     TX.write_quality_model(d, path, "text", _QM_TEACHER16, iterations=1)
-    kept = (
-        spark.read.parquet(f"{path}/weights")
-        .filter(F.col("bucket") != 0)
-        .localCheckpoint(eager=True)
+    idx = SI.open_index(path, "quality_model")
+    kept = idx.read(spark, "weights").filter(F.col("bucket") != 0)
+    SI.commit(
+        path, "quality_model", idx.params,
+        {"weights": SI.write_part(kept, path, "weights")},
     )
-    kept.write.mode("overwrite").parquet(f"{path}/weights")
     with pytest.raises(ValueError, match="torn"):
         TX.load_quality_model(spark, path)
 
@@ -4121,77 +4053,52 @@ def test_pq_train_iter_sql_aggs_match_column_api(emb):
     assert list(map(tuple, got)) == list(map(tuple, want))
 
 
-# ------------------------------------------- _meta read hardening (r12)
+# ------------------------------------------- manifest read hardening
 def test_meta_read_empty_dir_raises_torn_not_indexerror(spark, tmp_path):
-    """A _meta dir that EXISTS but holds no JSON row (interrupted
-    overwrite leaving only _SUCCESS) must fail as the documented torn
-    state, not a bare IndexError from collect()[0] (r11 ADVICE). Both
-    a direct reader and the two absence-branching callers are covered."""
+    """A ``_meta`` dir with no JSON row and no manifest (the torn state
+    an interrupted pre-manifest overwrite left) is not an index: a
+    direct reader raises a FileNotFoundError naming the path, not a
+    bare IndexError, and the absence-branching callers treat it as
+    absent."""
     import os
-
-    from lrmr_spark.operators._meta_io import TornMetaError
 
     path = str(tmp_path / "idx")
     os.makedirs(f"{path}/_meta")
     open(f"{path}/_meta/_SUCCESS", "w").close()
-    with pytest.raises(TornMetaError, match="torn"):
+    with pytest.raises(FileNotFoundError, match="no manifest") as e:
         SIM.read_pq_codes_meta(spark, path)
-    with pytest.raises(TornMetaError, match="torn"):
+    assert path in str(e.value)
+    with pytest.raises(FileNotFoundError, match="no manifest"):
         DD.read_minhash_index_meta(spark, path)
-    # winnowing: absence -> None, torn -> raise (not silently None)
-    with pytest.raises(TornMetaError, match="torn"):
-        TX._read_winnowing_meta(spark, path)
-    assert TX._read_winnowing_meta(spark, str(tmp_path / "absent")) is None
-    # quality model: torn folds into its documented ValueError
-    with pytest.raises(ValueError, match="absent or torn"):
+    # winnowing: absence and a pre-manifest layout both read as None
+    assert TX._open_winnowing(path) is None
+    assert TX._open_winnowing(str(tmp_path / "absent")) is None
+    # quality model: folds into its documented ValueError
+    with pytest.raises(ValueError, match="no quality model"):
         TX.load_quality_model(spark, path)
 
 
 def test_meta_read_corrupt_record_fails_fast(spark, tmp_path):
-    """A corrupt/field-renamed _meta record must fail AT READ TIME
-    (FAILFAST) instead of parsing to an all-NULL row under PERMISSIVE
-    mode and surfacing later as a misleading drift error (r11 ADVICE)."""
+    """A corrupt or field-missing manifest must fail AT READ TIME with
+    a ValueError instead of surfacing later as a misleading drift
+    error or a TypeError."""
+    import json
     import os
 
     path = str(tmp_path / "idx2")
-    os.makedirs(f"{path}/_meta")
-    with open(f"{path}/_meta/part-00000.json", "w") as f:
+    os.makedirs(path)
+    with open(f"{path}/_MANIFEST-v00001", "w") as f:
         f.write("{not valid json\n")
-    with pytest.raises(Exception, match="FAILFAST|Malformed|malformed"):
+    with pytest.raises(ValueError, match="corrupt manifest"):
         SIM.read_pq_codes_meta(spark, path)
-
-
-def test_write_meta_row_round_trips_like_spark_writer(spark, tmp_path):
-    """write_meta_row (r12: driver-side FS write replacing a full Spark
-    job per single-row _meta) must stay reader-compatible with what the
-    old spark.range(1)...write.json shape produced: same types back
-    through the explicit-schema FAILFAST read AND the schema-inferred
-    backup read, None fields DROPPED (Spark's JSON writer omits null
-    fields), and overwrite-on-rewrite semantics."""
-    from lrmr_spark.operators._meta_io import read_meta_row, write_meta_row
-
-    p = str(tmp_path / "wm" / "_meta")
-    write_meta_row(
-        spark, p, {"k": 4, "hash": "md5", "fast": True, "id_type": None}
-    )
-    row = read_meta_row(
-        spark, p, "k int, hash string, fast boolean, id_type string"
-    )
-    assert row.asDict() == {
-        "k": 4, "hash": "md5", "fast": True, "id_type": None
-    }
-    # the generic inferred backup read (dedup delete path) must see the
-    # None field as ABSENT, exactly as under the old writer
-    inferred = spark.read.json(p).collect()[0].asDict()
-    assert inferred == {"k": 4, "hash": "md5", "fast": True}
-    # overwrite replaces the row wholesale — no stale fields survive
-    write_meta_row(spark, p, {"k": 9})
-    assert spark.read.json(p).collect()[0].asDict() == {"k": 9}
-    # exactly one visible file: a reader never sees a half state
-    import os
-
-    visible = [f for f in os.listdir(p) if not f.startswith((".", "_"))]
-    assert visible == ["part-00000.json"]
+    with open(f"{path}/_MANIFEST-v00002", "w") as f:
+        json.dump({"family": "pq", "params": {"num_sub": 8}, "parts": {}}, f)
+    with pytest.raises(ValueError, match="params lack"):
+        SIM.read_pq_codes_meta(spark, path)
+    with open(f"{path}/_MANIFEST-v00003", "w") as f:
+        json.dump({"family": "pq", "params": {}}, f)
+    with pytest.raises(ValueError, match="missing field"):
+        SIM.read_pq_codes_meta(spark, path)
 
 
 def test_dlit_sql_nonfinite_literals_round_trip(spark):
@@ -4212,53 +4119,3 @@ def test_dlit_sql_nonfinite_literals_round_trip(spark):
 
 
 # --------------------------------------- single-pass rewrite swap (r12)
-def test_overwrite_parquet_swap_reads_old_dir_in_one_pass(spark, tmp_path):
-    """overwrite_parquet_swap replaces a parquet dir with a frame whose
-    plan READS that same dir — the single-pass shape that retired the
-    eager-checkpoint + overwrite rewrites (winnowing df merge, both
-    epoch compactors, the minhash delete's bands table)."""
-    import os
-
-    from lrmr_spark.operators._meta_io import overwrite_parquet_swap
-
-    p = str(tmp_path / "t")
-    spark.range(10).write.parquet(p)
-    # a stale temp from a crashed earlier swap must be clobbered
-    os.makedirs(str(tmp_path / ".t.swap"))
-    open(str(tmp_path / ".t.swap" / "junk"), "w").close()
-    overwrite_parquet_swap(spark.read.parquet(p).filter("id < 5"), p)
-    assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == list(
-        range(5)
-    )
-    assert not os.path.exists(str(tmp_path / ".t.swap"))
-
-
-def test_overwrite_parquet_swap_replaces_whole_dir_under_dynamic_leak(
-    spark, tmp_path
-):
-    """The compactors' old static-pinned overwrite guarded against a
-    leaked session-level dynamic partition-overwrite mode leaving old
-    epochs alive (double-counting every post-compaction df). The swap
-    must keep that guarantee by construction: the whole dir is
-    replaced, leaked mode or not."""
-    from lrmr_spark.operators._meta_io import overwrite_parquet_swap
-
-    p = str(tmp_path / "parts")
-    df = spark.createDataFrame(
-        [(1, 0), (2, 0), (3, 1), (4, 1)], "id long, _epoch int"
-    )
-    df.write.partitionBy("_epoch").parquet(p)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        folded = (
-            spark.read.parquet(p)
-            .select("id")
-            .withColumn("_epoch", F.lit(0))
-        )
-        overwrite_parquet_swap(folded, p, ["_epoch"])
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    rows = spark.read.parquet(p).collect()
-    assert sorted(r["id"] for r in rows) == [1, 2, 3, 4]
-    assert {r["_epoch"] for r in rows} == {0}  # old epochs are GONE

@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from lrmr_spark import stored_index as SI
 from lrmr_spark import streaming as ST
 from lrmr_spark.sources import parallelize
 from lrmr_spark.tables import load
@@ -520,7 +521,7 @@ def test_pq_index_append_stream_equals_batch_rebuild(spark, sf_dir, tmp_path):
     rebuilt = str(tmp_path / "reb")
     SIM.write_pq_codes(emb, rebuilt, cents, num_sub=8)
     want = sorted(
-        tuple(r) for r in spark.read.parquet(f"{rebuilt}/codes").collect()
+        tuple(r) for r in SI.read_part(spark, rebuilt, "codes").collect()
     )
     assert got == want and len(want) == emb.count()
 
@@ -743,7 +744,7 @@ def test_line_dedup_stream_is_prefix_causal_and_index_converges(
         assert got[1][1] == 1 and header not in got[1][2]
     # index convergence: summed epoch counts == one-shot corpus counts
     stored = (
-        spark.read.parquet(f"{index}/counts")
+        SI.read_part(spark, index, "counts")
         .groupBy("h")
         .agg(F.sum("df").alias("df"))
         .collect()
@@ -914,13 +915,12 @@ def test_quality_score_stream_from_stored_model(spark, sf_dir, tmp_path):
     }
     assert got == want and got
     # drift guard applies at stream START, before any micro-batch runs
-    spark.range(1).select(
-        F.lit(len(_QC_TEACHER)).cast("int").alias("n_buckets"),
-        F.lit(2).cast("int").alias("iterations"),
-        F.lit("uni-only").alias("feature"),
-        F.lit("md5-q-6").alias("hash"),
-        F.lit("deadbeef").alias("teacher_fp"),
-    ).coalesce(1).write.mode("overwrite").json(f"{model}/_meta")
+    idx = SI.open_index(model, "quality_model")
+    SI.commit(
+        model, "quality_model",
+        {**idx.params, "feature": "uni-only", "teacher_fp": "deadbeef"},
+        idx.parts,
+    )
     with pytest.raises(ValueError, match="drift"):
         ST.run_quality_score_stream_from_model(
             ST.stream_documents(spark, sf_dir),
