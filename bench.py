@@ -14,11 +14,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(1, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
+from hostcal import host_cal
 from lrmr_spark.catalog import queries
 from lrmr_spark.session import get_spark
 
@@ -117,51 +118,10 @@ def main() -> None:
             }
         return secs[0], min(secs)
 
-    # capture the contention bracket BEFORE the calibration shuffle +
-    # 256 MiB fsync'd write so the calibration work doesn't inflate it
-    # (r8 ADVICE); a post-calibration snapshot is recorded separately.
-    load_before = [round(x, 2) for x in os.getloadavg()]
-
-    # host calibration (r8 extension): loadavg captures CONTENTION but
-    # not the host's intrinsic speed — the same build measured 8-10×
-    # slower on a 173 MB/s-disk VM for shuffle-heavy queries while
-    # sub-second scan+agg queries moved <1.5×. Two pinned
-    # micro-workloads make cross-host adjudication readable off the
-    # JSON: a fixed 20 M-row shuffle (exercises the same local-disk
-    # shuffle machinery the heavy queries bottleneck on) and a 256 MiB
-    # fsync'd sequential write (the spill/shuffle-write path itself).
-    t0 = time.time()
-    (
-        spark.range(20_000_000)
-        .repartition(32, "id")
-        .selectExpr("id % 1000 AS k")
-        .groupBy("k")
-        .count()
-        .count()
-    )
-    cal_shuffle = round(time.time() - t0, 3)
-    # write the probe where the shuffle actually spills (spark.local.dir
-    # falls back to java.io.tmpdir exactly as Spark does) via a unique
-    # tempfile in try/finally — concurrent benches can't collide and the
-    # file can't leak on a failed write (r8 ADVICE)
-    cal_dir = spark.conf.get(
-        "spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/tmp")
-    ).split(",")[0]
-    buf = b"\0" * (4 << 20)
-    fd, cal_path = tempfile.mkstemp(prefix=".bench_diskcal_", dir=cal_dir)
-    try:
-        t0 = time.time()
-        with os.fdopen(fd, "wb") as f:
-            for _ in range(64):  # 256 MiB
-                f.write(buf)
-            f.flush()
-            os.fsync(f.fileno())
-        cal_disk = round(256 / max(time.time() - t0, 1e-9), 1)
-    finally:
-        os.remove(cal_path)
-
-    # post-calibration load snapshot: with load_before captured above,
-    # the pair brackets the calibration itself as well as the run
+    # host calibration (tools/hostcal.py): the loadavg snapshot is
+    # taken before its 20 M-row shuffle and 256 MiB fsync'd write, and
+    # a second one after, so the pair brackets the calibration itself
+    cal = host_cal(spark)
     load_after_cal = [round(x, 2) for x in os.getloadavg()]
     results, results_min = {}, {}
     for name in HEADLINE:
@@ -191,12 +151,12 @@ def main() -> None:
                 ),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "build_serve_split": build_serve,
-                "loadavg_before": load_before,
+                "loadavg_before": cal["loadavg"],
                 "loadavg_after_cal": load_after_cal,
                 "loadavg_after": [round(x, 2) for x in os.getloadavg()],
                 "host_cal": {
-                    "shuffle_20m_sec": cal_shuffle,
-                    "disk_write_mb_s": cal_disk,
+                    "shuffle_20m_sec": cal["shuffle_20m_sec"],
+                    "disk_write_mb_s": cal["disk_write_mb_s"],
                 },
             }
         )

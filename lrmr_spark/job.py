@@ -66,7 +66,7 @@ SUCCEEDED = "succeeded"
 FAILED = "failed"
 ABORTED = "aborted"
 
-_registry: dict[str, "JobHandle"] = {}
+_registry: dict[str, "_BackgroundJob"] = {}
 _registry_lock = threading.Lock()
 
 
@@ -81,23 +81,32 @@ class Result:
         return iter(self.rows)
 
 
-class JobHandle:
-    """Detached job (mirror of /root/reference/running_job.go:33-77)."""
+class _BackgroundJob:
+    """The lifecycle both detached handles share: the status book,
+    the checkpoint file and ``status`` / ``error`` / ``metrics`` /
+    ``wait`` / ``abort``. A subclass supplies how the job executes
+    (``_execute``, on the handle's thread) and how it is cancelled
+    (``_cancel``)."""
 
-    def __init__(self, job_id: str, df: DataFrame, observations: list[Observation]):
+    _rows: list[Any] | None = None
+    _payload_extra: dict = {}
+
+    def __init__(self, job_id: str):
         self.job_id = job_id
-        self._df = df
-        self._observations = observations
-        self._spark = df.sparkSession
         self._status = RUNNING
         self._error: BaseException | None = None
-        self._rows: list[Any] | None = None
         self._metrics: dict[str, Any] = {}
         self._done = threading.Event()
         self._finished_at: float | None = None
         self._started_at = time.time()
         self._thread = threading.Thread(target=self._run, daemon=True)
         self._checkpoint()
+
+    def _execute(self) -> None:
+        raise NotImplementedError
+
+    def _cancel(self) -> None:
+        raise NotImplementedError
 
     def _checkpoint(self) -> None:
         """Publish status/metrics for cross-process attach (the etcd
@@ -114,18 +123,15 @@ class JobHandle:
                                 for k, v in self._metrics.items()},
                     "error": repr(self._error) if self._error else None,
                     "n_rows": len(self._rows) if self._rows is not None else None,
+                    **self._payload_extra,
                 },
             )
         except OSError:
             pass
 
     def _run(self) -> None:
-        sc = self._spark.sparkContext
         try:
-            sc.setJobGroup(self.job_id, f"lrmr-spark background job {self.job_id}", True)
-            self._rows = self._df.collect()
-            for obs in self._observations:
-                self._metrics.update(obs.get)
+            self._execute()
             if self._status == RUNNING:
                 self._status = SUCCEEDED
         except BaseException as exc:  # surfaced via .error / .wait
@@ -152,18 +158,45 @@ class JobHandle:
     def metrics(self) -> dict[str, Any]:
         return dict(self._metrics)
 
-    def wait(self, timeout: float | None = None) -> "JobHandle":
+    def wait(self, timeout: float | None = None):
+        """Block until the job finishes (or ``timeout`` passes)."""
         self._done.wait(timeout)
         return self
 
     def abort(self) -> None:
-        """Cooperative cancel via the Spark job group (the analogue of
-        the reference's cluster-wide etcd abort event —
-        /root/reference/running_job.go:152-194)."""
         if not self._done.is_set():
             self._status = ABORTED
-            self._spark.sparkContext.cancelJobGroup(self.job_id)
+            self._cancel()
             self._checkpoint()
+
+
+def _start(handle: _BackgroundJob) -> None:
+    with _registry_lock:
+        _registry[handle.job_id] = handle
+    handle._thread.start()
+
+
+class JobHandle(_BackgroundJob):
+    """Detached job (mirror of the reference's running_job.go:33-77)."""
+
+    def __init__(self, job_id: str, df: DataFrame, observations: list[Observation]):
+        self._df = df
+        self._observations = observations
+        self._spark = df.sparkSession
+        super().__init__(job_id)
+
+    def _execute(self) -> None:
+        sc = self._spark.sparkContext
+        sc.setJobGroup(self.job_id, f"lrmr-spark background job {self.job_id}", True)
+        self._rows = self._df.collect()
+        for obs in self._observations:
+            self._metrics.update(obs.get)
+
+    def _cancel(self) -> None:
+        """Cooperative cancel via the Spark job group (the analogue of
+        the reference's cluster-wide etcd abort event, running_job.go:
+        152-194)."""
+        self._spark.sparkContext.cancelJobGroup(self.job_id)
 
     def result(self) -> Result:
         self.wait()
@@ -176,13 +209,11 @@ def start_background(
     job_id: str, df: DataFrame, observations: list[Observation]
 ) -> JobHandle:
     handle = JobHandle(job_id, df, observations)
-    with _registry_lock:
-        _registry[job_id] = handle
-    handle._thread.start()
+    _start(handle)
     return handle
 
 
-class StreamingJobHandle:
+class StreamingJobHandle(_BackgroundJob):
     """Detached CONTINUOUS job over a Structured Streaming query — the
     RunInBackground mapping for streams (the reference's detached jobs
     are long-running by design: /root/reference/running_job.go:33-77
@@ -203,18 +234,12 @@ class StreamingJobHandle:
     tests). Metrics publish the last committed micro-batch id and
     cumulative input rows from the query's progress feed."""
 
+    _payload_extra = {"streaming": True}
+
     def __init__(self, job_id: str, query):
-        self.job_id = job_id
         self._query = query
-        self._status = RUNNING
-        self._error: BaseException | None = None
-        self._metrics: dict[str, Any] = {}
         self._seen_batches: set[int] = set()
-        self._done = threading.Event()
-        self._finished_at: float | None = None
-        self._started_at = time.time()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._checkpoint()
+        super().__init__(job_id)
 
     def _refresh_metrics(self) -> None:
         try:
@@ -231,67 +256,17 @@ class StreamingJobHandle:
         except Exception:
             pass  # progress feed is best-effort telemetry
 
-    def _checkpoint(self) -> None:
-        try:
-            _write_checkpoint(
-                self.job_id,
-                {
-                    "job_id": self.job_id,
-                    "status": self._status,
-                    "started_at": self._started_at,
-                    "finished_at": self._finished_at,
-                    "metrics": dict(self._metrics),
-                    "error": repr(self._error) if self._error else None,
-                    "n_rows": None,
-                    "streaming": True,
-                },
-            )
-        except OSError:
-            pass
-
-    def _run(self) -> None:
-        try:
-            while not self._query.awaitTermination(0.5):
-                self._refresh_metrics()
-                self._checkpoint()
+    def _execute(self) -> None:  # a StreamingQueryException → FAILED
+        while not self._query.awaitTermination(0.5):
             self._refresh_metrics()
-            if self._status == RUNNING:
-                self._status = SUCCEEDED
-        except BaseException as exc:  # StreamingQueryException → FAILED
-            if self._status != ABORTED:
-                self._status = FAILED
-                self._error = exc
-        finally:
-            # final checkpoint BEFORE releasing waiters (see JobHandle)
-            self._finished_at = time.time()
             self._checkpoint()
-            self._done.set()
+        self._refresh_metrics()
 
-    @property
-    def status(self) -> str:
-        return self._status
-
-    @property
-    def error(self) -> BaseException | None:
-        return self._error
-
-    def metrics(self) -> dict[str, Any]:
-        return dict(self._metrics)
-
-    def wait(self, timeout: float | None = None) -> "StreamingJobHandle":
-        """Block until the query terminates (drains, is stopped, or
-        fails) — awaitTermination with the handle's status book."""
-        self._done.wait(timeout)
-        return self
-
-    def abort(self) -> None:
-        if not self._done.is_set():
-            self._status = ABORTED
-            self._query.stop()
-            self._checkpoint()
+    def _cancel(self) -> None:
+        self._query.stop()
 
     # a stream's graceful stop IS its cooperative cancel
-    stop = abort
+    stop = _BackgroundJob.abort
 
 
 def start_background_stream(job_id: str, writer) -> StreamingJobHandle:
@@ -301,9 +276,7 @@ def start_background_stream(job_id: str, writer) -> StreamingJobHandle:
     checkpointLocation; restarting the same writer+checkpoint after an
     abort resumes exactly-once from committed offsets."""
     handle = StreamingJobHandle(job_id, writer.start())
-    with _registry_lock:
-        _registry[job_id] = handle  # duck-typed alongside JobHandle
-    handle._thread.start()
+    _start(handle)
     return handle
 
 
@@ -341,7 +314,7 @@ class DetachedJobView:
         return self
 
 
-def get_job(job_id: str) -> JobHandle | DetachedJobView | None:
+def get_job(job_id: str) -> JobHandle | StreamingJobHandle | DetachedJobView | None:
     """Attach by job ID (mirror of /root/reference/running_job.go:196-202):
     the live in-process handle when this process owns the job, else a
     checkpoint-file view of a job started by any other process sharing

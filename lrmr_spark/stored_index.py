@@ -29,9 +29,10 @@ segments. Design rules, each stated once here:
   ``open`` + ``json.loads``; a part is read as
   ``spark.read.schema(<recorded>).parquet(*segment_dirs)``, with
   ``basePath`` set for keyed parts so ``<key>`` stays a real partition
-  column (PartitionFilters prune it). More live segments in one part
-  than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-  (32) make the file listing a Spark job; a compaction folds them.
+  column (PartitionFilters prune it). Spark lists more paths than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) with
+  a Spark job, so a part with more live segments is read as the union
+  of scans of at most that many segments each.
 - **Failures are loud.** A corrupt manifest, or one missing a field,
   raises ``ValueError`` at read time. A missing index raises
   ``FileNotFoundError`` naming the path; a directory holding no
@@ -51,6 +52,7 @@ the latest version.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -58,6 +60,7 @@ import shutil
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 __all__ = [
@@ -75,6 +78,7 @@ __all__ = [
 ]
 
 _MANIFEST_RE = re.compile(r"_MANIFEST-v(\d+)")
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _TMP = "._MANIFEST.tmp"
 
 
@@ -181,14 +185,18 @@ class Part:
         return StructType.fromJson(json.loads(self.schema))
 
     def read(self, spark, root: str, name: str):
-        """The part's rows: one parquet scan of its segments under the
-        recorded schema (no inference job). A part with no segments
-        reads as an empty frame of that schema."""
+        """The part's rows: parquet scans of its segments under the
+        recorded schema (no inference job), each over no more segments
+        than Spark lists on the driver. A part with no segments reads
+        as an empty frame of that schema."""
         root = local_path(root)
         reader = spark.read.schema(self.spark_schema())
         if self.key is not None and self.segments:
             reader = reader.option("basePath", os.path.join(root, name))
-        return reader.parquet(*[os.path.join(root, s) for s in self.segments])
+        paths = [os.path.join(root, s) for s in self.segments]
+        n = max(1, int(spark.conf.get(_LISTING_THRESHOLD)))
+        scans = [reader.parquet(*paths[i : i + n]) for i in range(0, len(paths), n)]
+        return functools.reduce(DataFrame.union, scans) if scans else reader.parquet()
 
 
 @dataclass(frozen=True)

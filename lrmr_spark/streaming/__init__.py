@@ -12,9 +12,14 @@ stateful operators) comes from Structured Streaming here:
 - ``session_counts``  → session_window with inactivity gap
 - ``stateful_seen_filter`` → applyInPandasWithState cross-batch dedup
   (the custom-stateful-operator escape hatch)
-- ``run_to_memory``   → drive a query to completion synchronously on a
-  bounded source (the local test harness; swap the sink for
-  kafka/parquet in production)
+- ``run_to_memory`` / ``run_available_now`` → drive a query to
+  completion on a bounded source into a memory sink (the continuous and
+  the availableNow trigger; swap the sink for kafka/parquet in
+  production)
+- the ``run_*_stream`` serving runners → the identical batch operator
+  per micro-batch inside foreachBatch; its result frames land in one
+  ``_epoch``-partitioned parquet sink, read back under the operator's
+  own schema (``_run_epoch_sink``)
 
 Late data: each aggregation carries ``withWatermark`` so state is
 dropped once event time passes the threshold — the knob the reference
@@ -30,7 +35,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -349,6 +353,20 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> Data
     return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
+def _drain_available_now(writer, spark: SparkSession, timeout_s: int, what: str) -> None:
+    """Start an availableNow writer under the scoped state-partition
+    override and block until the bounded source drains."""
+    with _stream_partitions(spark):
+        q = writer.trigger(availableNow=True).start()
+        try:
+            if not q.awaitTermination(timeout_s):
+                raise TimeoutError(
+                    f"availableNow {what} stream did not drain in {timeout_s}s"
+                )
+        finally:
+            q.stop()
+
+
 def run_available_now(
     df: DataFrame, name: str, output_mode: str = "append", timeout_s: int = 300
 ) -> DataFrame:
@@ -363,20 +381,12 @@ def run_available_now(
     commits offsets, and exits — no always-on cluster, identical state
     and watermark semantics to the continuous run, resumable from the
     same checkpoint."""
-    with _stream_partitions(df.sparkSession):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            # availableNow terminates on its own once the source is drained
-            if not q.awaitTermination(timeout_s):
-                raise TimeoutError(f"availableNow query {name} did not drain in {timeout_s}s")
-        finally:
-            q.stop()
+    _drain_available_now(
+        df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+        df.sparkSession,
+        timeout_s,
+        name,
+    )
     return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
@@ -552,18 +562,61 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _drain_available_now(writer, spark: SparkSession, timeout_s: int, what: str) -> None:
-    """Start an availableNow writer under the scoped state-partition
-    override and block until the bounded source drains."""
-    with _stream_partitions(spark):
-        q = writer.trigger(availableNow=True).start()
-        try:
-            if not q.awaitTermination(timeout_s):
-                raise TimeoutError(
-                    f"availableNow {what} stream did not drain in {timeout_s}s"
-                )
-        finally:
-            q.stop()
+def _read_sink(spark: SparkSession, out_path: str, schema: T.StructType) -> DataFrame:
+    """The sink's rows under the result schema: no inference job, and
+    an empty sink (a stream that ran no micro-batch leaves none) reads
+    as an empty frame of that schema. A file that does not fit the
+    schema fails the read instead of being reinterpreted."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(out_path)
+    jpath.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(jpath)
+    return spark.read.schema(schema).parquet(out_path)
+
+
+def _run_epoch_sink(
+    stream: DataFrame,
+    out_path: str,
+    checkpoint_dir: str,
+    timeout_s: int,
+    what: str,
+    batch_result,
+    after_write=None,
+) -> DataFrame:
+    """The serving loop shared by the foreachBatch runners: per
+    micro-batch, ``batch_result(batch_df, epoch_id)`` is the batch's
+    result frame, written to an ``_epoch``-partitioned parquet sink
+    under dynamic partition overwrite (a replayed micro-batch replaces
+    its own partition, so the sink stays exactly-once); then
+    ``after_write(batch_df, epoch_id)``, if given. Drains with
+    Trigger.AvailableNow and returns the sink's rows as a batch DF.
+
+    The read-back schema is the result frame's own. A stream that runs
+    no micro-batch takes it from ``batch_result`` over an empty batch
+    of the stream's schema."""
+    spark = stream.sparkSession
+    schema: list[T.StructType] = []
+
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
+        result = batch_result(batch_df, int(epoch_id))
+        schema[:] = [result.schema]
+        (
+            result.withColumn("_epoch", F.lit(int(epoch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_epoch")
+            .parquet(out_path)
+        )
+        if after_write is not None:
+            after_write(batch_df, int(epoch_id))
+
+    _drain_available_now(
+        stream.writeStream.foreachBatch(_batch).option("checkpointLocation", checkpoint_dir),
+        spark,
+        timeout_s,
+        what,
+    )
+    if not schema:
+        schema.append(batch_result(parallelize(spark, [], stream.schema), 0).schema)
+    return _read_sink(spark, out_path, schema[0]).drop("_epoch")
 
 
 def run_minhash_index_match_stream(
@@ -580,9 +633,9 @@ def run_minhash_index_match_stream(
     the daily-crawl dedup loop run as a live stream: each micro-batch
     of incoming documents is matched against the write-once corpus
     index (operators.dedup.match_minhash_index) inside foreachBatch,
-    and its (new_id, base_id, jaccard) matches land in an
-    epoch-partitioned parquet sink. Drains with Trigger.AvailableNow
-    and returns the accumulated matches as a batch DF.
+    and its (new_id, base_id, jaccard) matches land in the
+    exactly-once epoch sink of ``_run_epoch_sink``, which returns the
+    accumulated matches as a batch DF.
 
     Why foreachBatch rather than a declarative stream-stream join:
     the match is a multi-stage batch algorithm (rep collapse → band
@@ -592,52 +645,15 @@ def run_minhash_index_match_stream(
     per batch, so stream and batch results agree exactly
     (asserted in tests). This is also the production shape: the index
     is static within a run; intra-batch/intra-stream duplicates are
-    the INCREMENTAL variant's job (dedup_minhash_incremental).
+    the INCREMENTAL variant's job (dedup_minhash_incremental)."""
+    from ..operators import dedup as DD
 
-    Exactly-once: the sink is partitioned by the epoch id and written
-    with dynamic partition overwrite, so a replayed micro-batch (after
-    a failure, from the checkpoint) overwrites its own partition
-    instead of appending duplicates."""
-    spark = docs_stream.sparkSession
-
-    def _match_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..operators import dedup as DD
-
-        matches = DD.match_minhash_index(
+    return _run_epoch_sink(
+        docs_stream, out_path, checkpoint_dir, timeout_s, "minhash-match",
+        lambda batch_df, epoch_id: DD.match_minhash_index(
             batch_df, index_path, id_col, text_col, threshold=threshold
-        ).withColumn("_epoch", F.lit(int(epoch_id)))
-        (
-            matches.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_path)
-        )
-
-    _drain_available_now(
-        docs_stream.writeStream.foreachBatch(_match_batch)
-        .option("checkpointLocation", checkpoint_dir),
-        spark,
-        timeout_s,
-        "minhash-match",
+        ),
     )
-    try:
-        return spark.read.parquet(out_path).drop("_epoch")
-    except AnalysisException:
-        # every micro-batch produced ZERO matches → the dynamic
-        # partition overwrites wrote no parquet files, so the read-back
-        # can't infer a schema. An empty match set is a normal outcome
-        # (a crawl with no near-dups), not an error: return an empty DF
-        # with the matcher's (new_id, base_id, jaccard) schema, id type
-        # taken from the stream itself.
-        id_type = docs_stream.schema[id_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField("new_id", id_type),
-                T.StructField("base_id", id_type),
-                T.StructField("jaccard", T.DoubleType()),
-            ]
-        )
-        return parallelize(spark, [], schema)
 
 
 def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -714,47 +730,16 @@ def run_phash_index_match_stream(
     micro-batch of incoming documents becomes media payloads, is
     decoded+hashed in one Arrow pass, and matched against the
     write-once index (operators.multimodal.match_phash_index) inside
-    foreachBatch; matches land in an epoch-partitioned parquet sink
-    under dynamic partition overwrite (idempotent under checkpoint
-    replay). Drains with Trigger.AvailableNow and returns the
-    accumulated (new_id, base_id, hamming) matches as a batch DF —
-    empty-schema-safe when no micro-batch matched anything."""
-    spark = docs_stream.sparkSession
+    foreachBatch; the (new_id, base_id, hamming) matches go through
+    ``_run_epoch_sink``."""
+    from ..operators import multimodal as MM
 
-    def _match_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..operators import multimodal as MM
-
-        media = MM.attach_binary_payload(batch_df, "doc_id", "text")
-        matches = MM.match_phash_index(media, index_path, k=k).withColumn(
-            "_epoch", F.lit(int(epoch_id))
-        )
-        (
-            matches.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_path)
-        )
-
-    _drain_available_now(
-        docs_stream.writeStream.foreachBatch(_match_batch)
-        .option("checkpointLocation", checkpoint_dir),
-        spark,
-        timeout_s,
-        "phash-match",
+    return _run_epoch_sink(
+        docs_stream, out_path, checkpoint_dir, timeout_s, "phash-match",
+        lambda batch_df, epoch_id: MM.match_phash_index(
+            MM.attach_binary_payload(batch_df, "doc_id", "text"), index_path, k=k
+        ),
     )
-    try:
-        return spark.read.parquet(out_path).drop("_epoch")
-    except AnalysisException:
-        # zero matches in every micro-batch → no parquet files → no
-        # inferable schema; normal outcome, not an error
-        schema = T.StructType(
-            [
-                T.StructField("new_id", T.LongType()),
-                T.StructField("base_id", T.LongType()),
-                T.StructField("hamming", T.LongType()),
-            ]
-        )
-        return parallelize(spark, [], schema)
 
 
 def run_quality_score_stream(
@@ -773,8 +758,8 @@ def run_quality_score_stream(
     this is a PURE incremental streaming select + parquet append sink
     — no foreachBatch, no state store, exactly-once from the file
     sink's own commit log. Drains with Trigger.AvailableNow and
-    returns the accumulated (id, score, keep) rows as a batch DF.
-    Stream ≡ batch scoring is exact (deterministic per-row integer
+    returns the accumulated (id, score, keep) rows as a batch DF, read
+    under the projection's own schema. Stream ≡ batch scoring is exact (deterministic per-row integer
     arithmetic; asserted in tests)."""
     from ..operators import text as TX
 
@@ -792,18 +777,7 @@ def run_quality_score_stream(
         timeout_s,
         "quality-score",
     )
-    try:
-        return spark.read.parquet(out_path)
-    except AnalysisException:
-        id_type = docs_stream.schema[id_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField(id_col, id_type),
-                T.StructField("score", T.LongType()),
-                T.StructField("keep", T.BooleanType()),
-            ]
-        )
-        return parallelize(spark, [], schema)
+    return _read_sink(spark, out_path, scored.schema)
 
 
 def run_quality_score_stream_from_model(
@@ -848,9 +822,8 @@ def run_winnowing_index_match_stream(
     loop of a MOSS-style decontamination service: each micro-batch of
     incoming documents is fingerprinted with the index's own (k, w)
     and matched (operators.text.match_winnowing_index) inside
-    foreachBatch; matches land in an epoch-partitioned parquet sink
-    under dynamic partition overwrite (idempotent under checkpoint
-    replay). The stored index's max epoch is SNAPSHOT at stream start
+    foreachBatch; the (new_id, base_id, n_shared) matches go through
+    ``_run_epoch_sink``. The stored index's max epoch is SNAPSHOT at stream start
     and passed as ``before_epoch`` for every micro-batch, so a
     replayed batch — and every live batch — matches against exactly
     the index state the stream started from even if a concurrent
@@ -858,51 +831,23 @@ def run_winnowing_index_match_stream(
     micro-batch epoch_id numbering is unrelated to the index's epoch
     numbering — forwarding it would be wrong). While no newer epoch
     exists the snapshot filter is vacuous, so the serving call still
-    takes the df-side-table fast path (no full-index window).
-    Drains with Trigger.AvailableNow and returns the
-    accumulated (new_id, base_id, n_shared) matches as a batch DF —
-    empty-schema-safe when no micro-batch matched anything. Stream ==
-    batch matcher is asserted in tests (the matcher is stateless per
+    takes the df-side-table fast path (no full-index window). Stream
+    == batch matcher is asserted in tests (the matcher is stateless per
     batch against a write-once index, so equality is exact)."""
     from ..operators import text as TX
 
-    spark = docs_stream.sparkSession
     # index-state snapshot: everything strictly before this is visible
     idx = TX._open_winnowing(index_path)
     _index_epochs = idx.parts["postings"].keys() if idx is not None else []
     _snap = (max(_index_epochs) + 1) if _index_epochs else 0
 
-    def _match_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        matches = TX.match_winnowing_index(
+    return _run_epoch_sink(
+        docs_stream, out_path, checkpoint_dir, timeout_s, "winnowing-match",
+        lambda batch_df, epoch_id: TX.match_winnowing_index(
             batch_df, index_path, id_col, text_col,
             min_shared=min_shared, before_epoch=_snap,
-        ).withColumn("_epoch", F.lit(int(epoch_id)))
-        (
-            matches.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_path)
-        )
-
-    _drain_available_now(
-        docs_stream.writeStream.foreachBatch(_match_batch)
-        .option("checkpointLocation", checkpoint_dir),
-        spark,
-        timeout_s,
-        "winnowing-match",
+        ),
     )
-    try:
-        return spark.read.parquet(out_path).drop("_epoch")
-    except AnalysisException:
-        id_type = docs_stream.schema[id_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField("new_id", id_type),
-                T.StructField("base_id", id_type),
-                T.StructField("n_shared", T.LongType()),
-            ]
-        )
-        return parallelize(spark, [], schema)
 
 
 def run_line_dedup_stream(
@@ -920,9 +865,8 @@ def run_line_dedup_stream(
     CCNet curation loop run at crawl cadence: each micro-batch of
     documents is cleaned against the segment-frequency index built
     from every PRIOR batch (plus its own within-batch frequencies),
-    then its own segment counts land in the index as a new epoch.
-    Drains with Trigger.AvailableNow; returns the accumulated cleaned
-    documents as a batch DF.
+    then its own segment counts land in the index as a new epoch. The
+    cleaned documents go through ``_run_epoch_sink``.
 
     Prefix-causal semantics, stated honestly: a boilerplate segment is
     dropped from batch N only if past batches (or batch N itself)
@@ -934,62 +878,37 @@ def run_line_dedup_stream(
     periodic re-clean against the converged index recovers the batch
     answer; that re-clean is the ordinary nightly compaction job.
 
-    Exactly-once: the output sink is an epoch-partitioned dynamic
-    overwrite, a replayed index epoch replaces its own segment, and the
-    clean step passes before_epoch = its own epoch id, so a
+    Exactly-once: a replayed index epoch replaces its own segment, as
+    a replayed micro-batch replaces its sink partition, and the clean
+    step passes before_epoch = its own epoch id, so a
     checkpoint REPLAY of epoch N excludes the epoch-N counts its
     failed first attempt may already have landed — replay output is
     bit-identical, not just append-safe."""
     from ..operators import text as TX
 
-    spark = docs_stream.sparkSession
-
-    def _clean_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def _clean_batch(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         # the within-batch fallback is ONLY for the no-index-yet first
         # epoch, gated on an explicit manifest probe — a blanket
         # exception catch here would also swallow real defects (bad
         # columns, a corrupt manifest) and quietly emit different
         # output instead of failing the stream
         if SI.exists(index_path):
-            cleaned = TX.line_dedup_with_index(
+            return TX.line_dedup_with_index(
                 batch_df, index_path, id_col, text_col,
-                min_df=min_df, before_epoch=int(epoch_id),
+                min_df=min_df, before_epoch=epoch_id,
             )
-        else:
-            # no index yet (first epoch, nothing written): clean
-            # against within-batch frequencies only
-            cleaned = TX.line_dedup_rebuild(
-                batch_df, id_col, text_col, width=width, min_df=min_df
-            )
-        (
-            cleaned.withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_path)
-        )
-        TX.write_line_index(
-            batch_df, index_path, id_col, text_col,
-            width=width, epoch=int(epoch_id),
+        # no index yet (first epoch, nothing written): clean against
+        # within-batch frequencies only
+        return TX.line_dedup_rebuild(
+            batch_df, id_col, text_col, width=width, min_df=min_df
         )
 
-    _drain_available_now(
-        docs_stream.writeStream.foreachBatch(_clean_batch)
-        .option("checkpointLocation", checkpoint_dir),
-        spark,
-        timeout_s,
-        "line-dedup",
+    # the batch's counts land in the index only after its cleaned rows
+    # are in the sink
+    return _run_epoch_sink(
+        docs_stream, out_path, checkpoint_dir, timeout_s, "line-dedup",
+        _clean_batch,
+        after_write=lambda batch_df, epoch_id: TX.write_line_index(
+            batch_df, index_path, id_col, text_col, width=width, epoch=epoch_id,
+        ),
     )
-    try:
-        return spark.read.parquet(out_path).drop("_epoch")
-    except AnalysisException:
-        id_type = docs_stream.schema[id_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField(id_col, id_type),
-                T.StructField("n_segs", T.LongType()),
-                T.StructField("n_dropped", T.LongType()),
-                T.StructField("text_out", T.StringType()),
-            ]
-        )
-        return parallelize(spark, [], schema)

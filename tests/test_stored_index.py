@@ -356,6 +356,25 @@ def test_reads_run_no_metadata_job(spark, inputs, tmp_path, jobs_in_group):
     assert jobs == []
 
 
+
+def test_reads_past_listing_threshold_run_no_job(spark, inputs, tmp_path, jobs_in_group):
+    """40 single-row appends leave 41 live segments, more than Spark
+    lists on the driver in one scan; planning the stored query still
+    runs no Spark job, and the read sees every row once."""
+    path = str(tmp_path / "pq")
+    emb = inputs["emb"]
+    SIM.write_pq_codes(_lt(emb, "vec_id", 40), path, inputs["cents"])
+    for i in range(40, 80):
+        SIM.append_pq_codes(emb.filter(F.col("vec_id") == i), path, inputs["cents"])
+    assert len(SI.open_index(path, "pq").parts["codes"].segments) == 41
+    _, jobs = jobs_in_group(
+        "si-read-41",
+        lambda: SIM.pq_adc_topk_stored(spark, path, [0.0] * 64, inputs["cents"]),
+    )
+    assert jobs == []
+    ids = [r[0] for r in SI.read_part(spark, path, "codes").select("vec_id").collect()]
+    assert sorted(ids) == sorted(r[0] for r in emb.select("vec_id").collect())
+
 # -------------------------------------------- pre-manifest layouts
 # one catalog entry per index family
 FAMILY_ENTRIES = [

@@ -466,35 +466,6 @@ def test_minhash_index_match_stream_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and want
 
 
-def test_minhash_index_match_stream_zero_matches_is_empty_df(
-    spark, sf_dir, tmp_path
-):
-    # a stream whose micro-batches all produce ZERO matches writes no
-    # parquet files; the read-back must return an empty DF with the
-    # (new_id, base_id, jaccard) schema, not raise unable-to-infer
-    # (r5 advice fix)
-    from pyspark.sql import functions as F
-
-    from lrmr_spark import streaming as ST
-    from lrmr_spark.operators import dedup as DD
-    from lrmr_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    index = str(tmp_path / "idx0")
-    DD.write_minhash_index(
-        docs.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", index,
-        num_hashes=16, bands=4,
-    )
-    out = ST.run_minhash_index_match_stream(
-        ST.stream_documents(spark, sf_dir).filter(F.col("doc_id") < 0),
-        index,
-        str(tmp_path / "out0"),
-        str(tmp_path / "ck0"),
-    )
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["new_id", "base_id", "jaccard"]
-
-
 def test_pq_index_append_stream_equals_batch_rebuild(spark, sf_dir, tmp_path):
     # the foreachBatch append stream must leave the codes table exactly
     # equal to a one-shot build over the full corpus (codes are
@@ -928,3 +899,144 @@ def test_quality_score_stream_from_stored_model(spark, sf_dir, tmp_path):
             str(tmp_path / "qmout2"),
             str(tmp_path / "qmck2"),
         )
+
+
+# ------------------- the five serving runners share one sink read-back
+def _minhash_runner(spark, sf_dir, tmp_path):
+    from lrmr_spark.operators import dedup as DD
+
+    docs = load(spark, sf_dir, "documents")
+    index = str(tmp_path / "idx")
+    DD.write_minhash_index(
+        docs.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", index,
+        num_hashes=16, bands=4,
+    )
+    return (
+        lambda stream, out, ck: ST.run_minhash_index_match_stream(stream, index, out, ck),
+        F.col("doc_id") % 5 == 0,
+    )
+
+
+def _phash_runner(spark, sf_dir, tmp_path):
+    from lrmr_spark.operators import multimodal as MM
+
+    docs = load(spark, sf_dir, "documents")
+    index = str(tmp_path / "idx")
+    MM.write_phash_index(
+        MM.attach_binary_payload(
+            docs.filter(F.col("doc_id") % 5 != 0), "doc_id", "text"
+        ),
+        index,
+    )
+    return (
+        lambda stream, out, ck: ST.run_phash_index_match_stream(stream, index, out, ck),
+        F.col("doc_id") % 5 == 0,
+    )
+
+
+def _winnowing_runner(spark, sf_dir, tmp_path):
+    from lrmr_spark.operators import text as TX
+
+    docs = load(spark, sf_dir, "documents")
+    index = str(tmp_path / "idx")
+    TX.write_winnowing_index(
+        docs.filter(F.col("doc_id") % 2 == 0), index, "doc_id", "text"
+    )
+    return (
+        lambda stream, out, ck: ST.run_winnowing_index_match_stream(
+            stream, index, out, ck, min_shared=2
+        ),
+        F.col("doc_id") % 2 == 1,
+    )
+
+
+def _line_dedup_runner(spark, sf_dir, tmp_path):
+    # the index accumulates across runs, so each run gets its own
+    return (
+        lambda stream, out, ck: ST.run_line_dedup_stream(
+            stream, out + "_idx", out, ck, width=10, min_df=2
+        ),
+        F.lit(True),
+    )
+
+
+def _quality_runner(spark, sf_dir, tmp_path):
+    from lrmr_spark.catalog.corpus_ops import _QC_TEACHER
+    from lrmr_spark.operators import text as TX
+
+    docs = load(spark, sf_dir, "documents")
+    w = TX.train_hashed_ngram_weights(docs, "text", _QC_TEACHER, iterations=2)
+    return (
+        lambda stream, out, ck: ST.run_quality_score_stream(stream, w, out, ck),
+        F.lit(True),
+    )
+
+
+_SERVING_RUNNERS = {
+    "minhash": _minhash_runner,
+    "phash": _phash_runner,
+    "winnowing": _winnowing_runner,
+    "line_dedup": _line_dedup_runner,
+    "quality_score": _quality_runner,
+}
+
+
+def _plant_conflicting_sink(spark, tmp_path, out, names, file_sink):
+    """Leave a parquet file in ``out`` whose columns carry the runner's
+    names but string types, committed the way the runner's own sink
+    commits: a loose file for an epoch sink, a logged batch for a file
+    sink (whose read honours its log)."""
+    stale = spark.createDataFrame(
+        [tuple("x" for _ in names)], ", ".join(f"{n} string" for n in names)
+    )
+    if not file_sink:
+        stale.coalesce(1).write.parquet(out)
+        return
+    src = str(tmp_path / "stale_src")
+    stale.coalesce(1).write.parquet(src)
+    q = (
+        spark.readStream.schema(stale.schema).parquet(src)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "stale_ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    q.stop()
+
+
+@pytest.mark.parametrize("runner", sorted(_SERVING_RUNNERS))
+def test_serving_runner_sink_read_back(spark, sf_dir, tmp_path, jobs_in_group, runner):
+    # every serving runner reads its sink back under the schema its
+    # operator emits: a run with no result rows, and a stream that runs
+    # no micro-batch at all, give an empty frame of exactly that
+    # schema; the read-back plans with no Spark job; a sink holding a
+    # file of another schema fails loudly instead of reading as empty
+    run, matching = _SERVING_RUNNERS[runner](spark, sf_dir, tmp_path)
+    docs = ST.stream_documents(spark, sf_dir)
+
+    def drain(stream, tag):
+        return run(stream, str(tmp_path / f"out_{tag}"), str(tmp_path / f"ck_{tag}"))
+
+    got, jobs = jobs_in_group(f"read-back-{runner}", lambda: drain(docs.filter(matching), "m"))
+    assert jobs == []
+    assert got.count() > 0
+    want = [(f.name, f.dataType) for f in got.schema]
+
+    none = drain(docs.filter(F.col("doc_id") < 0), "z")
+    assert none.count() == 0
+    assert [(f.name, f.dataType) for f in none.schema] == want
+
+    empty_src = tmp_path / "empty_src"
+    empty_src.mkdir()
+    idle = drain(ST.stream_documents(spark, str(empty_src)), "e")
+    assert idle.count() == 0
+    assert [(f.name, f.dataType) for f in idle.schema] == want
+
+    _plant_conflicting_sink(
+        spark, tmp_path, str(tmp_path / "out_c"), [n for n, _ in want],
+        file_sink=runner == "quality_score",
+    )
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        drain(docs.filter(F.col("doc_id") < 0), "c").collect()

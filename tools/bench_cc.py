@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from lrmr_spark.operators.dedup import connected_components
 from lrmr_spark.session import get_spark
 from lrmr_spark.tables import load
+from tools.ab import fingerprint
 
 REPS = 2
 
@@ -53,20 +54,6 @@ def _pairs(spark, sf_dir):
     o = F.col("l_orderkey").cast("long") * 2
     p = F.col("l_partkey").cast("long") * 2 + 1
     return li.select(o.alias("id_a"), p.alias("id_b")).distinct()
-
-
-def _fingerprint(df):
-    h = F.hash(*[F.col(c) for c in df.columns]).cast("long")
-    row = (
-        df.select(h.alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("h").alias("s"),
-            F.expr("bit_xor(h)").alias("x"),
-        )
-        .collect()[0]
-    )
-    return (int(row["n"]), int(row["s"]), int(row["x"]))
 
 
 ALGOS = {
@@ -88,7 +75,7 @@ def main() -> None:
         tag = os.path.basename(os.path.normpath(sf_dir))
         golden = None
         for name, fn in ALGOS.items():
-            fp = _fingerprint(fn(spark, sf_dir))
+            fp = fingerprint(fn(spark, sf_dir))
             print(f"{name} @ {tag}: fp={fp}", file=sys.stderr, flush=True)
             if golden is None:
                 golden = fp

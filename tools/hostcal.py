@@ -3,11 +3,11 @@
 Every artifact that reports timings should self-describe its host
 (VERDICT r8 task 8): round hosts differ up to 10× on fsync'd disk
 throughput, and shuffle-heavy numbers are incomparable across hosts
-without this block. Mirrors bench.py's calibration: loadavg snapshot
-FIRST (the calibration work itself would inflate it), then a pinned
-20 M-row shuffle (the local-disk shuffle machinery heavy queries
-bottleneck on) and a 256 MiB fsync'd sequential write against
-spark.local.dir (the spill/shuffle-write device), via a unique
+without this block. bench.py and ``tools/ab.py entry`` both call
+it: loadavg snapshot FIRST (the calibration work itself would inflate
+it), then a pinned 20 M-row shuffle (the local-disk shuffle machinery
+heavy queries bottleneck on) and a 256 MiB fsync'd sequential write
+against spark.local.dir (the spill/shuffle-write device), via a unique
 tempfile in try/finally.
 
 Tool scripts run as ``python tools/exp_x.py`` have this directory on
