@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SF_DIR"]
+__all__ = ["get_spark", "session_conf", "DEFAULT_SF_DIR"]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,6 +31,66 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def _default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     return f"local[{cpus}]" if cpus else "local[*]"
+
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_WORKER_DIR = os.path.join(_PACKAGE_DIR, "_worker")
+_REPO_WAREHOUSE = os.path.join(os.path.dirname(_PACKAGE_DIR), ".spark-warehouse")
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def session_conf(
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` builds its session from, ``spark.master``
+    included; pure, so it can be checked without a cluster.
+
+    A local master runs Python tasks through the engine's worker entry
+    (``_worker/pyspark_graft_worker.py``, which skips the per-task
+    re-read of Spark's own zip archives): the entry's directory is
+    appended to any ``spark.executorEnv.PYTHONPATH`` the caller passes.
+    Any other master keeps Spark's default worker, because the entry's
+    path is only known to exist on this host.
+    """
+    if shuffle_partitions is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
+        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    master = master or _default_master()
+    conf = {
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # custom Python DataSources (sources.pyds feeder) prune via
+        # pushFilters; disabled by default in Spark 4.1
+        "spark.sql.python.filterPushdown.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.ui.enabled": "false",
+        # testdata events.ts is parquet TIMESTAMP(NANOS) which Spark's
+        # vectorized reader rejects; read as long, converted in tables.load
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        # bucketed tables (write_bucketed / bucketed_join_orders) live
+        # here; pinned so every process that shares the repo sees the
+        # same layout regardless of cwd
+        "spark.sql.warehouse.dir": os.environ.get(
+            "SPARK_GRAFT_WAREHOUSE", _REPO_WAREHOUSE
+        ),
+    }
+    conf.update(extra_conf or {})
+    if conf["spark.master"] == "local" or conf["spark.master"].startswith("local["):
+        conf.setdefault("spark.python.worker.module", "pyspark_graft_worker")
+        conf[_EXECUTOR_PYTHONPATH] = os.pathsep.join(
+            p for p in (conf.get(_EXECUTOR_PYTHONPATH), _WORKER_DIR) if p
+        )
+    return conf
 
 
 def get_spark(
@@ -43,41 +103,11 @@ def get_spark(
 
     Defaults favor correctness-critical settings (UTC session timezone so
     timestamps compare bit-identically with the DuckDB oracle) and
-    scale-critical ones (AQE, Arrow, skew-join handling).
+    scale-critical ones (AQE, Arrow, skew-join handling); see
+    ``session_conf``.
     """
-    if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or _default_master())
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # custom Python DataSources (sources.pyds feeder) prune via
-        # pushFilters; disabled by default in Spark 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        # testdata events.ts is parquet TIMESTAMP(NANOS) which Spark's
-        # vectorized reader rejects; read as long, converted in tables.load
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # bucketed tables (write_bucketed / bucketed_join_orders) live
-        # here; pinned so every process that shares the repo sees the
-        # same layout regardless of cwd
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/root/repo/.spark-warehouse"),
-        )
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -572,6 +572,20 @@ def _read_sink(spark: SparkSession, out_path: str, schema: T.StructType) -> Data
     return spark.read.schema(schema).parquet(out_path)
 
 
+def _last_logged_batch(spark: SparkSession, log_dir: str) -> int:
+    """The highest batch id in a streaming metadata log (a checkpoint's
+    ``offsets``, a file sink's ``_spark_metadata``); -1 if it has none."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(log_dir)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return -1
+    names = (st.getPath().getName() for st in fs.listStatus(jpath))
+    return max(
+        (int(n.removesuffix(".compact")) for n in names if n.removesuffix(".compact").isdigit()),
+        default=-1,
+    )
+
+
 def _run_epoch_sink(
     stream: DataFrame,
     out_path: str,
@@ -760,7 +774,9 @@ def run_quality_score_stream(
     sink's own commit log. Drains with Trigger.AvailableNow and
     returns the accumulated (id, score, keep) rows as a batch DF, read
     under the projection's own schema. Stream ≡ batch scoring is exact (deterministic per-row integer
-    arithmetic; asserted in tests)."""
+    arithmetic; asserted in tests). An ``out_path`` whose sink log holds
+    batch ids that ``checkpoint_dir`` never planned (another query's
+    output) raises ``ValueError``."""
     from ..operators import text as TX
 
     spark = docs_stream.sparkSession
@@ -768,6 +784,16 @@ def run_quality_score_stream(
         F.col(id_col),
         TX.hashed_ngram_score(text_col, weights).alias("score"),
     ).withColumn("keep", F.col("score") > 0)
+    # the file sink skips every batch id its log already holds, so a log
+    # this checkpoint never planned would hide this run's rows
+    if _last_logged_batch(spark, os.path.join(out_path, "_spark_metadata")) > (
+        _last_logged_batch(spark, os.path.join(checkpoint_dir, "offsets"))
+    ):
+        raise ValueError(
+            f"out_path {out_path!r} holds the sink log of another streaming query "
+            f"(batches past those planned in checkpoint {checkpoint_dir!r}); "
+            "the file sink would skip them and return that query's rows"
+        )
     _drain_available_now(
         scored.writeStream.format("parquet")
         .option("path", out_path)

@@ -531,6 +531,23 @@ def test_rdd_scan_flag_tells_python_rdds_from_checkpoints(spark):
     assert python_rdd_scans(physical_plan(ckpt)) == 0
 
 
+def test_python_node_count_tells_row_udfs_from_arrow_nodes(spark):
+    from tools.audit_plans import PYTHON_NODES, node_count
+
+    df = spark.range(8).withColumn("k", F.col("id") % 2)
+    row_udf = df.select(F.udf(lambda v: v + 1, "long")("id"))
+    arrow_udf = df.select(F.pandas_udf(lambda s: s + 1, "long")("id"))
+    grouped = df.groupBy("k").applyInPandas(lambda p: p, df.schema)
+    mapped = df.mapInPandas(lambda it: it, df.schema)
+    for frame, py, batch_eval in (
+        (row_udf, 1, 1), (arrow_udf, 1, 0), (grouped, 1, 0), (mapped, 1, 0), (df, 0, 0),
+    ):
+        plan = physical_plan(frame)
+        assert node_count(plan, *PYTHON_NODES) == py
+        assert node_count(plan, "BatchEvalPython") == batch_eval
+    assert node_count(physical_plan(grouped), "Exchange") == 1
+
+
 def test_warm_job_counts_pinned(spark, jobs_in_group):
     # a warm call reuses each table's inferred schema, so only the
     # query's own jobs run: flagship's scan+shuffle stages, and the

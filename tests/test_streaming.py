@@ -3,6 +3,8 @@ through a memory sink; streaming results cross-checked against the
 equivalent batch computation."""
 
 import datetime as dt
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -961,11 +963,7 @@ def _line_dedup_runner(spark, sf_dir, tmp_path):
 
 
 def _quality_runner(spark, sf_dir, tmp_path):
-    from lrmr_spark.catalog.corpus_ops import _QC_TEACHER
-    from lrmr_spark.operators import text as TX
-
-    docs = load(spark, sf_dir, "documents")
-    w = TX.train_hashed_ngram_weights(docs, "text", _QC_TEACHER, iterations=2)
+    w = _quality_weights(spark, sf_dir)
     return (
         lambda stream, out, ck: ST.run_quality_score_stream(stream, w, out, ck),
         F.lit(True),
@@ -1013,6 +1011,8 @@ def test_serving_runner_sink_read_back(spark, sf_dir, tmp_path, jobs_in_group, r
     # no micro-batch at all, give an empty frame of exactly that
     # schema; the read-back plans with no Spark job; a sink holding a
     # file of another schema fails loudly instead of reading as empty
+    # (for the file sink, already at the start: the file is logged by
+    # another query)
     run, matching = _SERVING_RUNNERS[runner](spark, sf_dir, tmp_path)
     docs = ST.stream_documents(spark, sf_dir)
 
@@ -1034,9 +1034,71 @@ def test_serving_runner_sink_read_back(spark, sf_dir, tmp_path, jobs_in_group, r
     assert idle.count() == 0
     assert [(f.name, f.dataType) for f in idle.schema] == want
 
+    out_c = str(tmp_path / "out_c")
+    file_sink = runner == "quality_score"
     _plant_conflicting_sink(
-        spark, tmp_path, str(tmp_path / "out_c"), [n for n, _ in want],
-        file_sink=runner == "quality_score",
+        spark, tmp_path, out_c, [n for n, _ in want], file_sink=file_sink
     )
-    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
-        drain(docs.filter(F.col("doc_id") < 0), "c").collect()
+    if file_sink:
+        # another query's sink log is refused before the stream starts
+        with pytest.raises(ValueError, match=re.escape(out_c)):
+            drain(docs.filter(F.col("doc_id") < 0), "c")
+    else:
+        with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+            drain(docs.filter(F.col("doc_id") < 0), "c").collect()
+
+
+def _documents_source(spark, sf_dir, src, parity):
+    """A file-source stream over ``src``, after writing the documents
+    whose ``doc_id`` has the given parity into it as one parquet file
+    (a second call adds a file to the same source)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    src.mkdir(exist_ok=True)
+    keep = pc.equal(pc.bit_wise_and(table["doc_id"], 1), parity)
+    pq.write_table(table.filter(keep), str(src / f"part-{parity}.parquet"))
+    schema = ST.stream_documents(spark, sf_dir).schema
+    return spark.readStream.schema(schema).parquet(str(src))
+
+
+def _quality_weights(spark, sf_dir):
+    from lrmr_spark.catalog.corpus_ops import _QC_TEACHER
+    from lrmr_spark.operators import text as TX
+
+    docs = load(spark, sf_dir, "documents")
+    return TX.train_hashed_ngram_weights(docs, "text", _QC_TEACHER, iterations=2)
+
+
+def test_quality_score_stream_refuses_another_querys_sink_log(spark, sf_dir, tmp_path):
+    # the file sink skips every batch id already in out_path's log, so a
+    # fresh checkpoint over another query's output of the same schema
+    # would return that query's rows as its own
+    w = _quality_weights(spark, sf_dir)
+    out = str(tmp_path / "out")
+    first = ST.run_quality_score_stream(
+        ST.stream_documents(spark, sf_dir), w, out, str(tmp_path / "ck_a")
+    )
+    assert first.count() > 0
+    with pytest.raises(ValueError, match=re.escape(out)):
+        ST.run_quality_score_stream(
+            ST.stream_documents(spark, sf_dir), w, out, str(tmp_path / "ck_b")
+        )
+
+
+def test_quality_score_stream_resume_returns_every_row_once(spark, sf_dir, tmp_path):
+    w = _quality_weights(spark, sf_dir)
+    src, out, ck = tmp_path / "src", str(tmp_path / "out"), str(tmp_path / "ck")
+    first = ST.run_quality_score_stream(
+        _documents_source(spark, sf_dir, src, 0), w, out, ck
+    )
+    n_first = first.count()
+    # more input lands, and the same checkpoint resumes into the same sink
+    resumed = ST.run_quality_score_stream(
+        _documents_source(spark, sf_dir, src, 1), w, out, ck
+    )
+    ids = [r["doc_id"] for r in resumed.select("doc_id").collect()]
+    want = [r["doc_id"] for r in load(spark, sf_dir, "documents").select("doc_id").collect()]
+    assert 0 < n_first < len(ids)
+    assert sorted(ids) == sorted(want)

@@ -15,6 +15,12 @@ markers. Flags the pathologies the measured pitfalls catalogue:
   job and a Python worker pass per action instead of landing as an
   Arrow local relation (sources.parallelize). Checkpointed frames also
   plan as Scan ExistingRDD but are JVM RDDs and do not trip it.
+- batch_eval_python: a BatchEvalPython node — a row-at-a-time Python
+  UDF, which the engine does not use (pipeline.py keeps every Python
+  operator on Arrow batches).
+
+Every entry also records ``python_nodes``, the count of plan nodes
+whose tasks run a Python worker (PYTHON_NODES).
 
 Usage: python tools/audit_plans.py [SF_DIR] [OUT.json]
 Defaults: /root/testdata/sf0.001 (plan shape is SF-independent; the
@@ -63,6 +69,25 @@ WAIVERS = {
 }
 
 
+# physical nodes whose tasks hand rows to a Python worker
+PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapGroupsInPandasWithState",
+)
+
+
+def node_count(plan: str, *names: str) -> int:
+    """Detail-section headers of the named nodes in a formatted plan
+    (each node prints twice: tree line + "(n) Name" detail)."""
+    alt = "|".join(names)
+    return len(re.findall(rf"^\(\d+\) (?:{alt})\b", plan, re.MULTILINE))
+
+
 def python_rdd_scans(plan: str) -> int:
     """Scan ExistingRDD nodes whose RDD came from a Python RDD, counted
     from the formatted plan's per-node Arguments lines."""
@@ -81,10 +106,8 @@ def main() -> None:
         except Exception as e:  # streaming entries can't explain offline
             rows[name] = {"error": str(e).splitlines()[0][:120]}
             continue
-        # count detail-section node headers only — formatted explain
-        # prints every node twice (tree line + "(n) Scan parquet" detail)
-        n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan, re.MULTILINE))
-        n_exch = len(re.findall(r"^\(\d+\) Exchange\b", plan, re.MULTILINE))
+        n_scan = node_count(plan, "Scan parquet")
+        n_exch = node_count(plan, "Exchange")
         top_k = "TakeOrderedAndProject" in plan
         global_sort = bool(
             re.search(r"Sort ", plan)
@@ -93,7 +116,14 @@ def main() -> None:
             and not top_k
         )
         n_rdd = python_rdd_scans(plan)
-        info = {"scans": n_scan, "exchanges": n_exch, "python_rdd_scans": n_rdd}
+        n_py = node_count(plan, *PYTHON_NODES)
+        n_batch_eval = node_count(plan, "BatchEvalPython")
+        info = {
+            "scans": n_scan,
+            "exchanges": n_exch,
+            "python_rdd_scans": n_rdd,
+            "python_nodes": n_py,
+        }
         issues = []
         if n_scan > MAX_SCANS:
             issues.append(f"scan_blowup:{n_scan}")
@@ -103,13 +133,15 @@ def main() -> None:
             issues.append("global_sort")
         if n_rdd:
             issues.append(f"rdd_scan:{n_rdd}")
+        if n_batch_eval:
+            issues.append(f"batch_eval_python:{n_batch_eval}")
         if issues and name in WAIVERS:
             info["waived"] = WAIVERS[name]
         elif issues:
             info["issues"] = issues
             flagged.append(name)
         rows[name] = info
-        print(f"{name}: scans={n_scan} exch={n_exch} {issues or ''}", flush=True)
+        print(f"{name}: scans={n_scan} exch={n_exch} py={n_py} {issues or ''}", flush=True)
     out = {
         "sf_dir": sf_dir,
         "thresholds": {"max_scans": MAX_SCANS, "max_exchanges": MAX_EXCH},
