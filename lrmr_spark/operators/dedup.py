@@ -303,21 +303,29 @@ def _band_keys(num_hashes: int, bands: int, fast: bool):
     )
 
 
-def _sig_prefilter_cutoff(num_hashes: int, bands: int, threshold: float) -> int:
-    """Minimum number of equal signature minima a candidate pair must
-    show before the exact-Jaccard verify bothers re-attaching item
-    arrays: half the expected agreement at the threshold
-    (ceil(n·t/2)). P(equal minima) = J per position, so a true pair at
-    J = 0.9 with n = 16 fails est ≥ 8 with p ≈ 1.4e-6 — four orders of
-    magnitude below the 4-band LSH's own ~1% miss rate at the same J,
-    i.e. the prefilter adds no meaningful recall loss to a path that
-    is already banded. Returns 0 (disabled) when a single shared band
-    implies the cutoff anyway (rows_per_band ≥ cutoff — true for the
-    oracle-checked 2-band configs, which therefore stay bit-exact)."""
-    import math
-
-    cutoff = math.ceil(num_hashes * threshold / 2)
-    return cutoff if cutoff > num_hashes // bands else 0
+def _jaccard_verify(
+    cand: DataFrame,
+    reps_a: DataFrame,
+    reps_b: DataFrame,
+    id_a: str,
+    id_b: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of MinHash candidates: re-attach each side's
+    sorted item array by id (the band join carried ids only), score
+    |A ∩ B| / |A ∪ B| rounded to 4 places, keep scores ≥ threshold.
+    Output: (id_a, id_b, jaccard) under the caller's two id names."""
+    ia = reps_a.select(F.col("_id").alias(id_a), F.col("items").alias("items_a"))
+    ib = reps_b.select(F.col("_id").alias(id_b), F.col("items").alias("items_b"))
+    inter = F.size(F.array_intersect("items_a", "items_b"))
+    union = F.size(F.array_union("items_a", "items_b"))
+    return (
+        cand.join(ia, id_a)
+        .join(ib, id_b)
+        .withColumn("jaccard", F.round(inter / union, 4))
+        .filter(F.col("jaccard") >= threshold)
+        .select(id_a, id_b, "jaccard")
+    )
 
 
 def minhash_lsh_pairs(
@@ -330,8 +338,6 @@ def minhash_lsh_pairs(
     unit: str = "multiset",
     shingle_k: int = 3,
     fast: bool = False,
-    eager: bool = True,
-    sig_prefilter: bool = False,
     shared_items: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup *representative* pairs via MinHash+LSH with
@@ -358,21 +364,13 @@ def minhash_lsh_pairs(
       and truncations score high; reorderings don't).
 
     ``fast=True`` swaps the oracle-portable md5 item hash for JVM
-    xxhash64 (no hex strings — the production path; measured large cut
-    on the signature stage). ``eager=True`` (default) materializes the
-    pair list via localCheckpoint and releases the persisted
-    representative table immediately — repeated calls in a long-lived
-    session no longer accumulate cached partitions. Pass eager=False
-    to keep the plan fully lazy (caller owns the persist lifetime).
-
-    ``sig_prefilter=True`` (fast path only) scores every band
-    collision by signature agreement (count of equal minima ≥
-    ceil(n·t/2)) before the distinct + items re-attach, so exact
-    verification runs only on near-certain pairs; emitted pairs are
-    property-tested unchanged. Default False: measured a wash at
-    sf0.1 and ~10% slower at sf1 on the test corpus (collisions there
-    are mostly true dups — nothing to prune); enable it for corpora
-    where most band collisions fail verification.
+    xxhash64 (no hex strings — the production path).
+    The pair list is materialized via localCheckpoint and the persisted
+    representative table released before returning, so repeated calls
+    in a long-lived session do not accumulate cached partitions.
+    Candidates go straight from the band join to the exact verify: a
+    signature-agreement prefilter measured a wash at sf0.1 and ~10%
+    slower at sf1 (band collisions here are mostly true near-dups).
 
     ``shared_items``: a caller-persisted ``_minhash_items`` frame for
     the same (df, id_col, text_col, unit, shingle_k) — lets a caller
@@ -390,67 +388,20 @@ def minhash_lsh_pairs(
         df, id_col, text_col, num_hashes, unit, shingle_k, fast,
         shared_items=shared_items,
     ).persist()
-    cutoff = (
-        _sig_prefilter_cutoff(num_hashes, bands, threshold)
-        if fast and sig_prefilter
-        else 0
+    banded = reps.select(
+        "_id", F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
     )
-    if cutoff:
-        # signatures ride the band explode (num_hashes longs per band
-        # row) so the collision row itself scores the pair — no extra
-        # join. est ≥ cutoff prunes candidates a shared band admits
-        # but the exact verify would reject (measured at sf0.1: 21k
-        # candidates → 5k), BEFORE the distinct and before the wide
-        # items arrays are re-attached. Off by default: on the test
-        # corpus band collisions are mostly TRUE near-dups (alternating
-        # A/B: wash at sf0.1, ~10% slower at sf1 — the widened band
-        # shuffle outweighs the pruned verify work). Turn it on for
-        # low-precision corpora (real web crawls, where chance band
-        # collisions dominate and verify input is mostly garbage).
-        sig_cols = [f"_h{s}" for s in range(num_hashes)]
-        banded = reps.select(
-            "_id", *sig_cols, F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
-        )
-        est = sum(
-            F.when(F.col(f"l._h{s}").eqNullSafe(F.col(f"r._h{s}")), 1).otherwise(0)
-            for s in range(num_hashes)
-        )
-        cand = (
-            banded.alias("l")
-            .join(banded.alias("r"), on="_band")
-            .filter(F.col("l._id") < F.col("r._id"))
-            .filter(est >= cutoff)
-            .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-            .distinct()
-        )
-    else:
-        banded = reps.select(
-            "_id", F.explode(_band_keys(num_hashes, bands, fast)).alias("_band")
-        )
-        cand = (
-            banded.alias("l")
-            .join(banded.alias("r"), on="_band")
-            .filter(F.col("l._id") < F.col("r._id"))
-            .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-            .distinct()
-        )
-    ia = reps.select(F.col("_id").alias("id_a"), F.col("items").alias("items_a"))
-    ib = reps.select(F.col("_id").alias("id_b"), F.col("items").alias("items_b"))
-    inter = F.size(F.array_intersect("items_a", "items_b"))
-    union = F.size(F.array_union("items_a", "items_b"))
-    out = (
-        cand.join(ia, "id_a")
-        .join(ib, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    cand = (
+        banded.alias("l")
+        .join(banded.alias("r"), on="_band")
+        .filter(F.col("l._id") < F.col("r._id"))
+        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+        .distinct()
     )
-    if eager:
-        # materialize the (small) pair list, then release the cached
-        # representative table — otherwise repeated calls in a
-        # long-lived session accumulate cached partitions forever
-        out = out.localCheckpoint(eager=True)
-        reps.unpersist()
+    out = _jaccard_verify(
+        cand, reps, reps, "id_a", "id_b", threshold
+    ).localCheckpoint(eager=True)
+    reps.unpersist()
     return out
 
 
@@ -465,8 +416,6 @@ def minhash_lsh_match(
     unit: str = "multiset",
     shingle_k: int = 3,
     fast: bool = False,
-    eager: bool = True,
-    sig_prefilter: bool = False,
 ) -> DataFrame:
     """INCREMENTAL near-dedup: match a new batch against an existing
     corpus, never the corpus against itself — the daily-crawl shape
@@ -480,7 +429,9 @@ def minhash_lsh_match(
     per batch.
 
     Output: (new_id, base_id, jaccard) for every new representative
-    whose similarity to a base representative ≥ threshold."""
+    whose similarity to a base representative ≥ threshold, materialized
+    via localCheckpoint with both persisted rep tables released (the
+    minhash_lsh_pairs discipline)."""
     new_reps = _minhash_reps(
         new_df, id_col, text_col, num_hashes, unit, shingle_k, fast
     ).persist()
@@ -488,52 +439,19 @@ def minhash_lsh_match(
         base_df, id_col, text_col, num_hashes, unit, shingle_k, fast
     ).persist()
     keys = _band_keys(num_hashes, bands, fast)
-    cutoff = (
-        _sig_prefilter_cutoff(num_hashes, bands, threshold)
-        if fast and sig_prefilter
-        else 0
+    new_banded = new_reps.select("_id", F.explode(keys).alias("_band"))
+    base_banded = base_reps.select("_id", F.explode(keys).alias("_band"))
+    cand = (
+        new_banded.alias("l")
+        .join(base_banded.alias("r"), on="_band")
+        .select(F.col("l._id").alias("new_id"), F.col("r._id").alias("base_id"))
+        .distinct()
     )
-    if cutoff:
-        # same signature-agreement prune as minhash_lsh_pairs: score
-        # the collision row itself, before distinct + items re-attach
-        sig_cols = [f"_h{s}" for s in range(num_hashes)]
-        new_banded = new_reps.select("_id", *sig_cols, F.explode(keys).alias("_band"))
-        base_banded = base_reps.select("_id", *sig_cols, F.explode(keys).alias("_band"))
-        est = sum(
-            F.when(F.col(f"l._h{s}").eqNullSafe(F.col(f"r._h{s}")), 1).otherwise(0)
-            for s in range(num_hashes)
-        )
-        cand = (
-            new_banded.alias("l")
-            .join(base_banded.alias("r"), on="_band")
-            .filter(est >= cutoff)
-            .select(F.col("l._id").alias("new_id"), F.col("r._id").alias("base_id"))
-            .distinct()
-        )
-    else:
-        new_banded = new_reps.select("_id", F.explode(keys).alias("_band"))
-        base_banded = base_reps.select("_id", F.explode(keys).alias("_band"))
-        cand = (
-            new_banded.alias("l")
-            .join(base_banded.alias("r"), on="_band")
-            .select(F.col("l._id").alias("new_id"), F.col("r._id").alias("base_id"))
-            .distinct()
-        )
-    ia = new_reps.select(F.col("_id").alias("new_id"), F.col("items").alias("items_a"))
-    ib = base_reps.select(F.col("_id").alias("base_id"), F.col("items").alias("items_b"))
-    inter = F.size(F.array_intersect("items_a", "items_b"))
-    union = F.size(F.array_union("items_a", "items_b"))
-    out = (
-        cand.join(ia, "new_id")
-        .join(ib, "base_id")
-        .withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "base_id", "jaccard")
-    )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        new_reps.unpersist()
-        base_reps.unpersist()
+    out = _jaccard_verify(
+        cand, new_reps, base_reps, "new_id", "base_id", threshold
+    ).localCheckpoint(eager=True)
+    new_reps.unpersist()
+    base_reps.unpersist()
     return out
 
 
@@ -662,7 +580,6 @@ def match_minhash_index(
     id_col: str,
     text_col: str,
     threshold: float = 0.9,
-    sig_prefilter: bool = False,
     **overrides,
 ) -> DataFrame:
     """Match a new batch against a stored MinHash index
@@ -709,46 +626,9 @@ def match_minhash_index(
         .select(F.col("l._id").alias("new_id"), F.col("r._id").alias("base_id"))
         .distinct()
     )
-    cutoff = (
-        _sig_prefilter_cutoff(num_hashes, bands, threshold)
-        if fast and sig_prefilter
-        else 0
-    )
-    if cutoff:
-        # the stored bands posting list is (_id, _band) only, but reps
-        # (both stored and new) carry the _h minima — prefilter via two
-        # NARROW signature joins (num_hashes longs vs full item arrays)
-        # so the wide items re-attach runs only on near-certain pairs
-        sa = new_reps.select(
-            F.col("_id").alias("new_id"),
-            *[F.col(f"_h{s}").alias(f"_a{s}") for s in range(num_hashes)],
-        )
-        sb = base_reps.select(
-            F.col("_id").alias("base_id"),
-            *[F.col(f"_h{s}").alias(f"_b{s}") for s in range(num_hashes)],
-        )
-        est = sum(
-            F.when(F.col(f"_a{s}").eqNullSafe(F.col(f"_b{s}")), 1).otherwise(0)
-            for s in range(num_hashes)
-        )
-        cand = (
-            cand.join(sa, "new_id")
-            .join(sb, "base_id")
-            .filter(est >= cutoff)
-            .select("new_id", "base_id")
-        )
-    ia = new_reps.select(F.col("_id").alias("new_id"), F.col("items").alias("items_a"))
-    ib = base_reps.select(F.col("_id").alias("base_id"), F.col("items").alias("items_b"))
-    inter = F.size(F.array_intersect("items_a", "items_b"))
-    union = F.size(F.array_union("items_a", "items_b"))
-    out = (
-        cand.join(ia, "new_id")
-        .join(ib, "base_id")
-        .withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "base_id", "jaccard")
-        .localCheckpoint(eager=True)
-    )
+    out = _jaccard_verify(
+        cand, new_reps, base_reps, "new_id", "base_id", threshold
+    ).localCheckpoint(eager=True)
     new_reps.unpersist()
     return out
 
@@ -759,8 +639,6 @@ def connected_components(
     b_col: str = "id_b",
     max_iter: int = 25,
     algorithm: str = "hashmin",
-    hub_safe: bool = False,
-    chunk_cap: int = 131_072,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → cluster
     assignment: every node labeled with the MIN id reachable from it
@@ -775,108 +653,61 @@ def connected_components(
     localCheckpoint per round so plans don't grow unboundedly, and the
     convergence check rides the round's own aggregate (the old label
     tags through as _old), so it costs a cache filter-count instead of
-    a node-sized join (r12, ab_cc_fused_changed).
+    a node-sized join (EXP_CC_FUSED_CHANGED.json).
 
     ``algorithm="star"`` switches to alternating large-star/small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14): converges in O(log n) rounds on ANY graph shape
     — the variant for adversarial long-chain/high-diameter graphs,
     where HashMin needs O(diameter) rounds. Dedup graphs (shallow
-    cliques/short chains from LSH banding) don't need it; property
-    tests pin both variants label-equal.
+    cliques/short chains from LSH banding) don't need it: on 2M
+    5-cliques HashMin ran 17.6/18.8 s vs star 30.9/25.6 s
+    (EXP_CC_CLIQUES*.json). Property tests pin both variants
+    label-equal.
 
     Output: (id, comp) for every id appearing in ``pairs``. Singleton
     documents (no near-dup edge) are their own component and are left
     out — callers union them back if needed.
-
-    ``hub_safe=True`` (hashmin only; star has no static adjacency)
-    selects the chunked adjacency layout for graphs whose max degree
-    approaches the measured ~1e7 crossover (EXP_ADJ_HUB.json; see
-    pagerank_ppm — knob, replication join and fingerprint-equivalence
-    pytest shared via operators._iterloop.state_adjacency_join).
     """
     if algorithm == "star":
         return _connected_components_star(pairs, a_col, b_col, max_iter)
     if algorithm != "hashmin":
         raise ValueError(f"unknown algorithm {algorithm!r} ('hashmin' or 'star')")
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # The symmetrized edge list is STATIC across rounds — its working
-    # set is the ADJACENCY frame keyed by dst (labels arrive keyed by
-    # id == dst): (dst, neighbor array), one row per node, built with
-    # a single edge-sized exchange (the groupBy's own shuffle; without
-    # a cache every round would re-execute the caller's whole
-    # pair-building subtree — for LSH near-dup pairs that's the banded
-    # self-join, re-run O(rounds) times) and cached sorted within
-    # partitions so every round's SortMergeJoin streams node-count
-    # rows on both sides with zero cached-side exchange or sort; the
-    # explode back to per-edge (src, comp) candidates happens inside
-    # the map stage feeding the partial min. The pagerank_ppm /
-    # label_propagation layout (operators._iterloop.adjacency_cache),
-    # measured paired on THIS loop at sf10/16.7M nodes: 116.0 s
-    # min-of-2 vs 152.4 s for the r8 flat copartitioned cache, better
-    # on both reps, fingerprint-identical labels
-    # (EXP_ADJ_FAMILY.json; that pairing ran at loadavg 29 — the
-    # quiet-host regression anchor is r10's BENCH_r10_cc.json, start
-    # loadavg 0.18: sf1 29.1 s / sf10 128.1 s min-of-2, ratio 4.4 at
-    # 10× data; the r10-rebuilt star variant measured 15.4 / 86.1 on
-    # the same runs, so on deep-or-unknown-diameter graphs star is
-    # now the faster choice as well — hashmin stays the default for
-    # the shallow near-dup cliques this operator's contract names,
-    # and that default is now MEASURED on the contract shape (r11,
-    # EXP_CC_CLIQUES*.json: 10M nodes in 2M
-    # 5-cliques, 20M intra-clique pairs, fingerprint-identical labels,
-    # two interleaved sessions — hashmin 17.6/18.8 s min-of-2 vs star
-    # 30.9/25.6: HashMin converges in 2 rounds + 1 count-only confirm
-    # on cliques while star pays its per-round window sorts +
-    # distinct either way, so the default wins ~1.4-1.75× exactly
-    # where the contract says to use it; pick algorithm="star" for
-    # deep/unknown-diameter graphs). A SHUFFLE_HASH hint on the label side
-    # stays rejected (inverted at sf10 in the pagerank twin —
-    # EXP_SHJ_SF10B.json, pitfall 24); below ~4M nodes Catalyst
-    # broadcasts the checkpointed label table off its propagated
-    # stats, and the adjacency frame is never exchanged either way.
-    # Bonus of the keyed layout: the initial label table is the
-    # adjacency KEY SET — the edge-count distinct() pass disappears
-    # (every node appears as dst in the symmetrized list).
-    from ._iterloop import adjacency_cache, chunked_adjacency, state_adjacency_join
+    # The symmetrized edge list is STATIC across rounds, so its working
+    # set is the adjacency frame keyed by dst (labels arrive keyed by
+    # id == dst; operators._iterloop.adjacency_cache): one row per node,
+    # cached sorted within partitions, so each round's SortMergeJoin
+    # streams node-count rows with no cached-side exchange or sort, and
+    # the caller's pair-building subtree runs once instead of once per
+    # round. Measured on this loop at sf10: 116.0 s vs 152.4 s for a
+    # flat copartitioned edge cache (EXP_ADJ_FAMILY.json). The initial
+    # label table is the adjacency key set (every node appears as dst
+    # in the symmetrized list), so no distinct() runs over the edges.
+    # No SHUFFLE_HASH hint on the label side (inverted at sf10,
+    # EXP_SHJ_SF10B.json, pitfall 24); Catalyst broadcasts the
+    # checkpointed label table off its propagated stats below ~4M
+    # nodes.
+    from ._iterloop import adjacency_cache, release_checkpoint
 
     both = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if hub_safe:
-        adj, chunks, _ = chunked_adjacency(
-            both, key="dst", neighbor="src", cap=chunk_cap
-        )
-        ckpt = (
-            chunks.select(F.col("node").alias("id"))
-            .withColumn("comp", F.col("id"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        adj, _ = adjacency_cache(both, key="dst", neighbor="src")
-        chunks = None
-        ckpt = (
-            adj.select(F.col("dst").alias("id"))
-            .withColumn("comp", F.col("id"))
-            .localCheckpoint(eager=True)
-        )
+    adj, _ = adjacency_cache(both, key="dst", neighbor="src")
+    ckpt = (
+        adj.select(F.col("dst").alias("id"))
+        .withColumn("comp", F.col("id"))
+        .localCheckpoint(eager=True)
+    )
     labels = ckpt
     for _ in range(max_iter):
-        # the convergence check rides the round's OWN aggregate (r12,
-        # EXP_CC_FUSED_CHANGED.json): each node's old label is
-        # tagged through the groupBy-min as _old (exactly one labels
-        # row per id — neighbor rows carry NULL, max() ignores them),
-        # so `changed` is a filter-count over the just-checkpointed
-        # cache. The former shape paid a node-sized new⋈old JOIN per
-        # round — a per-round broadcast below the stats threshold and
-        # a two-exchange SMJ above it. Labels are identical either
-        # way (min over the same multiset; the tag column never
-        # enters the min): 20.6 → 14.3 s min-of-4 on the 2M-node
-        # clique contract shape, wash at near-dup-pair size,
-        # fingerprint-identical on both.
-        nbr_min = state_adjacency_join(
-            adj, chunks, labels, "dst", state_key="id"
-        ).select(
+        # the convergence check rides the round's OWN aggregate
+        # (EXP_CC_FUSED_CHANGED.json): each node's old label is tagged
+        # through the groupBy-min as _old (exactly one labels row per
+        # id — neighbor rows carry NULL, max() ignores them), so
+        # `changed` is a filter-count over the just-checkpointed cache
+        # instead of a node-sized new⋈old join per round
+        nbr_min = adj.join(labels, adj["dst"] == labels["id"]).select(
             F.explode("_nbrs").alias("id"),
             F.col("comp"),
             F.lit(None).cast(dict(labels.dtypes)["comp"]).alias("_old"),
@@ -888,14 +719,12 @@ def connected_components(
             .agg(F.min("comp").alias("comp"), F.max("_old").alias("_old"))
         ).localCheckpoint(eager=True)
         changed = new.filter(F.col("comp") != F.col("_old")).count()
-        ckpt.unpersist()  # pitfall 19: release the dead round's blocks
+        release_checkpoint(ckpt)  # the dead round
         ckpt = new
         labels = new.select("id", "comp")
         if changed == 0:
             break
     adj.unpersist()  # labels projects the final checkpoint: self-contained
-    if chunks is not None:
-        chunks.unpersist()
     return labels
 
 

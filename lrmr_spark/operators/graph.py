@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 from ..sources import parallelize
 from ._iterloop import (
     adjacency_cache,
-    chunked_adjacency,
     peel_degrees,
     peel_filtered_edges,
-    state_adjacency_join,
+    release_checkpoint,
 )
 
 __all__ = [
@@ -55,8 +54,6 @@ def pagerank_ppm(
     iterations: int = 3,
     damping_pct: int = 85,
     dangling: bool = False,
-    hub_safe: bool = False,
-    chunk_cap: int = 131_072,
 ) -> DataFrame:
     """Fixed-iteration PageRank over directed ``edges`` (src, dst)
     columns, ranks in exact integer ppm.
@@ -84,49 +81,23 @@ def pagerank_ppm(
     adds the one distinct() pass over the edge frame that the fast
     path's contract exists to avoid.
 
-    Scale shape (r9, measured): the working set is the ADJACENCY
-    frame — (src, outdeg, out-neighbor array), one row per node,
-    built with a single edge-sized exchange and cached sorted within
-    partitions (operators._iterloop.adjacency_cache). Per iteration
-    the SortMergeJoin against the rank table streams NODE-count rows
-    on both sides (the cache satisfies the join's distribution AND
-    ordering requirements, so only the node-sized rank table
-    exchanges and sorts), the per-node send (rank DIV outdeg) is
-    computed once per node, and the explode back to edge-count
-    (dst, send) rows happens inside the map stage feeding the partial
-    aggregation — so the only edge-count bytes that cross the wire
-    per round are the post-combiner (dst, partial-sum) pairs of the
-    one true PageRank shuffle. Lineage is truncated per round with a
-    node-sized localCheckpoint so plans stay flat. Measured against
-    the r8 shape (copartitioned flat 3-col edge cache, per-round edge
-    sort): sf10 paired interleaved 37.9 s vs 64.6 s — and the
-    intermediate fix of just sorting the flat cache INVERTED to
-    103.2 s at sf10 (fill-time sort of a 120M-row frame spills where
-    the node-count adjacency sort does not); sf3 13.6 vs 17.9 vs 20.4
-    (EXP_PAGERANK.json, EXP_PAGERANK_SF10.json; fingerprint-identical
-    output across all arms at both SFs). Quiet-host regression anchor
-    (r10, BENCH_r10_graphops.json, start loadavg 0.57): sf1 10.2 s /
-    sf10 39.7 s, ratio 3.88 at 10× data. Below the _KEEP_BCAST_MAX
-    node-count gate the rank table is explicitly broadcast instead
-    (checkpointed frames carry no size statistics — pitfall 20
-    corollary) and the adjacency frame is never exchanged at all.
-
-    100 TB trade, MEASURED (r10 planted-hub experiment,
-    EXP_ADJ_HUB.json): one adjacency row per node bounds row size by
-    the graph's max OUT-degree (in-degree hubs land in the sum
-    aggregate, which is safe); the single-row layout stays the right
-    call up to ~4e6 out-edges and inverts at ~1e7 (50.5 vs 36.6 s on
-    the planted-hub rehearsal). ``hub_safe=True`` (r11, wired per the
-    measurement) selects the chunked layout for graph families whose
-    max out-degree approaches that crossover: a hub's neighbor list
-    splits into ⌈d/chunk_cap⌉ rows landing in different partitions
-    and the per-round rank table is replicated per chunk and joined
-    on (key, chunk) — operators._iterloop.chunked_adjacency /
-    state_adjacency_join; fingerprint-equal to the default layout by
-    pytest (test_hub_safe_layouts_fingerprint_equal). Keep the
-    default below the crossover: the chunk machinery's degree
-    pre-join plus per-round replication cost real time when no hub
-    needs them (1.3-2.2× at hub ≤ 4e6)."""
+    Scale shape: the working set is the adjacency frame
+    (operators._iterloop.adjacency_cache — one row per node, cached
+    sorted within partitions). Per iteration the SortMergeJoin against
+    the rank table streams node-count rows on both sides (only the
+    rank table exchanges and sorts), the per-node send is computed once
+    per node, and the explode back to edge-count (dst, send) rows
+    happens inside the map stage feeding the partial aggregation, so
+    the only edge-count bytes on the wire are the post-combiner
+    (dst, partial-sum) pairs of the one PageRank shuffle. Measured
+    against a flat copartitioned edge cache: sf10 37.9 s vs 64.6 s,
+    sf3 13.6 vs 17.9 s, fingerprint-identical (EXP_PAGERANK.json,
+    EXP_PAGERANK_SF10.json). Lineage is truncated per round with a
+    node-sized localCheckpoint. Below the _KEEP_BCAST_MAX node-count
+    gate the rank table is explicitly broadcast instead (checkpointed
+    frames carry no size statistics — pitfall 20 corollary) and the
+    adjacency frame is never exchanged at all. Row size is bounded by
+    the max out-degree (see adjacency_cache, EXP_ADJ_HUB.json)."""
     if dangling:
         # the input subtree is referenced twice (adjacency build +
         # src ∪ dst node set) — materialize it once; the fast path
@@ -139,15 +110,10 @@ def pagerank_ppm(
                 F.col("src").isNotNull() & F.col("dst").isNotNull()
             ).localCheckpoint(eager=True)
         )
-        if hub_safe:
-            adj, chunks, _ = chunked_adjacency(raw, cap=chunk_cap)
-            has_out = chunks.select("node", F.col("_n_ch").alias("_odeg"))
-        else:
-            adj, _ = adjacency_cache(raw)
-            chunks = None
-            has_out = adj.select(
-                F.col("src").alias("node"), F.col("outdeg").alias("_odeg")
-            )
+        adj, _ = adjacency_cache(raw)
+        has_out = adj.select(
+            F.col("src").alias("node"), F.col("outdeg").alias("_odeg")
+        )
         # full node set with a STATIC dangler flag (_odeg of the left
         # join is null exactly for nodes with no out-edge) — the flag
         # rides the rank table so the per-round dangling-mass aggregate
@@ -161,23 +127,14 @@ def pagerank_ppm(
             .localCheckpoint(eager=True)
         )
         n_nodes = nodes.count()
-        raw.unpersist()
+        release_checkpoint(raw)
+        rank_src = nodes
     else:
-        if hub_safe:
-            adj, chunks, n_nodes = chunked_adjacency(edges, cap=chunk_cap)
-        else:
-            adj, n_nodes = adjacency_cache(edges)
-            chunks = None
-        nodes = None
+        adj, n_nodes = adjacency_cache(edges)
+        rank_src = adj.select(F.col("src").alias("node"))
     small = n_nodes <= _KEEP_BCAST_MAX
     teleport = 1_000_000 // max(n_nodes, 1)
     keep = 100 - damping_pct
-    if dangling:
-        rank_src = nodes
-    elif hub_safe:
-        rank_src = chunks.select("node")
-    else:
-        rank_src = adj.select(F.col("src").alias("node"))
     ranks = rank_src.withColumn(
         "rank_ppm", F.lit(teleport).cast("long")
     ).localCheckpoint(eager=True)
@@ -193,13 +150,11 @@ def pagerank_ppm(
             dang_term = dmass // max(n_nodes, 1)
         # per-node send computed BEFORE the explode: one DIV per node,
         # not one per edge; danglers (dangling mode) simply have no
-        # adjacency row and drop out of the inner join. Under
-        # hub_safe the rank table is replicated per chunk and joined
-        # on (src, chunk) — _iterloop.state_adjacency_join, one
-        # recipe for both layouts
-        sends = state_adjacency_join(
-            adj, chunks, ranks, "src", broadcast_state=small
-        ).select("_nbrs", F.expr("rank_ppm DIV outdeg").alias("c"))
+        # adjacency row and drop out of the inner join
+        r = F.broadcast(ranks) if small else ranks
+        sends = adj.join(r, adj["src"] == r["node"]).select(
+            "_nbrs", F.expr("rank_ppm DIV outdeg").alias("c")
+        )
         contribs = sends.select(F.explode("_nbrs").alias("node"), "c")
         incoming = contribs.groupBy("node").agg(
             F.coalesce(F.sum("c"), F.lit(0)).alias("_inc")
@@ -229,15 +184,13 @@ def pagerank_ppm(
                     "DIV 100 AS BIGINT)"
                 ).alias("rank_ppm"),
             ).localCheckpoint(eager=True)
-        ranks.unpersist()  # pitfall 19: release the dead round's blocks
+        release_checkpoint(ranks)  # the dead round
         ranks = new_ranks
     # the returned ranks are self-contained (checkpointed); the
     # adjacency working set can be released too
     adj.unpersist()
-    if chunks is not None:
-        chunks.unpersist()
     if dangling:
-        nodes.unpersist()
+        release_checkpoint(nodes)
         return ranks.select("node", "rank_ppm")
     return ranks
 
@@ -248,8 +201,6 @@ def personalized_pagerank_ppm(
     seeds: DataFrame,
     iterations: int = 3,
     damping_pct: int = 85,
-    hub_safe: bool = False,
-    chunk_cap: int = 131_072,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank over directed ``edges``
     (src, dst), exact integer ppm — Haveliwala's PPR (WWW'02): the
@@ -269,7 +220,7 @@ def personalized_pagerank_ppm(
     intersection raises).
 
     Scale shape: the pagerank_ppm(dangling=True) adjacency loop
-    (operators._iterloop.adjacency_cache, pitfall 25) with two static
+    (operators._iterloop.adjacency_cache) with two static
     boolean flags (is_dang, is_seed) riding the node table — the
     per-round cost is identical to dangling PageRank: one node-sized
     scalar aggregate, the node-count SMJ against the sorted adjacency
@@ -277,20 +228,13 @@ def personalized_pagerank_ppm(
     left join folding votes into the full node table (a no-in-edge
     seed keeps its teleport share; a non-seed with no in-edges goes
     to exactly 0, not a dropped row). NULL-endpoint edges are dropped
-    (the adjacency_cache contract — see pagerank_ppm). ``hub_safe=True``
-    selects the chunked adjacency layout above the measured ~1e7
-    out-degree crossover (EXP_ADJ_HUB.json; see pagerank_ppm)."""
+    (the adjacency_cache contract — see pagerank_ppm)."""
     raw = (
         edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .localCheckpoint(eager=True)
     )
-    if hub_safe:
-        adj, chunks, _ = chunked_adjacency(raw, cap=chunk_cap)
-        has_out = chunks.select("node", F.col("_n_ch").alias("outdeg"))
-    else:
-        adj, _ = adjacency_cache(raw)
-        chunks = None
-        has_out = adj.select(F.col("src").alias("node"), "outdeg")
+    adj, _ = adjacency_cache(raw)
+    has_out = adj.select(F.col("src").alias("node"), "outdeg")
     nodes = (
         raw.select(F.col("src").alias("node"))
         .unionAll(raw.select(F.col("dst").alias("node")))
@@ -312,7 +256,7 @@ def personalized_pagerank_ppm(
         )
         .localCheckpoint(eager=True)
     )
-    raw.unpersist()
+    release_checkpoint(raw)
     n_nodes = nodes.count()
     n_seeds = nodes.filter("is_seed").count()
     if n_seeds == 0:
@@ -331,9 +275,10 @@ def personalized_pagerank_ppm(
             .collect()[0]["m"]
         )
         dshare = dmass // n_seeds
-        sends = state_adjacency_join(
-            adj, chunks, ranks, "src", broadcast_state=small
-        ).select("_nbrs", F.expr("rank_ppm DIV outdeg").alias("c"))
+        r = F.broadcast(ranks) if small else ranks
+        sends = adj.join(r, adj["src"] == r["node"]).select(
+            "_nbrs", F.expr("rank_ppm DIV outdeg").alias("c")
+        )
         contribs = sends.select(F.explode("_nbrs").alias("node"), "c")
         incoming = contribs.groupBy("node").agg(
             F.coalesce(F.sum("c"), F.lit(0)).alias("_inc")
@@ -354,12 +299,10 @@ def personalized_pagerank_ppm(
             )
             .localCheckpoint(eager=True)
         )
-        ranks.unpersist()
+        release_checkpoint(ranks)
         ranks = new_ranks
     adj.unpersist()
-    if chunks is not None:
-        chunks.unpersist()
-    nodes.unpersist()
+    release_checkpoint(nodes)
     return ranks.select("node", "rank_ppm")
 
 
@@ -681,8 +624,6 @@ def bfs_levels(
     edges: DataFrame,
     seeds: DataFrame,
     max_depth: int = 3,
-    hub_safe: bool = False,
-    chunk_cap: int = 131_072,
 ) -> DataFrame:
     """Deterministic multi-source BFS distance labeling over directed
     ``edges`` (src, dst): every node reachable from ``seeds`` (a
@@ -703,14 +644,13 @@ def bfs_levels(
     in the graph keep their row at dist 0 (they are labels, not
     joins); unreached nodes are absent.
 
-    Scale shape: the adjacency working set (pitfall 25,
-    operators._iterloop.adjacency_cache; ``hub_safe=`` selects the
-    chunked layout above the measured ~1e7 out-degree crossover,
-    EXP_ADJ_HUB.json). Per round only the FRONTIER — nodes first
-    discovered or improved last round — joins the cache (BFS's
-    defining optimization: total sends across ALL rounds are bounded
-    by edge count, not rounds × edges; a full-label join would
-    re-send every settled node every round), the explode to (dst,
+    Scale shape: the adjacency working set
+    (operators._iterloop.adjacency_cache). Per round only the
+    FRONTIER — nodes first discovered or improved last round — joins
+    the cache (BFS's defining optimization: total sends across ALL
+    rounds are bounded by edge count, not rounds × edges; a
+    full-label join would re-send every settled node every round),
+    the explode to (dst,
     enc+2^42) candidates happens inside the map stage of the partial
     min, and one node-keyed min-fold against the label table both
     updates labels and yields the NEXT frontier (strict improvements
@@ -723,13 +663,7 @@ def bfs_levels(
     discipline)."""
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0, got {max_depth}")
-    if hub_safe:
-        adj, chunks, n_nodes = chunked_adjacency(
-            edges.select("src", "dst"), cap=chunk_cap
-        )
-    else:
-        adj, n_nodes = adjacency_cache(edges.select("src", "dst"))
-        chunks = None
+    adj, n_nodes = adjacency_cache(edges.select("src", "dst"))
     small = n_nodes <= _KEEP_BCAST_MAX
     labels = (
         seeds.select("node")  # before distinct: drop any extra columns
@@ -751,10 +685,9 @@ def bfs_levels(
     for _ in range(max_depth):
         if frontier.count() == 0:
             break  # node-sized count; no edge work on the fixed point
+        f = F.broadcast(frontier) if small else frontier
         cand = (
-            state_adjacency_join(
-                adj, chunks, frontier, "src", broadcast_state=small
-            )
+            adj.join(f, adj["src"] == f["node"])
             .select(
                 F.explode("_nbrs").alias("node"),
                 (F.col("enc") + F.lit(_BFS_SHIFT)).alias("enc"),
@@ -778,7 +711,7 @@ def bfs_levels(
             )
             .localCheckpoint(eager=True)
         )
-        round_ckpt.unpersist()  # pitfall 19: the dead round's blocks
+        release_checkpoint(round_ckpt)  # the dead round
         round_ckpt = merged
         labels = merged.select("node", "enc")
         frontier = merged.where("_improved").select("node", "enc")
@@ -788,8 +721,6 @@ def bfs_levels(
         F.expr(f"enc % {_BFS_SHIFT}").cast("long").alias("root"),
     )
     adj.unpersist()
-    if chunks is not None:
-        chunks.unpersist()
     return out
 
 
@@ -1005,8 +936,6 @@ def triangle_count(edges: DataFrame, u_col: str = "u", v_col: str = "v") -> Data
 def label_propagation(
     edges: DataFrame,
     iterations: int = 3,
-    hub_safe: bool = False,
-    chunk_cap: int = 131_072,
 ) -> DataFrame:
     """Synchronous Label Propagation community detection (Raghavan et
     al., Phys. Rev. E 2007) with DETERMINISTIC tie-breaking: every node
@@ -1030,54 +959,34 @@ def label_propagation(
     input every node receives votes every round and the carry-forward
     never fires, so the undirected answer is unchanged.
 
-    Scale shape (r9, measured): the working set is the ADJACENCY
-    frame — (src, out-neighbor array), one row per node, built with a
-    single edge-sized exchange and cached sorted within partitions
-    (operators._iterloop.adjacency_cache, the pagerank_ppm layout
-    generalized after EXP_PAGERANK_SF10.json) — per round the
-    edges⋈labels SortMergeJoin streams NODE-count rows on both sides
-    and the explode back to per-edge (dst, label) votes happens
-    inside the map stage feeding the partial count. The raw-edge
-    localCheckpoint AND the node-set distinct() over the raw edges
-    disappear: the label table derives from the cache (src ∪
-    explode(neighbors)). Then per round: the (dst, label)-keyed count
-    with map-side partials, a dst-keyed argmax — also map-side
-    combinable via max(struct) — and one node-keyed left join folding
-    votes back into the node-sized label table. Lineage truncates per
-    round with localCheckpoint (pitfall 12). Measured paired at sf10
-    (EXP_ADJ_FAMILY.json, fingerprint-identical labels): adjacency
-    87.3 s min-of-2 vs 109.3 s for the r8 flat copartitioned cache —
-    and variance-stable (88.9 vs 224.9 on the contended rep); those
-    paired samples ran at loadavg 29 — the quiet-host regression
-    anchor is r10's BENCH_r10_graphops.json (start loadavg 0.57):
-    sf1 13.9 s / sf10 71.1 s, ratio 5.14 at 10× data. ONE
-    loop serves both regimes: under the _KEEP_BCAST_MAX node-count
-    gate the label table and argmax are EXPLICITLY broadcast
-    (checkpointed frames carry no size statistics — pitfall 20
-    corollary) and the adjacency frame is never exchanged at all.
-    ``hub_safe=True`` selects the chunked adjacency layout for graph
-    families whose max out-degree approaches the measured ~1e7
-    crossover (EXP_ADJ_HUB.json; see pagerank_ppm — the knob, the
-    replication join and the fingerprint-equivalence pytest are
-    shared across the family via _iterloop.state_adjacency_join)."""
-    if hub_safe:
-        adj, chunks, _ = chunked_adjacency(
-            edges.select("src", "dst"), cap=chunk_cap
-        )
-        key_nodes = chunks.select("node")
-    else:
-        adj, _ = adjacency_cache(edges.select("src", "dst"))
-        chunks = None
-        key_nodes = adj.select(F.col("src").alias("node"))
+    Scale shape: the working set is the adjacency frame
+    (operators._iterloop.adjacency_cache), and the label table derives
+    from it (src ∪ explode(neighbors)), so no distinct() runs over the
+    raw edges. Per round the edges⋈labels SortMergeJoin streams
+    node-count rows on both sides, the explode back to per-edge
+    (dst, label) votes happens inside the map stage, ONE exchange
+    serves the (dst, label) count and the dst argmax (map-side
+    combinable via max(struct)), and one node-keyed left join folds
+    votes back into the label table. Lineage truncates per round with
+    localCheckpoint (pitfall 12). The adjacency layout measured 87.3 s
+    vs 109.3 s for a flat copartitioned edge cache at sf10
+    (EXP_ADJ_FAMILY.json, fingerprint-identical labels). Under the
+    _KEEP_BCAST_MAX node-count gate the label table and argmax are
+    explicitly broadcast (checkpointed frames carry no size statistics
+    — pitfall 20 corollary) and the adjacency frame is never exchanged
+    at all. Row size is bounded by the max out-degree (see
+    adjacency_cache, EXP_ADJ_HUB.json)."""
+    adj, _ = adjacency_cache(edges.select("src", "dst"))
     labels = (
-        key_nodes.unionAll(adj.select(F.explode("_nbrs").alias("node")))
+        adj.select(F.col("src").alias("node"))
+        .unionAll(adj.select(F.explode("_nbrs").alias("node")))
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
     small = labels.count() <= _KEEP_BCAST_MAX  # node count: driver scalar
     # fallback for platforms that set the conf non-numerically (e.g.
-    # 'auto') — label_propagation must not fail on int() (r11 ADVICE)
+    # 'auto') — label_propagation must not fail on int()
     try:
         n_part = int(
             labels.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -1085,33 +994,23 @@ def label_propagation(
     except (TypeError, ValueError):
         n_part = labels.rdd.getNumPartitions() or 200
     for _ in range(iterations):
-        raw = state_adjacency_join(
-            adj, chunks, labels, "src", broadcast_state=small
-        ).select(F.explode("_nbrs").alias("nd"), "label")
-        # Vote-path exchange fusion (r11 opt round below the gate,
-        # settled ABOVE the gate in r12 — EXP_LPA_FUSION.json,
-        # fingerprint-identical labels on every arm):
-        # hash-repartitioning the raw votes by nd makes ONE exchange
-        # serve both the (nd, label) count AND the nd argmax
-        # (partitioning keys ⊆ grouping keys — the minhash reps
-        # fusion, AB_REPS_FUSION.json). Measured: sf0.1 5.18→4.61 s,
-        # sf1 23.9→18.2 / 41.8→19.0 s min-of-2; at sf10 (16.7M nodes,
-        # above the broadcast gate) the r12 settle at loadavg <3 ran
-        # fused 57.7 vs unfused 77.4 s min-of-3 with 2/3 paired reps
-        # faster, agreeing with r11's quiet session (104.7 vs 121.0) —
-        # the one contended r11 arm that read the other way was host
-        # drift. Trade-off stated honestly: the fused exchange carries
-        # RAW edge-count votes where the two-exchange shape ships
-        # post-partial-agg (nd, label) pairs; with the declared 3
-        # rounds labels stay near-distinct and partials reduce little,
-        # so deleting the second exchange wins — a deployment running
-        # MANY rounds to convergence (labels coalesced, partials
-        # highly reductive) should re-A/B. The pinned count is
-        # spark.sql.shuffle.partitions — the same conf every groupBy
-        # exchange uses (scale-adaptive through the same knob); an
-        # UNpinned repartition("nd") was measured 3.5× slower at sf1
-        # (AQE coalesced the advisory exchange to too few partitions
-        # for the downstream aggregations).
+        lb = F.broadcast(labels) if small else labels
+        raw = adj.join(lb, adj["src"] == lb["node"]).select(
+            F.explode("_nbrs").alias("nd"), "label"
+        )
+        # Vote-path exchange fusion (EXP_LPA_FUSION.json,
+        # fingerprint-identical labels on every arm): hash-partitioning
+        # the raw votes by nd makes ONE exchange serve both the
+        # (nd, label) count and the nd argmax (partitioning keys ⊆
+        # grouping keys). Fused beat two exchanges at sf0.1, sf1 and
+        # sf10. Trade-off: the fused exchange carries raw edge-count
+        # votes instead of post-partial-agg pairs; with the declared
+        # 3 rounds labels stay near-distinct and partials reduce
+        # little, but a run of MANY rounds to convergence should
+        # re-A/B. The partition count is pinned to
+        # spark.sql.shuffle.partitions: an unpinned repartition("nd")
+        # measured 3.5× slower at sf1 (AQE coalesced it to too few
+        # partitions for the aggregations downstream).
         votes = (
             raw.repartition(n_part, "nd")
             .groupBy("nd", "label")
@@ -1131,13 +1030,11 @@ def label_propagation(
             )
             .localCheckpoint(eager=True)
         )
-        labels.unpersist()  # dead round: nothing references it anymore
+        release_checkpoint(labels)  # dead round: nothing references it
         labels = new_labels
     # the returned labels are self-contained (checkpointed), so the
     # adjacency working set can be released too
     adj.unpersist()
-    if chunks is not None:
-        chunks.unpersist()
     return labels
 
 

@@ -330,7 +330,6 @@ def semdedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    eager: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): coarse k-means clustering, then within-cluster
@@ -352,10 +351,9 @@ def semdedup(
     as a partition column (see ann_ivf_pruned_df) so re-runs skip the
     quantizer entirely.
 
-    ``eager=True`` (default) materializes the result via
-    localCheckpoint and releases the persisted assignment table
-    immediately (the minhash_lsh_pairs discipline); eager=False keeps
-    the plan lazy — caller owns the persist lifetime.
+    The result is materialized via localCheckpoint and the persisted
+    assignment table released before returning (the minhash_lsh_pairs
+    discipline).
     """
     # persist: the assigned table is referenced three times (both
     # pair-join sides + the final left join), and ivf_assign's HOF
@@ -429,10 +427,9 @@ def semdedup(
             (F.col("_rep_kept") & (F.col("_mid") == F.col("_rid"))).alias("kept"),
         )
         .orderBy(id_col)
+        .localCheckpoint(eager=True)
     )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        base.unpersist()
+    base.unpersist()
     return out
 
 

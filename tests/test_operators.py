@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from lrmr_spark import stored_index as SI
 from lrmr_spark.operators import dedup as DD
+from lrmr_spark.operators import graph as GR
 from lrmr_spark.operators import multimodal as MM
 from lrmr_spark.operators import similarity as SIM
 from lrmr_spark.operators import skew as SK
@@ -126,17 +127,61 @@ def test_minhash_fast_precision(spark):
         assert p["jaccard"] == pytest.approx(exact, abs=1e-3) and exact >= 0.9
 
 
-def test_minhash_eager_releases_cache(spark, docs):
-    # regression: the persisted representative table must be released
-    # after the eager materialization — repeated calls in a long-lived
-    # session must not accumulate cached partitions (+1 allowed for the
-    # localCheckpoint of the small pair result itself)
+def _release_inputs(spark, docs):
+    ring = [(d, d % 9 + 1) for d in range(1, 10)]
+    e = spark.createDataFrame(ring + [(1, 5)], "src long, dst long")
+    return {
+        "docs": docs,
+        "new": docs.filter(F.col("doc_id") % 5 == 0),
+        "base": docs.filter(F.col("doc_id") % 5 != 0),
+        "vecs": spark.createDataFrame(
+            [(1, [0.9, 0.1]), (2, [0.9, 0.1]), (3, [0.1, 0.9])],
+            "vec_id long, embedding array<double>",
+        ),
+        "sym": e.union(e.selectExpr("dst AS src", "src AS dst")),
+        # dangler 20 (in-edge only) exercises the dangling-mode node set
+        "ed": spark.createDataFrame(ring + [(5, 20)], "src long, dst long"),
+        "seeds": spark.createDataFrame([(1,), (7,)], "node long"),
+        "pairs": spark.createDataFrame(
+            [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+        ),
+    }
+
+
+_RELEASE_CASES = {
+    "minhash_lsh_pairs": lambda g: DD.minhash_lsh_pairs(
+        g["docs"], "doc_id", "text", threshold=0.9, fast=True
+    ),
+    "minhash_lsh_match": lambda g: DD.minhash_lsh_match(
+        g["new"], g["base"], "doc_id", "text", threshold=0.9, fast=True
+    ),
+    "semdedup": lambda g: SIM.semdedup(g["vecs"], [[1.0, 0.0], [0.0, 1.0]], 0.99),
+    "pagerank_ppm": lambda g: GR.pagerank_ppm(g["sym"], 3),
+    "pagerank_ppm_dangling": lambda g: GR.pagerank_ppm(g["ed"], 2, dangling=True),
+    "personalized_pagerank_ppm": lambda g: GR.personalized_pagerank_ppm(
+        g["ed"], g["seeds"], 2
+    ),
+    "bfs_levels": lambda g: GR.bfs_levels(g["ed"], g["seeds"], 3),
+    "label_propagation": lambda g: GR.label_propagation(g["sym"], 3),
+    "connected_components": lambda g: DD.connected_components(g["pairs"]),
+}
+
+
+@pytest.mark.parametrize("case", list(_RELEASE_CASES))
+def test_releases_cache(spark, docs, case):
+    # every intermediate cache (rep tables, adjacency frames, dead
+    # rounds' checkpoints) is released before return — repeated calls
+    # in a long-lived session must not accumulate cached partitions;
+    # +1 allowed for the returned localCheckpoint itself, which must
+    # still read after its inputs are gone
     docs.count()  # materialize the fixture's own cache first
+    inputs = _release_inputs(spark, docs)
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    DD.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.9, fast=True)
+    out = _RELEASE_CASES[case](inputs)
     after = jsc.getPersistentRDDs().size()
     assert after <= before + 1
+    assert out.count() > 0
 
 
 def test_minhash_shingles_order_sensitive(spark):
@@ -709,73 +754,6 @@ def test_null_endpoint_edges_are_nonexistent_everywhere(spark):
         assert got == want
 
 
-def test_chunked_adjacency_structure_and_null_contract(spark):
-    # hub-safe layout (EXP_ADJ_HUB.json): per key, outdeg is constant
-    # across chunks and equals the true degree, the chunk arrays
-    # partition the neighbor set, every chunk id is < the node's
-    # replication count, and NULL-neighbor edges are dropped
-    # (adjacency_cache's contract)
-    from lrmr_spark.operators._iterloop import chunked_adjacency
-
-    hub_edges = [(1, d) for d in range(2, 52)] + [(2, 1), (3, None)]
-    edges = spark.createDataFrame(hub_edges, "src long, dst long")
-    adj, chunks, n = chunked_adjacency(edges, cap=8)
-    rows = adj.collect()
-    repl = {r["node"]: r["_n_ch"] for r in chunks.collect()}
-    adj.unpersist()
-    chunks.unpersist()
-    assert n == 2 and set(repl) == {1, 2}  # node 3 had only a NULL edge
-    assert repl[1] == -(-50 // 8) and repl[2] == 1
-    by_key: dict = {}
-    for r in rows:
-        assert r["outdeg"] == (50 if r["src"] == 1 else 1)
-        assert 0 <= r["_ch"] < repl[r["src"]]
-        by_key.setdefault(r["src"], []).extend(r["_nbrs"])
-    assert sorted(by_key[1]) == list(range(2, 52))
-    assert by_key[2] == [1]
-    assert len(by_key[1]) == 50  # chunks partition, never duplicate
-
-
-def test_hub_safe_layouts_fingerprint_equal(spark):
-    # r11 (VERDICT task 3): the chunked-adjacency layout wired behind
-    # hub_safe= must be answer-identical to the default single-row
-    # layout on a planted-hub graph, across the whole family —
-    # pagerank (fast + dangling), LPA, HashMin CC. chunk_cap=8 forces
-    # the hub's 40 out-edges into multiple chunks at test size.
-    from lrmr_spark.operators.dedup import connected_components
-    from lrmr_spark.operators.graph import (
-        bfs_levels,
-        label_propagation,
-        pagerank_ppm,
-        personalized_pagerank_ppm,
-    )
-
-    hub = [(1, d) for d in range(2, 42)]
-    ring = [(d, d % 41 + 1) for d in range(1, 42)]
-    e = spark.createDataFrame(hub + ring, "src long, dst long")
-    # dangler 100 (in-edge only) exercises the dangling-mode node set
-    ed = spark.createDataFrame(
-        hub + ring + [(5, 100)], "src long, dst long"
-    )
-    sym = e.union(e.selectExpr("dst AS src", "src AS dst"))
-    pairs = spark.createDataFrame(
-        hub + [(50, 51)], "id_a long, id_b long"
-    )
-    seeds = spark.createDataFrame([(1,), (7,)], "node long")
-    cases = [
-        lambda **kw: pagerank_ppm(e, 3, **kw),
-        lambda **kw: pagerank_ppm(ed, 2, dangling=True, **kw),
-        lambda **kw: personalized_pagerank_ppm(ed, seeds, 2, **kw),
-        lambda **kw: label_propagation(sym, 3, **kw),
-        lambda **kw: connected_components(pairs, **kw),
-        lambda **kw: bfs_levels(ed, seeds, 3, **kw),
-    ]
-    for fn in cases:
-        want = sorted(map(tuple, fn().collect()))
-        got = sorted(map(tuple, fn(hub_safe=True, chunk_cap=8).collect()))
-        assert got == want and len(got) > 0
-
-
 def test_pagerank_ppm_dangling_equals_fast_path_on_symmetric(spark):
     # on a symmetric graph there are no danglers and every node has an
     # in-edge: the dangling=True mode must reproduce the fast path
@@ -932,46 +910,6 @@ def test_connected_components_star_matches_hashmin(spark):
         for r in connected_components(pairs, algorithm="hashmin").collect()
     }
     assert star == hashmin
-
-
-def test_minhash_fast_sig_prefilter_pairs_unchanged(spark, sf_dir):
-    # the signature-agreement prune (est >= ceil(n*t/2)) must only cut
-    # verify work, never change the emitted pair set — compare the fast
-    # path with the prefilter on vs off over the real documents table
-    from lrmr_spark.operators import dedup as DD
-    from lrmr_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    key = lambda rows: sorted(
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in rows
-    )
-    on = DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", bands=4, fast=True, threshold=0.9,
-        sig_prefilter=True,
-    ).collect()
-    off = DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", bands=4, fast=True, threshold=0.9,
-        sig_prefilter=False,
-    ).collect()
-    assert key(on) == key(off) and len(on) > 0
-    # incremental matcher: same invariant across the two-sided split
-    from pyspark.sql import functions as F
-
-    new, base = docs.filter(F.col("doc_id") % 5 == 0), docs.filter(
-        F.col("doc_id") % 5 != 0
-    )
-    mkey = lambda rows: sorted(
-        (r["new_id"], r["base_id"], r["jaccard"]) for r in rows
-    )
-    m_on = DD.minhash_lsh_match(
-        new, base, "doc_id", "text", bands=4, fast=True, threshold=0.9,
-        sig_prefilter=True,
-    ).collect()
-    m_off = DD.minhash_lsh_match(
-        new, base, "doc_id", "text", bands=4, fast=True, threshold=0.9,
-        sig_prefilter=False,
-    ).collect()
-    assert mkey(m_on) == mkey(m_off)
 
 
 def test_connected_components_star_string_ids(spark):

@@ -548,6 +548,17 @@ def test_python_node_count_tells_row_udfs_from_arrow_nodes(spark):
     assert node_count(physical_plan(grouped), "Exchange") == 1
 
 
+def test_cartesian_flag_spares_one_row_sides(spark):
+    from tools.audit_plans import cartesian_joins
+
+    one = spark.range(5).agg(F.count(F.lit(1)).alias("a"))
+    other = spark.range(7).agg(F.sum("id").alias("b"))
+    table = spark.range(3).withColumnRenamed("id", "x")
+    assert cartesian_joins(one.crossJoin(other)) == 0
+    assert cartesian_joins(table.crossJoin(F.broadcast(one))) == 0
+    assert cartesian_joins(table.crossJoin(spark.range(4))) == 1
+
+
 def test_warm_job_counts_pinned(spark, jobs_in_group):
     # a warm call reuses each table's inferred schema, so only the
     # query's own jobs run: flagship's scan+shuffle stages, and the

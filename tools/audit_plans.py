@@ -18,6 +18,11 @@ markers. Flags the pathologies the measured pitfalls catalogue:
 - batch_eval_python: a BatchEvalPython node — a row-at-a-time Python
   UDF, which the engine does not use (pipeline.py keeps every Python
   operator on Arrow batches).
+- cartesian: a condition-free join in the optimized logical plan where
+  neither child is known to hold at most one row (``maxRows`` ≤ 1) — a
+  cross product that grows with both inputs. A join to a 1-row side (a
+  global count or bound broadcast to every row) grows only with the
+  other side and does not trip it.
 
 Every entry also records ``python_nodes``, the count of plan nodes
 whose tasks run a Python worker (PYTHON_NODES).
@@ -66,6 +71,9 @@ WAIVERS = {
     # Pipeline.partitioned_by_fn: an opaque Python routing function can
     # only run on the RDD layer
     "feeder_route_do_pipeline": "partitioned_by_fn parity escape hatch: Python router over an RDD",
+    # cross products by design, each with one side bounded by the query
+    "events_gapfill_daily": "gap-fill grid: distinct event types x calendar days",
+    "ann_cosine_topk_batch": "batched scoring: corpus x a 4-query literal broadcast",
 }
 
 
@@ -94,6 +102,24 @@ def python_rdd_scans(plan: str) -> int:
     return len(re.findall(r"^Arguments: .* at applySchemaToPythonRDD ", plan, re.MULTILINE))
 
 
+def _at_most_one_row(plan) -> bool:
+    rows = plan.maxRows()
+    return bool(rows.isDefined()) and rows.get() <= 1
+
+
+def cartesian_joins(df) -> int:
+    """Condition-free joins in ``df``'s optimized logical plan where
+    neither child holds at most one row."""
+    n, stack = 0, [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Join" and node.condition().isEmpty():
+            n += not (_at_most_one_row(node.left()) or _at_most_one_row(node.right()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "PLAN_AUDIT.json"
@@ -103,6 +129,7 @@ def main() -> None:
         try:
             df = fn(spark, sf_dir)
             plan = physical_plan(df)
+            n_cart = cartesian_joins(df)
         except Exception as e:  # streaming entries can't explain offline
             rows[name] = {"error": str(e).splitlines()[0][:120]}
             continue
@@ -135,6 +162,8 @@ def main() -> None:
             issues.append(f"rdd_scan:{n_rdd}")
         if n_batch_eval:
             issues.append(f"batch_eval_python:{n_batch_eval}")
+        if n_cart:
+            issues.append(f"cartesian:{n_cart}")
         if issues and name in WAIVERS:
             info["waived"] = WAIVERS[name]
         elif issues:
