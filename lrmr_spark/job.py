@@ -188,9 +188,16 @@ class JobHandle(_BackgroundJob):
     def _execute(self) -> None:
         sc = self._spark.sparkContext
         sc.setJobGroup(self.job_id, f"lrmr-spark background job {self.job_id}", True)
-        self._rows = self._df.collect()
-        for obs in self._observations:
-            self._metrics.update(obs.get)
+        try:
+            self._rows = self._df.collect()
+            for obs in self._observations:
+                self._metrics.update(obs.get)
+        finally:
+            # the registry keeps this handle for the process's lifetime;
+            # a JVM Dataset still referenced from here would pin the
+            # job's shuffle files, which ContextCleaner frees only once
+            # nothing references the plan
+            self._df = self._observations = None
 
     def _cancel(self) -> None:
         """Cooperative cancel via the Spark job group (the analogue of

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
 from .. import stored_index as SI
+from ._iterloop import adjacency_cache, release_checkpoint
 from .text import distinct_tokens, fingerprint, tokens
 
 _MINHASH_PARAMS = ("num_hashes", "bands", "unit", "shingle_k", "fast")
@@ -564,7 +565,7 @@ def append_minhash_index(
                 "bands": idx.parts["bands"].plus(bands_part),
             },
         )
-    fresh.unpersist()
+    release_checkpoint(fresh)
     return n_new
 
 
@@ -688,7 +689,6 @@ def connected_components(
     # EXP_SHJ_SF10B.json, pitfall 24); Catalyst broadcasts the
     # checkpointed label table off its propagated stats below ~4M
     # nodes.
-    from ._iterloop import adjacency_cache, release_checkpoint
 
     both = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -838,7 +838,7 @@ def _connected_components_star(
             n_new == n_prev
             and new_edges.join(edges, ["u", "v"], "left_anti").count() == 0
         )
-        edges.unpersist()  # pitfall 19: release the dead round's blocks
+        release_checkpoint(edges)  # pitfall 19: the dead round
         edges, n_prev = new_edges, n_new
         if stable:
             break
@@ -1344,5 +1344,5 @@ def delete_minhash_index_content(
             "bands",
         )
         SI.commit(path, "minhash", meta, {"reps": keep_reps, "bands": keep_bands})
-    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
+    release_checkpoint(flagged)  # pitfall 19
     return int(n_removed)

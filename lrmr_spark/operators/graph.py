@@ -505,7 +505,7 @@ def _walk_state_loop(adj, small, starts, walk_len, walks_per_node, nxt_fn):
         .localCheckpoint(eager=True)
     )
     for s in kept:
-        s.unpersist()
+        release_checkpoint(s)
     return packed
 
 
@@ -791,7 +791,7 @@ def hits_ppm(edges: DataFrame, iterations: int = 3) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    raw.unpersist()
+    release_checkpoint(raw)
     n_nodes = nodes.count()
     small = n_nodes <= _KEEP_BCAST_MAX
     tp = 1_000_000 // max(n_nodes, 1)
@@ -810,7 +810,7 @@ def hits_ppm(edges: DataFrame, iterations: int = 3) -> DataFrame:
         half-round's own materialization each executed the full
         send/explode/partial-sum pipeline (shuffle stages are not
         reused across separate jobs), doubling every round's edge-side
-        work. Returns (folded, raw_ckpt); the caller unpersists
+        work. Returns (folded, raw_ckpt); the caller releases
         raw_ckpt once the folded frame is materialized (pitfall 19)."""
         c = F.broadcast(cur) if small else cur
         sends = adj.join(c, adj[key_col] == c.node).select(
@@ -854,18 +854,17 @@ def hits_ppm(edges: DataFrame, iterations: int = 3) -> DataFrame:
             adj_out, "src", "hub_ppm", "auth_ppm", scores, nodes
         )
         auth = auth_l.localCheckpoint(eager=True)
-        a_raw.unpersist()
+        release_checkpoint(a_raw)
         new_l, h_raw = _fold(adj_in, "dst", "auth_ppm", "hub_ppm", auth, auth)
         new_scores = new_l.select(
             "node", "auth_ppm", "hub_ppm"
         ).localCheckpoint(eager=True)
-        h_raw.unpersist()
-        scores.unpersist()
-        auth.unpersist()
+        for dead in (h_raw, scores, auth):
+            release_checkpoint(dead)
         scores = new_scores
     adj_out.unpersist()
     adj_in.unpersist()
-    nodes.unpersist()
+    release_checkpoint(nodes)
     return scores
 
 
@@ -1150,9 +1149,9 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         # accumulate in the block manager for the session's lifetime
         # (the returned table is literal — nothing downstream reads
         # them), and the leak compounds across runs — measured
-        # 22 s → 60 s run-over-run at sf1 before this unpersist
+        # 22 s → 60 s run-over-run at sf1 before this release
         e.unpersist()
-        deg.unpersist()
+        release_checkpoint(deg)
         e, deg = e_new, deg_new
         out.append((r, n_nodes, n_edges))
         # (the former post-sweep n_edges == prev_edges certificate is
@@ -1161,7 +1160,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         # earlier and without materializing the identical frame)
         prev_nodes, prev_edges = n_nodes, n_edges
     e.unpersist()
-    deg.unpersist()
+    release_checkpoint(deg)
     return parallelize(
         spark, out, "round bigint not null, n_nodes bigint not null, n_edges bigint not null"
     )
@@ -1257,7 +1256,7 @@ def kcore_numbers(
             ).collect()[0]
             n_nodes, n_edges = int(st["n"]), int(st["m"])
             e.unpersist()
-            deg.unpersist()
+            release_checkpoint(deg)
             e, deg = e_new, deg_new
             prev_nodes, prev_edges = n_nodes, n_edges
         survivors = deg.select(F.col("src").alias("node")).withColumn(
@@ -1271,8 +1270,8 @@ def kcore_numbers(
             )
             .localCheckpoint(eager=True)  # flat lineage per level
         )
-        cores.unpersist()
+        release_checkpoint(cores)
         cores = cores_new
     e.unpersist()
-    deg.unpersist()
+    release_checkpoint(deg)
     return cores

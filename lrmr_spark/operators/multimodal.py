@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import stored_index as SI
+from ._iterloop import release_checkpoint
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -427,7 +428,7 @@ def delete_phash_index_content(takedown_media: DataFrame, path: str) -> int:
             flagged.filter(~F.col("_rm")).drop("_rm"), path, "hashes"
         )
         SI.commit(path, "phash", idx.params, {"hashes": survivors})
-    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
+    release_checkpoint(flagged)  # pitfall 19
     return int(n_removed)
 
 

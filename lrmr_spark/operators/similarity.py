@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .. import stored_index as SI
 from ..sources import parallelize
+from ._iterloop import release_checkpoint
 
 __all__ = [
     "dot",
@@ -975,7 +976,7 @@ def _commit_append(idx, path: str, out: DataFrame) -> int:
         codes = idx.parts["codes"]
         new = SI.write_part(out, path, "codes", key=codes.key)
         SI.commit(path, idx.family, idx.params, {"codes": codes.plus(new)})
-    out.unpersist()
+    release_checkpoint(out)
     return n_new
 
 
@@ -1535,7 +1536,7 @@ def _delete_code_ids(spark, path: str, family: str, params: tuple, ids) -> int:
             flagged.filter(~F.col("_rm")).drop("_rm"), path, "codes", key=codes.key
         )
         SI.commit(path, family, idx.params, {"codes": kept.plus(survivors)})
-    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
+    release_checkpoint(flagged)  # pitfall 19
     return int(n_removed)
 
 
@@ -1650,7 +1651,7 @@ def perceptron_train(
         w = [wi + int(row[f"g{j}"]) for j, wi in enumerate(w)]
         out_rows.append((it, int(row["m"]), sum(abs(wi) for wi in w)))
 
-    base.unpersist()  # the result below is literal — release the working set
+    release_checkpoint(base)  # the result below is literal
     return parallelize(
         spark, out_rows, "iter bigint not null, n_mistakes bigint not null, w_l1 bigint not null"
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .. import stored_index as SI
 from ..sources import parallelize
+from ._iterloop import release_checkpoint
 
 # Serving-path broadcast gate for the banned-fingerprint frame (the
 # over-max_df template noise anti-joined out of a match batch). On any
@@ -714,7 +715,7 @@ def delete_winnowing_index_ids(spark, path: str, ids: list) -> int:
         else idx.parts["df"].empty()
     )
     SI.commit(path, "winnowing", idx.params, {"postings": postings, "df": df_part})
-    flagged.unpersist()  # pitfall 19: release the checkpoint blocks
+    release_checkpoint(flagged)  # pitfall 19
     return int(stats["_n_removed"] or 0)
 
 
@@ -914,7 +915,7 @@ def train_hashed_ngram_weights(
         F.when(tdot > 0, F.lit(1)).otherwise(F.lit(-1)).cast("bigint").alias("_y"),
     ).localCheckpoint(eager=True)
     w = _train_rounds(base, dim, iterations)
-    base.unpersist()  # pitfall 19: weights are scalars, release the set
+    release_checkpoint(base)  # pitfall 19: weights are scalars
     return w
 
 

@@ -1,5 +1,6 @@
-"""tools/ab.py: the verdict rule on synthetic runs, the JVM-side result
-fingerprint, and one entry-mode run over two git arms."""
+"""tools/ab.py: the verdict rule on synthetic runs, the bench summary of
+canned rep records, the JVM-side result fingerprint, and one entry-mode
+run over two git arms."""
 
 import json
 import os
@@ -9,7 +10,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from tools.ab import fingerprint, verdict
+from tools.ab import fingerprint, summarize, table, verdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PARENT = [1.00, 1.01, 1.02, 1.03, 1.04, 1.05, 1.06, 1.07, 1.08, 1.09]
@@ -53,6 +54,41 @@ def test_spread_over_bound_with_every_change_run_better_is_resolved():
     v = verdict(wide, change, "lower", 0.25)
     assert v["spread"] > 0.25
     assert v["verdict"] == "claim_met"
+
+
+def _bench_rep(arm, seed, f1_s, f4_s, jvm_mb, rss_mb):
+    """One perfbench rep as ``_run_rep`` records it."""
+    return {
+        "arm": arm, "seed": seed, "returncode": 0, "steal_share": 0.0,
+        "result": {"correct": True, "attempted": 20, "failed": 0,
+                   "metrics": {"retained_mb": {"value": jvm_mb + rss_mb, "unit": "MB"}}},
+        "detail": {"latency_by_kind_s": {"F1": f1_s, "F4": f4_s},
+                   "retained": {"jvm_heap_mb": jvm_mb, "python_rss_mb": rss_mb}},
+    }
+
+
+def test_bench_summary_attributes_latency_by_kind_and_retained_parts():
+    spec = {"end_to_end": [{"name": "retained_mb", "better": "lower", "bound": 0.15}]}
+    runs = [
+        _bench_rep("a", 1, 0.18, 0.12, 70.0, 146.0), _bench_rep("b", 1, 0.18, 0.09, 71.0, 119.0),
+        _bench_rep("b", 2, 0.20, 0.08, 70.0, 120.0), _bench_rep("a", 2, 0.19, 0.14, 71.0, 145.0),
+        _bench_rep("a", 3, 0.17, 0.13, 72.0, 144.0), _bench_rep("b", 3, 0.19, 0.10, 70.0, 118.0),
+        # a crashed rep carries no detail and counts for neither arm
+        {"arm": "b", "seed": 4, "returncode": 1, "steal_share": 0.0, "stderr_tail": "boom"},
+    ]
+    out, good = summarize(spec, "turnaround", [1, 2, 3], runs)
+    assert good and out["paired_seeds"] == [1, 2, 3]
+    assert out["metrics"]["retained_mb"]["verdict"] == "claim_met"
+    assert out["attribution"] == {
+        "a": {"latency_by_kind_s": {"F1": 0.18, "F4": 0.13},
+              "retained": {"jvm_heap_mb": 71.0, "python_rss_mb": 145.0}},
+        "b": {"latency_by_kind_s": {"F1": 0.19, "F4": 0.09},
+              "retained": {"jvm_heap_mb": 70.0, "python_rss_mb": 119.0}},
+    }
+    md = table({"mode": "bench", **out})
+    assert "| latency_by_kind_s.F4 | 0.13 | 0.09 | -0.04 |" in md
+    assert "| retained.python_rss_mb | 145 | 119 | -26 |" in md
+    json.dumps(out)  # the record stays JSON
 
 
 def test_fingerprint_ignores_partitioning_and_sees_one_value(spark):

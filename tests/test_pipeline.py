@@ -14,6 +14,8 @@
 
 import datetime
 import decimal
+import gc
+import os
 import time
 
 import pytest
@@ -246,7 +248,6 @@ def test_f8_cross_process_job_attach(spark, tmp_path, monkeypatch):
     # (/root/reference/job/manager_distributed.go:25-33): a SECOND
     # python process (no Spark, no shared memory) attaches through the
     # checkpoint file and reads status + metrics
-    import os
     import subprocess
     import sys as _sys
 
@@ -276,6 +277,47 @@ def test_f8_cross_process_job_attach(spark, tmp_path, monkeypatch):
     )
     assert out.returncode == 0, out.stderr
     assert "DetachedJobView succeeded True" in out.stdout
+
+
+def _shuffle_data_files(spark) -> set[str]:
+    """Paths of the shuffle data files under the block manager's dirs."""
+    dbm = spark.sparkContext._jsc.sc().env().blockManager().diskBlockManager()
+    return {
+        os.path.join(d, f)
+        for root in dbm.localDirsString()
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.startswith("shuffle_") and f.endswith(".data")
+    }
+
+
+def test_f8_finished_background_jobs_free_their_shuffles(spark):
+    # the registry keeps every handle for the process's lifetime, so a
+    # handle that still held its frame would pin the job's shuffle files
+    def collect_garbage():
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+
+    collect_garbage()
+    before = _shuffle_data_files(spark)
+    handles = [
+        Pipeline.parallelize(spark, [(i % 4,) for i in range(12)], "v long")
+        .group_by_key("v")
+        .reduce({"cnt": F.count(F.lit(1))})
+        .run_in_background(job_id=f"bg-shuffle-{i}")
+        for i in range(5)
+    ]
+    for h in handles:
+        assert sorted(tuple(r) for r in h.wait(60).result().rows) == [
+            (0, 3), (1, 3), (2, 3), (3, 3)
+        ]
+    assert len(_shuffle_data_files(spark) - before) >= len(handles)
+    deadline = time.monotonic() + 60
+    while (left := _shuffle_data_files(spark) - before) and time.monotonic() < deadline:
+        collect_garbage()
+        time.sleep(0.5)
+    assert not left
+    assert [h.status for h in handles] == ["succeeded"] * len(handles)
 
 
 def test_metrics_accumulator_in_udf(spark):

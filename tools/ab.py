@@ -13,7 +13,9 @@ reads host CPU steal and the fixed CPU calibrator of ``perfbench/host.py``.
 
 ``bench`` runs each arm's own ``perfbench/run.py --workload W --seed S`` and
 judges every end-to-end metric of this checkout's BENCHMARK.json against its
-bound (see ``verdict``); arm ``a`` is the parent, ``b`` the change. It exits 1
+bound (see ``verdict``); arm ``a`` is the parent, ``b`` the change. A second
+table attributes what was measured: per arm, the median latency of each op
+kind and the two parts of ``retained_mb`` (see ``attribute``). It exits 1
 when a run fails, a metric regresses or is unresolved, or ``b`` fails more
 operations than ``a``.
 
@@ -163,8 +165,28 @@ def bench(args, arms: dict) -> tuple[dict, bool]:
         rep = _run_rep(cmd, root, {"PYTHONPATH": root}, timeout=600)
         runs.append({"arm": arm, "seed": args.seeds[i], **rep})
         _progress(runs[-1])
+    return summarize(spec, args.workload, args.seeds, runs)
+
+
+def attribute(details: list[dict]) -> dict:
+    """Where one arm's time and memory went: the median over its runs of
+    each op kind's latency (perfbench's ``latency_by_kind_s``) and of each
+    part of ``retained_mb`` (``retained``: JVM heap, Python driver RSS)."""
+    out = {}
+    for key in ("latency_by_kind_s", "retained"):
+        parts: dict[str, list[float]] = {}
+        for d in details:
+            for k, v in d.get(key, {}).items():
+                parts.setdefault(k, []).append(v)
+        out[key] = {k: statistics.median(v) for k, v in parts.items()}
+    return out
+
+
+def summarize(spec: dict, workload: str, all_seeds: list[int], runs: list[dict]) -> tuple[dict, bool]:
+    """The bench record of ``runs`` (one per arm and seed) against the
+    end-to-end metrics of ``spec`` (a BENCHMARK.json), and whether it passes."""
     ok = [r for r in runs if "result" in r]
-    seeds = [s for s in args.seeds if sum(r["seed"] == s for r in ok) == 2]
+    seeds = [s for s in all_seeds if sum(r["seed"] == s for r in ok) == 2]
     by = {(r["arm"], r["seed"]): r["result"] for r in ok}
     metrics = {}
     for m in spec["end_to_end"]:
@@ -175,9 +197,11 @@ def bench(args, arms: dict) -> tuple[dict, bool]:
                     for k in ("failed", "attempted")} for arm in "ab"}
     failed["crashed_runs"] = {arm: sum(r["arm"] == arm for r in runs if "result" not in r)
                               for arm in "ab"}
-    out = {"workload": args.workload, "seeds": args.seeds, "paired_seeds": seeds,
-           "metrics": metrics, "ops": failed, "runs": runs}
-    good = (len(seeds) == len(args.seeds) and failed["b"]["failed"] <= failed["a"]["failed"]
+    attribution = {arm: attribute([r.get("detail", {}) for r in ok if r["arm"] == arm])
+                   for arm in "ab"}
+    out = {"workload": workload, "seeds": all_seeds, "paired_seeds": seeds,
+           "metrics": metrics, "attribution": attribution, "ops": failed, "runs": runs}
+    good = (len(seeds) == len(all_seeds) and failed["b"]["failed"] <= failed["a"]["failed"]
             and all(m["verdict"] in ("parity", "claim_met") for m in metrics.values()))
     return out, good
 
@@ -285,6 +309,13 @@ def table(out: dict) -> str:
         ops = out["ops"]
         rows.append(f"\nfailed ops: a {ops['a']['failed']}/{ops['a']['attempted']}, "
                     f"b {ops['b']['failed']}/{ops['b']['attempted']}")
+        rows += ["\n| part | a median | b median | b - a |", "| --- | --- | --- | --- |"]
+        att = out["attribution"]
+        for key in ("latency_by_kind_s", "retained"):
+            for part, a in att["a"][key].items():
+                b = att["b"][key].get(part)
+                if b is not None:
+                    rows.append(f"| {key}.{part} | {a:.4g} | {b:.4g} | {b - a:+.3g} |")
         return "\n".join(rows)
     rows = ["| entry | arm | first_s | warm_s (build + serve) | jobs | steal |",
             "| --- | --- | --- | --- | --- | --- |"]
